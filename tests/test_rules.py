@@ -129,10 +129,13 @@ def test_all_ignore_rule_collapses_duplicate_cluster_to_constant():
     select_deployable_rules(builder)
     rules = emit_rules(builder)
     # the broadest emitted pattern (root node, path1:.*) carries an
-    # all-ignore rule: no replace op (no bare key:value without #/* marker)
-    assert any(all(v[:1] in "#*" for v in
-                   (p.partition(":")[2] for p in r.split("/") if p))
-               for _, r in rules)
+    # all-ignore rule: at least one op part, and no replace op (every
+    # key:value part carries a # or * marker)
+    def all_ignore(rule):
+        vals = [p.partition(":")[2] for p in rule.split("/") if p]
+        return bool(vals) and all(v[:1] in ("#", "*") for v in vals)
+
+    assert any(all_ignore(r) for _, r in rules)
     # every URL in the declared-duplicate cluster collapses to ONE canonical
     outs = {rewrite_url(rules, u) for u in a_urls + b_urls}
     assert len(outs) == 1

@@ -45,7 +45,12 @@ def fixture_urls():
                 urls.append((host, f"http://{host}/cat/{c}/{i}"))
         for i in range(35):
             urls.append((host, f"http://{host}/list/page{i}.html"))
+    # a single-URL host: its tree is one root leaf; the URL is a root query
+    urls.append(("solo.example.com", "http://solo.example.com/?a=1"))
     return urls
+
+
+HOSTS = {"a.example.com", "b.example.com", "solo.example.com"}
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +73,7 @@ def kernel_tree(host):
 
 def test_build_trees_matches_kernel(spark, urls_df):
     nodes = build_trees(urls_df).orderBy("host", "node_id").collect()
-    for host in ("a.example.com", "b.example.com"):
+    for host in HOSTS:
         got = [
             (r["node_id"], r["parent_id"], r["pattern"], r["url_count"],
              r["is_leaf"])
@@ -87,6 +92,7 @@ def test_build_trees_matches_kernel(spark, urls_df):
 def test_leaf_alternations_match_kernel(spark, urls_df):
     nodes = build_trees(urls_df)
     alts = {r["host"]: r["patterns"] for r in leaf_alternations(nodes).collect()}
+    assert set(alts) == HOSTS
     for host in alts:
         assert alts[host] == leaf_alternation(kernel_tree(host).root)
 
@@ -96,13 +102,22 @@ def test_match_rate_high(spark, urls_df):
     alts = leaf_alternations(nodes)
     canon = with_url_columns(urls_df)
     rates = {r["host"]: r["match_rate"] for r in match_rate(canon, alts).collect()}
-    assert set(rates) == {"a.example.com", "b.example.com"}
+    assert set(rates) == HOSTS
     # /cat/... urls match; /list/pageN.html urls do NOT: the full tokenizer
     # splits '.html' into a '/html'-rendered key but the canonical (light)
     # form keeps 'pageN.html' whole — a faithful reference quirk
     # (ProcessedUrl.java:100 vs ProcessedUrl1.java:83; SURVEY.md §2.6)
     assert rates["a.example.com"] == pytest.approx(120 / 155)
     assert rates["b.example.com"] == pytest.approx(150 / 185)
+    # the root-query URL misses its own leaf, also faithfully: a node whose
+    # URLs all contain '/?' renders its first query key as '/\?a=1'
+    # (TreeNode.java:259-265,339-342; SURVEY.md §2.6), while the canonical
+    # form puts '?a=1' straight after the host (CalculateUtil.java:571-599;
+    # SURVEY.md §1.2-1.3), so 'http://solo.example.com?a=1' has no '/?'
+    alt = next(r["patterns"] for r in alts.collect()
+               if r["host"] == "solo.example.com")
+    assert alt == "/solo.example.com/\\?a=1"
+    assert rates["solo.example.com"] == 0.0
 
 
 def test_classifiers(spark):

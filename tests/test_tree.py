@@ -1,14 +1,18 @@
 """Golden tests for the pattern-tree builder (Fun.java:86-302) and pattern
 rendering (TreeNode.java:246-543), on the FIXTURES.md F4 fixture hosts."""
 
+import pytest
+
 from url_pattern_algorithm_spark.kernel.tree import (
     TreeBuilder,
     Url,
     collect_leaf_patterns,
     escape_star,
+    flatten_nodes,
     leaf_alternation,
     min_tree_size_for_root,
     structural_match,
+    unflatten_nodes,
 )
 
 WORDS = [
@@ -20,6 +24,38 @@ WORDS = [
 ]
 
 
+# FIXTURES.md F4 hosts, plus one whose '*' split is collapsed and a
+# single-URL host whose tree is one root leaf
+F4 = {
+    "H-entropy": (
+        [f"http://h1.com/A/x{i}" for i in range(60)]
+        + [f"http://h1.com/B/x{i}" for i in range(55)]
+        + [f"http://h1.com/C/x{i}" for i in range(52)]
+    ),
+    "H-trivial-tail": (
+        [f"http://h2.com/big/{WORDS[i % 40]}{i}" for i in range(200)]
+        + [f"http://h2.com/also/{WORDS[i % 40]}{i}" for i in range(180)]
+        + [f"http://h2.com/t1/x{i}" for i in range(3)]
+        + [f"http://h2.com/t2/x{i}" for i in range(2)]
+        + [f"http://h2.com/t3/x{i}" for i in range(1)]
+    ),
+    "H-all-trivial": [f"http://h3.com/{w}/" for w in WORDS],
+    "H-mixed-slash-q": [f"http://h4.com/?p={i}" for i in range(35)] + [
+        f"http://h4.com/cat/{WORDS[i % 40]}" for i in range(35)
+    ],
+    "H-numfold": [f"http://h5.com/page{i}" for i in range(1, 100)],
+    "H-nosplit": [f"http://h6.com/?a={i}" for i in range(60)] + [
+        f"http://h6.com/?b={i}" for i in range(40)
+    ],
+    "H-star-collapse": (
+        [f"http://h8.com/cat/{WORDS[i % 40]}{i}" for i in range(100)]  # salient
+        + [f"http://h8.com/dog/{WORDS[i % 40]}{i}" for i in range(90)]  # salient
+        + [f"http://h8.com/{WORDS[i % 20]}/zz{i}" for i in range(25)]  # tail -> '*'
+    ),
+    "H-single": ["http://h9.com/?a=1"],
+}
+
+
 def parse_all(urls):
     return [Url.parse(u) for u in urls]
 
@@ -27,11 +63,7 @@ def parse_all(urls):
 def test_h_entropy_three_salient_children():
     # F4 H-entropy: one constant-valued key (pre-pass -> keyDone), one key
     # with 3 salient values 60/55/52 -> 3 children, no '*' child
-    urls = (
-        [f"http://h1.com/A/x{i}" for i in range(60)]
-        + [f"http://h1.com/B/x{i}" for i in range(55)]
-        + [f"http://h1.com/C/x{i}" for i in range(52)]
-    )
+    urls = F4["H-entropy"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.partition_key == "path1"
@@ -51,13 +83,7 @@ def test_h_trivial_tail_star_child():
     # F4 H-trivial-tail: value counts [200, 180, 3, 2, 1] -> two salient
     # children + one '*' child pooling the tail; tail pool (6 urls) is below
     # MINTREESIZE=30 so it is NOT recursed, but childHasStarFlag is set
-    urls = (
-        [f"http://h2.com/big/{WORDS[i % 40]}{i}" for i in range(200)]
-        + [f"http://h2.com/also/{WORDS[i % 40]}{i}" for i in range(180)]
-        + [f"http://h2.com/t1/x{i}" for i in range(3)]
-        + [f"http://h2.com/t2/x{i}" for i in range(2)]
-        + [f"http://h2.com/t3/x{i}" for i in range(1)]
-    )
+    urls = F4["H-trivial-tail"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.partition_key == "path1"
@@ -68,7 +94,7 @@ def test_h_trivial_tail_star_child():
 def test_h_all_trivial_leaf():
     # F4 H-all-trivial: 40 values x count 1 -> all counts equal -> all
     # trivial -> single leaf node (Fun.java:176-187)
-    urls = [f"http://h3.com/{w}/" for w in WORDS]
+    urls = F4["H-all-trivial"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.is_leaf
@@ -77,9 +103,7 @@ def test_h_all_trivial_leaf():
 
 def test_h_mixed_slash_q_split():
     # F4 H-mixed-slash-q: 35 '/?' + 35 plain -> special split (Fun.java:104-129)
-    urls = [f"http://h4.com/?p={i}" for i in range(35)] + [
-        f"http://h4.com/cat/{WORDS[i % 40]}" for i in range(35)
-    ]
+    urls = F4["H-mixed-slash-q"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.urls_type == 3
@@ -93,7 +117,7 @@ def test_h_numfold_prepass_absorbs_constant_letters():
     # F4 H-numfold: values page1..page99 all fold to '#page#' -> the pre-pass
     # (Fun.java:89-100) marks the key done; the node renders 'page\\d*' and
     # stays a leaf
-    urls = [f"http://h5.com/page{i}" for i in range(1, 100)]
+    urls = F4["H-numfold"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.is_leaf
@@ -104,9 +128,7 @@ def test_h_numfold_prepass_absorbs_constant_letters():
 def test_h_nosplit_presence_absence():
     # F4 H-nosplit: no key reaches 90% support; 'a' at 60% -> presence/absence
     # split via getMostedKeyForNoSplitKey (Fun.java:272-300)
-    urls = [f"http://h6.com/?a={i}" for i in range(60)] + [
-        f"http://h6.com/?b={i}" for i in range(40)
-    ]
+    urls = F4["H-nosplit"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.partition_key is None
@@ -133,11 +155,7 @@ def test_min_tree_size_schedule():
 def test_leaf_collection_star_collapse():
     # a node whose children are all leaves and include a '*' child emits only
     # its first child (Main.java:242-265)
-    urls = (
-        [f"http://h8.com/cat/{WORDS[i % 40]}{i}" for i in range(100)]  # salient
-        + [f"http://h8.com/dog/{WORDS[i % 40]}{i}" for i in range(90)]  # salient
-        + [f"http://h8.com/{WORDS[i % 20]}/zz{i}" for i in range(25)]  # tail -> '*'
-    )
+    urls = F4["H-star-collapse"]
     b = TreeBuilder()
     root = b.build(parse_all(urls))
     assert root.child_has_star
@@ -169,8 +187,6 @@ def test_escape_star_applies_charwise():
 def test_flatten_nodes_leaf_example_urls_cap():
     # PatternJob.java:322-329: <=300 example URLs per LEAF in list order;
     # non-leaves carry none. Cap exercised with example_cap=5.
-    from url_pattern_algorithm_spark.kernel.tree import flatten_nodes
-
     urls = parse_all(
         [f"http://h.com/{w}/{i}" for w in WORDS[:3] for i in range(40)]
     )
@@ -190,3 +206,13 @@ def test_flatten_nodes_leaf_example_urls_cap():
     by_id = {r["node_id"]: r for r in full}
     for r in leaves:
         assert r["example_urls"] == by_id[r["node_id"]]["example_urls"][:5]
+
+
+@pytest.mark.parametrize("host", sorted(F4))
+def test_unflatten_nodes_keeps_the_leaf_walk(host):
+    # the node table carries all the leaf walk needs: the tree rebuilt from
+    # its rows (in any order) collects the same leaves, in the same order
+    b = TreeBuilder()
+    b.build(parse_all(F4[host]))
+    rebuilt = unflatten_nodes(flatten_nodes(b)[::-1])
+    assert collect_leaf_patterns(rebuilt) == collect_leaf_patterns(b.root)

@@ -22,7 +22,9 @@ as mandated by SURVEY.md §7:
 This module is pure python and doubles as the single-process oracle; the
 Spark pipeline runs exactly this code per host inside ``applyInPandas``
 (see operators/pattern_tree.py), matching the reference's own distribution
-strategy (one reducer per host, PatternJob.java:268-271).
+strategy (one reducer per host, PatternJob.java:268-271). The leaf
+alternation runs the same way, over a tree rebuilt from the node table by
+:func:`unflatten_nodes`.
 """
 
 from __future__ import annotations
@@ -448,6 +450,33 @@ def flatten_nodes(builder: TreeBuilder, example_cap: int = 300) -> list[dict]:
             }
         )
     return rows
+
+
+def unflatten_nodes(rows: list[dict]) -> TreeNode:
+    """Inverse of :func:`flatten_nodes` for the leaf walk: rebuild a bare
+    TreeNode skeleton (``node_id``, ``parent_id`` — None for the root —,
+    ``child_has_star``, ``pattern_output``; no URLs) and return its root.
+
+    Rows may come in any order. Children attach in ``node_id`` order, which
+    is the builder's creation order and so its sibling order."""
+    rows = sorted(rows, key=lambda r: r["node_id"])
+    by_id = {
+        r["node_id"]: TreeNode(
+            id=r["node_id"], urls=[], parent=None, partition_key_value=None,
+            pattern_output_str=r["pattern_output"],
+            child_has_star=bool(r["child_has_star"]),
+        )
+        for r in rows
+    }
+    root = None
+    for r in rows:
+        node = by_id[r["node_id"]]
+        if r["parent_id"] is None:
+            root = node
+        else:
+            node.parent = by_id[r["parent_id"]]
+            node.parent.children.append(node)
+    return root
 
 
 def membership_rows(builder: TreeBuilder) -> list[tuple[str, int]]:

@@ -1,11 +1,13 @@
-"""Per-host pattern-tree mining as a grouped-map pandas UDF (EP2 parity).
+"""Per-host pattern-tree mining as grouped-map pandas UDFs (EP2 parity).
 
 Distribution strategy matches the reference exactly: the tree recursion runs
 once per host inside one task (the reference runs it inside one reducer per
 host key — PatternJob.java:268-271), with per-host URL counts bounded by the
 sampling caps (operators/sampling.py) so a group always fits a task
-(SURVEY.md §4.3). Everything around the recursion — gating, sampling, leaf
-collection, alternation assembly, match-rate evaluation — is relational.
+(SURVEY.md §4.3). Leaf collection and alternation assembly run the same way:
+one task per host rebuilds the tree skeleton from the node table and walks
+it with the kernel's star-collapse BFS (Main.java:242-287). Gating, sampling
+and match-rate evaluation are relational.
 """
 
 from __future__ import annotations
@@ -13,13 +15,14 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from url_pattern_algorithm_spark.kernel.tree import (
     TreeBuilder,
     Url,
+    collect_leaf_patterns,
     flatten_nodes,
     membership_rows,
+    unflatten_nodes,
 )
 from url_pattern_algorithm_spark.scaling import broadcast_if_small
 
@@ -31,6 +34,23 @@ TREE_SCHEMA = (
 )
 
 MEMBERSHIP_SCHEMA = "host string, url string, node_id int"
+
+ALTERNATION_SCHEMA = "host string, patterns string, n_leaves long"
+
+
+def _host_tree(pdf: pd.DataFrame, min_host_urls: int,
+               sort_urls: bool) -> TreeBuilder | None:
+    """One host's tree from its (host, url) rows, or None when the host
+    fails the ``min_host_urls`` gate or has no parseable URL."""
+    col = pdf["url"].drop_duplicates()
+    if sort_urls:
+        col = col.sort_values(kind="mergesort")
+    parsed = [p for p in map(Url.parse, col) if p is not None]
+    if len(parsed) < min_host_urls or not parsed:
+        return None
+    b = TreeBuilder()
+    b.build(parsed)
+    return b
 
 
 def build_trees(urls: DataFrame, min_host_urls: int = 0,
@@ -53,21 +73,13 @@ def build_trees(urls: DataFrame, min_host_urls: int = 0,
     """
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        host = pdf["host"].iloc[0]
-        col = pdf["url"].drop_duplicates()
-        if sort_urls:
-            col = col.sort_values(kind="mergesort")
-        parsed = [Url.parse(u) for u in col]
-        parsed = [p for p in parsed if p is not None]
-        if len(parsed) < min_host_urls or not parsed:
+        b = _host_tree(pdf, min_host_urls, sort_urls)
+        if b is None:
             return pd.DataFrame(
                 columns=[f.split()[0] for f in TREE_SCHEMA.split(", ")]
             )
-        b = TreeBuilder()
-        b.build(parsed)
-        rows = flatten_nodes(b, example_cap=example_cap)
-        out = pd.DataFrame(rows)
-        out.insert(0, "host", host)
+        out = pd.DataFrame(flatten_nodes(b, example_cap=example_cap))
+        out.insert(0, "host", pdf["host"].iloc[0])
         return out
 
     return urls.groupBy("host").applyInPandas(build, TREE_SCHEMA)
@@ -80,87 +92,38 @@ def build_membership(urls: DataFrame, min_host_urls: int = 0,
     input order exactly as in build_trees."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        host = pdf["host"].iloc[0]
-        col = pdf["url"].drop_duplicates()
-        if sort_urls:
-            col = col.sort_values(kind="mergesort")
-        parsed = [Url.parse(u) for u in col]
-        parsed = [p for p in parsed if p is not None]
-        if len(parsed) < min_host_urls or not parsed:
+        b = _host_tree(pdf, min_host_urls, sort_urls)
+        if b is None:
             return pd.DataFrame(columns=["host", "url", "node_id"])
-        b = TreeBuilder()
-        b.build(parsed)
         rows = membership_rows(b)
         return pd.DataFrame(
-            {"host": host, "url": [r[0] for r in rows],
+            {"host": pdf["host"].iloc[0], "url": [r[0] for r in rows],
              "node_id": [r[1] for r in rows]}
         )
 
     return urls.groupBy("host").applyInPandas(build, MEMBERSHIP_SCHEMA)
 
 
-def collapsed_leaves(nodes: DataFrame) -> DataFrame:
-    """Relational star-collapse leaf selection (Main.java:242-287).
-
-    A leaf is emitted unless its parent (a) has childHasStarFlag, (b) has
-    only leaf children, and (c) this leaf is not the parent's first child
-    (min node_id — creation order). Pure joins over the small nodes table —
-    no tree walk.
-    """
-    children = nodes.select(
-        "host",
-        F.col("parent_id").alias("p_id"),
-        F.col("node_id").alias("c_id"),
-        F.col("is_leaf").alias("c_leaf"),
-    ).filter(F.col("p_id").isNotNull())
-    par_stats = children.groupBy("host", "p_id").agg(
-        F.min("c_id").alias("first_child"),
-        F.min(F.col("c_leaf").cast("int")).alias("all_leaf"),
-    )
-    parents = nodes.select(
-        "host", F.col("node_id").alias("p_id"),
-        F.col("child_has_star").alias("p_star"),
-    ).join(par_stats, ["host", "p_id"])
-    leaves = nodes.filter("is_leaf")
-    j = leaves.join(
-        parents,
-        (leaves["host"] == parents["host"])
-        & (leaves["parent_id"] == parents["p_id"]),
-        "left",
-    ).drop(parents["host"])
-    collapse = (
-        F.col("p_star") & (F.col("all_leaf") == 1)
-        & (F.col("node_id") != F.col("first_child"))
-    )
-    return j.filter(~F.coalesce(collapse, F.lit(False))).select(nodes.columns)
-
-
 def leaf_alternations(nodes: DataFrame) -> DataFrame:
-    """(host, patterns) — '|'-joined escaped leaf output patterns in BFS
-    order ((depth, node_id) == the reference's queue order)."""
-    leaves = collapsed_leaves(nodes)
-    escaped = F.regexp_replace(F.col("pattern_output"), r"\*", ".*")
-    # NB: patternOutputStr's '*' only ever appears inside '.*' already; the
-    # reference's char-wise escape therefore produces '..*' — replicated by
-    # replacing the single '*' char.
-    ordered = leaves.withColumn("esc", escaped).withColumn(
-        "bfs",
-        F.row_number().over(
-            Window.partitionBy("host").orderBy("depth", "node_id")
-        ),
-    )
+    """(host, patterns, n_leaves) — the '|'-joined escaped output patterns
+    of the leaves the star-collapse BFS keeps (Main.java:242-287), one row
+    per host, from the kernel walk over the host's rebuilt tree."""
+
+    def alternation(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = pdf.to_dict("records")
+        for r in rows:  # Arrow hands the nullable int column over as float
+            p = r["parent_id"]
+            r["parent_id"] = None if pd.isna(p) else int(p)
+        leaves = collect_leaf_patterns(unflatten_nodes(rows))
+        return pd.DataFrame({"host": [pdf["host"].iloc[0]],
+                             "patterns": ["|".join(leaves)],
+                             "n_leaves": [len(leaves)]})
+
     return (
-        ordered.groupBy("host")
-        .agg(
-            F.concat_ws(
-                "|",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("bfs", "esc"))),
-                    lambda s: s.esc,
-                ),
-            ).alias("patterns"),
-            F.count("*").alias("n_leaves"),
-        )
+        nodes.select("host", "node_id", "parent_id", "child_has_star",
+                     "pattern_output")
+        .groupBy("host")
+        .applyInPandas(alternation, ALTERNATION_SCHEMA)
     )
 
 

@@ -72,14 +72,13 @@ def garbage_page_plan(
     # set, not the shuffle's delivery order
     nodes = build_trees(train.select("host", "url"),
                         min_host_urls=min_host_urls, example_cap=example_cap,
-                        sort_urls=True).persist()
+                        sort_urls=True)
     # persist + count: alts feeds THREE scans (train match-rate, test-side
     # counts, the final pattern join) — without it each one re-runs the
-    # tree UDF through leaf_alternations' node self-joins. The count also
-    # supplies the size gate for the broadcast hints below (zero extra jobs).
+    # tree UDF. The count also supplies the size gate for the broadcast
+    # hints below (zero extra jobs).
     alts = persist_tracked(leaf_alternations(nodes))
     n_alts = alts.count()
-    nodes.unpersist()
     rates = match_rate(train.select("host", "url_canon"), alts,
                        est_rows=n_alts)
     kept = rates.filter(F.col("match_rate") >= gate)

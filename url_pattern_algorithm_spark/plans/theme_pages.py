@@ -63,21 +63,16 @@ def theme_page_plan(
         train = pages.select("host", "url")
     gated = gate_min_host_size(train, min_host_urls)
     capped = cap_per_host(gated, cap=cap)
-    # persist: leaf_alternations self-joins the node table three times
-    # (children/parents/leaves) — without the persist the per-host tree
-    # UDF re-runs once per join branch. alts is tiny (one row per host);
-    # materializing it here lets nodes be released before returning.
     # sort_urls: alts outlives this call through the tracked registry and
     # may be RECOMPUTED after release — the recursion's input order must be
     # a pure function of the URL set, not of shuffle delivery order
     nodes = build_trees(capped, min_host_urls=min_host_urls,
-                        example_cap=example_cap, sort_urls=True).persist()
+                        example_cap=example_cap, sort_urls=True)
     # alts outlives this call (it backs the returned `classified` plan), so
     # it goes through the tracked registry — released when the caller's
     # next registry query starts instead of leaking for the session
     alts = persist_tracked(leaf_alternations(nodes))
     n_alts = alts.count()
-    nodes.unpersist()
     if "url_canon" in pages.columns:
         pages_c = pages
     else:

@@ -889,9 +889,7 @@ def q_pattern_tree_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_leaf_alternations(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = _canon_df(spark, sf_dir).select("host", F.col("url_canon").alias("url"))
-    # persist: the star-collapse joins consume the tree-build UDF 3x
-    nodes = _persist(build_trees(canon, min_host_urls=50))
-    return leaf_alternations(nodes)
+    return leaf_alternations(build_trees(canon, min_host_urls=50))
 
 
 def q_tree_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1040,10 +1038,10 @@ def q_leaf_alternations_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     '*' bucket) survives the collapse; the alternation is their escaped
     output patterns in BFS order (view branch, then doc branch). The
     escaped patterns are closed-form per host — including the reference's
-    char-wise '..*' escape quirk the relational escape replicates."""
+    char-wise '..*' escape quirk the kernel's escape replicates."""
     corpus = _cluster_urls(spark, sf_dir).select("host", "url")
-    nodes = _persist(build_trees(corpus, min_host_urls=50, sort_urls=True))
-    return leaf_alternations(nodes)
+    return leaf_alternations(
+        build_trees(corpus, min_host_urls=50, sort_urls=True))
 
 
 def _cluster_urls(spark: SparkSession, sf_dir: str,
