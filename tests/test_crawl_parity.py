@@ -7,6 +7,8 @@ synthetic docs:
 - resume-from-checkpoint reproduces the uninterrupted run exactly.
 """
 
+import os
+
 import pytest
 
 from url_pattern_algorithm_spark.kernel.crawl_oracle import run_oracle_crawl
@@ -121,19 +123,6 @@ def test_resume_from_checkpoint(crawl_run, tmp_path):
     assert counts2[ITERS] == counts[ITERS]
 
 
-def test_bloom_off_equivalence(crawl_run, tmp_path):
-    # the Bloom prefilter is an optimization: disabling it must not change
-    # any scheduled batch
-    spark, ckpt, _, oracle, docs, seeds, robots = crawl_run
-    ckpt2 = str(tmp_path / "nobloom")
-    run_crawl(spark, docs, seeds, robots, ckpt2, N_DOCS,
-              iterations=ITERS, use_bloom=False)
-    for it in range(1, ITERS + 1):
-        assert _spark_scheduled(spark, ckpt2, it) == _spark_scheduled(
-            spark, ckpt, it
-        )
-
-
 def test_lineage_metrics(crawl_run):
     spark, ckpt, counts, *_ = crawl_run
     cat = Catalog(spark, ckpt)
@@ -167,7 +156,7 @@ def test_resume_before_compaction_watermark_refused(crawl_run, tmp_path):
 
 def test_fresh_run_wipes_stale_append_state(crawl_run, tmp_path):
     # a fresh run (resume_from=None) into a previously-used checkpoint root
-    # must NOT inherit the prior run's seen/bloom/compaction state
+    # must NOT inherit the prior run's seen/filter/compaction state
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
     dirty = str(tmp_path / "dirty")
     run_crawl(spark, docs, seeds, robots, dirty, N_DOCS, iterations=ITERS,
@@ -192,13 +181,12 @@ def test_resume_with_mismatched_bloom_params_refused(crawl_run, tmp_path):
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
     root = str(tmp_path / "meta")
     run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=2,
-              bloom_buckets=16, bloom_m_bits=1 << 14)
+              bloom_buckets=16)
     with _pytest.raises(ValueError, match="does not match the checkpoint"):
         run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=3,
-                  resume_from=2, bloom_buckets=32, bloom_m_bits=1 << 14)
+                  resume_from=2, bloom_buckets=32)
     counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                        iterations=3, resume_from=2, bloom_buckets=16,
-                        bloom_m_bits=1 << 14)
+                        iterations=3, resume_from=2, bloom_buckets=16)
     assert counts2[3] == counts[3]
 
 
@@ -251,33 +239,6 @@ def test_fresh_run_wipes_orphaned_compact_old(crawl_run, tmp_path):
         Catalog(spark, ckpt), ITERS).count()
 
 
-def test_sequential_writes_equivalence(crawl_run, tmp_path, monkeypatch):
-    # SPARK_GRAFT_SEQ_WRITES flips _run_writers from concurrent driver jobs
-    # to sequential submission; it must not change any state table
-    spark, ckpt, _, oracle, docs, seeds, robots = crawl_run
-    ckpt2 = str(tmp_path / "seqwrites")
-    monkeypatch.setenv("SPARK_GRAFT_SEQ_WRITES", "1")
-    run_crawl(spark, docs, seeds, robots, ckpt2, N_DOCS, iterations=ITERS)
-    for it in range(1, ITERS + 1):
-        assert _spark_scheduled(spark, ckpt2, it) == _spark_scheduled(
-            spark, ckpt, it
-        )
-    cat, cat2 = Catalog(spark, ckpt), Catalog(spark, ckpt2)
-    # semantic columns only: the shared ckpt's lineage stamps (run_id etc.)
-    # may have been rewritten by test_resume_from_checkpoint
-    for reader in (
-        lambda c: read_seen(c, ITERS).select("url_hash", "first_iter"),
-        lambda c: c.read(f"host_state_{ITERS}").select(
-            "host", "tokens", "last_iter", "crawl_delay"),
-        lambda c: c.read(f"pending_{ITERS}").select(
-            "url", "url_canon", "url_hash", "host", "priority",
-            "discovered_iter"),
-    ):
-        a = {tuple(r) for r in reader(cat).collect()}
-        b = {tuple(r) for r in reader(cat2).collect()}
-        assert a == b
-
-
 def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
     # with concurrent state writes, a mid-iteration crash can leave ANY
     # subset of the iteration's tables written; _run_meta's last_iteration
@@ -292,9 +253,9 @@ def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
     root = str(tmp_path / "crashed")
     run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS)
     # simulate the crash inside iteration ITERS: the seen delta + pending
-    # snapshot landed, host_state/bloom/scheduled did not, meta still at
+    # snapshot landed, host_state/cuckoo/scheduled did not, meta still at
     # ITERS-1 (it is only written after the writer pool joins)
-    for name in (f"host_state_{ITERS}", f"bloom_{ITERS}",
+    for name in (f"host_state_{ITERS}", f"cuckoo_{ITERS}",
                  f"scheduled_{ITERS}"):
         shutil.rmtree(os.path.join(root, name))
     meta_path = os.path.join(root, "_run_meta.json")
@@ -333,7 +294,7 @@ def test_prune_history_bounds_snapshots_and_resumes(crawl_run, tmp_path):
               compact_every=2, prune_history=True)
     cat = Catalog(spark, pruned)
     names = cat.table_names()
-    for kind in ("bloom_", "pending_", "host_state_"):
+    for kind in ("cuckoo_", "pending_", "host_state_"):
         kept = [n for n in names if n.startswith(kind)]
         assert kept == [f"{kind}4"], (kind, kept)
     assert not [n for n in names if n.startswith("scheduled_")]
@@ -445,44 +406,51 @@ def test_resume_with_mismatched_robots_mode_refused(crawl_run, tmp_path):
     assert 3 in counts2
 
 
-def test_resume_refuses_stale_bloom_format(crawl_run, tmp_path):
-    # r5 review finding: the Bloom position remix changes what stored
-    # bitmaps MEAN — resuming pre-remix bitmaps with remixed probes would
-    # silently produce false negatives past the seen anti-join. The run
-    # meta stamps a bloom_format; a mismatched resume must refuse with
-    # use_bloom=True and drop the stale bitmaps with use_bloom=False.
+def test_resume_of_bloom_era_root(crawl_run, tmp_path):
+    # a root written by an older Bloom-prefilter build holds no cuckoo_N
+    # snapshot and a meta without cuckoo_nb. Its resume rebuilds cuckoo_2
+    # once from the seen table (the filter is exact-safe), so iteration 3
+    # schedules and sees exactly what the uninterrupted run did.
     import json
     import os
 
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
-    root = str(tmp_path / "fmt")
+    root = str(tmp_path / "bloom_era")
     run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=2)
+    cat = Catalog(spark, root)
+    for name in cat.table_names():
+        if name.startswith("cuckoo_"):
+            cat.drop(name)
     meta_path = os.path.join(root, "_run_meta.json")
     meta = json.load(open(meta_path))
-    assert meta["bloom_format"] == 2  # r5 remix format stamped
-    meta["bloom_format"] = 1
+    del meta["cuckoo_nb"]
+    meta.update(prefilter_kind="bloom", bloom_format=2)
     json.dump(meta, open(meta_path, "w"))
 
-    with pytest.raises(ValueError, match="bloom bitmaps use position format"):
-        run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=3,
-                  resume_from=2, run_id="stale_fmt")
-    # bloom-off resume proceeds, drops the stale-format bitmaps, and the
-    # bloomless continuation still matches the oracle exactly
     counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                        iterations=3, resume_from=2, run_id="nobloom",
-                        use_bloom=False)
-    assert not any(n.startswith("bloom_")
-                   for n in Catalog(spark, root).table_names())
-    got = _spark_scheduled(spark, root, 3)
-    want = [(r[0], r[1], r[2], r[3], r[6]) for r in oracle.scheduled[3]]
-    assert got == want and counts2[3] == len(want)
+                        iterations=3, resume_from=2, run_id="bloom_era")
+    assert counts2[3] == counts[3]
+    assert _spark_scheduled(spark, root, 3) == _spark_scheduled(spark, ckpt, 3)
+    got = {
+        (r["url_hash"], r["first_iter"])
+        for r in read_seen(cat, 3).select("url_hash", "first_iter").collect()
+    }
+    want = {
+        (r["url_hash"], r["first_iter"])
+        for r in read_seen(Catalog(spark, ckpt), 3).select(
+            "url_hash", "first_iter").collect()
+    }
+    assert got == want == set(oracle.seen.items())
+    assert cat.exists("cuckoo_3")
+    meta = json.load(open(meta_path))
+    assert meta["prefilter_kind"] == "cuckoo" and meta["cuckoo_nb"]
 
 
 def test_cuckoo_prefilter_equivalence(crawl_run, tmp_path):
-    # prefilter_kind='cuckoo' swaps the seen prefilter implementation only
-    # (operators/cuckoo.py); like the Bloom it is exact-safe, so scheduled
-    # batches AND the final seen set must be identical to the default run,
-    # and the checkpoint must hold cuckoo_N snapshots instead of bloom_N.
+    # prefilter_kind='cuckoo' (the only kind; callers may still name it)
+    # is the default path: scheduled batches AND the final seen set are
+    # identical to the default run, and the checkpoint holds cuckoo_N
+    # snapshots and no bloom_N.
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
     root = str(tmp_path / "cuckoo")
     counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
@@ -504,30 +472,14 @@ def test_cuckoo_prefilter_equivalence(crawl_run, tmp_path):
 
 
 def test_cuckoo_resume_and_kind_pinned(crawl_run, tmp_path):
-    # the run meta pins prefilter_kind: the stored cuckoo_N snapshots are
-    # the incremental state a resume extends, so resuming with the bloom
-    # kind must refuse; resuming with the matching kind reproduces the
-    # uninterrupted run exactly.
+    # cuckoo is the only seen prefilter: asking for the Bloom kind is
+    # refused before anything is written
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
-    root = str(tmp_path / "cuckoo_resume")
-    run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS,
-              prefilter_kind="cuckoo")
+    root = str(tmp_path / "bloom_kind")
     with pytest.raises(ValueError, match="prefilter_kind"):
         run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS,
-                  resume_from=ITERS - 1, run_id="wrongkind")
-    before = _spark_scheduled(spark, root, ITERS)
-    counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                        iterations=ITERS, resume_from=ITERS - 1,
-                        prefilter_kind="cuckoo", run_id="resumed")
-    assert _spark_scheduled(spark, root, ITERS) == before
-    assert counts2[ITERS] == counts[ITERS]
-    # prefilter-off resume remains allowed (exact anti-join semantics are
-    # kind-independent) and still matches the oracle
-    counts3 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                        iterations=ITERS, resume_from=ITERS - 1,
-                        use_bloom=False, run_id="nofilter")
-    assert _spark_scheduled(spark, root, ITERS) == before
-    assert counts3[ITERS] == counts[ITERS]
+                  prefilter_kind="bloom")
+    assert not os.path.exists(os.path.join(root, "_run_meta.json"))
 
 
 def test_prefilter_rescale_at_compaction(crawl_run, tmp_path):
@@ -538,36 +490,25 @@ def test_prefilter_rescale_at_compaction(crawl_run, tmp_path):
     # a size-agnostic resume (None params) adopts the grown size instead
     # of refusing on a rederived-from-n_docs mismatch.
     import json
-    import os
 
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
-    for kind, param, key in (
-        ("bloom", {"bloom_m_bits": 1 << 14}, "bloom_m_bits"),
-        ("cuckoo", {"cuckoo_nb": 64}, "cuckoo_nb"),
-    ):
-        root = str(tmp_path / f"grow_{kind}")
-        counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                            iterations=ITERS, compact_every=2,
-                            prefilter_kind=kind, **param)
-        assert counts2 == counts, kind
-        for it in range(1, ITERS + 1):
-            assert _spark_scheduled(spark, root, it) == _spark_scheduled(
-                spark, ckpt, it
-            ), (kind, it)
-        meta = json.load(open(os.path.join(root, "_run_meta.json")))
-        assert meta[key] > list(param.values())[0], kind
-        cat = Catalog(spark, root)
-        if kind == "cuckoo":
-            sizes = {r["nb"] for r in cat.read("cuckoo_2").select("nb").collect()}
-        else:
-            sizes = {r["m_bits"]
-                     for r in cat.read("bloom_2").select("m_bits").collect()}
-        assert sizes == {meta[key]}, kind
-        before = _spark_scheduled(spark, root, ITERS)
-        run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                  iterations=ITERS, resume_from=ITERS - 1,
-                  prefilter_kind=kind, run_id="grown")
-        assert _spark_scheduled(spark, root, ITERS) == before, kind
+    root = str(tmp_path / "grow")
+    counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                        iterations=ITERS, compact_every=2, cuckoo_nb=64)
+    assert counts2 == counts
+    for it in range(1, ITERS + 1):
+        assert _spark_scheduled(spark, root, it) == _spark_scheduled(
+            spark, ckpt, it
+        ), it
+    meta = json.load(open(os.path.join(root, "_run_meta.json")))
+    assert meta["cuckoo_nb"] > 64
+    cat = Catalog(spark, root)
+    sizes = {r["nb"] for r in cat.read("cuckoo_2").select("nb").collect()}
+    assert sizes == {meta["cuckoo_nb"]}
+    before = _spark_scheduled(spark, root, ITERS)
+    run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+              iterations=ITERS, resume_from=ITERS - 1, run_id="grown")
+    assert _spark_scheduled(spark, root, ITERS) == before
 
 
 def test_prefilter_rescale_crash_window_self_heals(crawl_run, tmp_path):

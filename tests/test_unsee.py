@@ -1,12 +1,12 @@
 """unsee_urls: purge URLs from crawl seen state (Iceberg DELETE analogue).
 
-Pins, for the same deterministic purge set over both prefilter kinds:
-- seen rows removed exactly (and identically across kinds);
+Pins, for a deterministic purge set:
+- seen rows removed exactly;
 - the cuckoo snapshot is brought in line INCREMENTALLY (delete_from_cuckoos)
   with no false negative introduced for still-seen URLs;
-- the bloom snapshot is dropped (bits cannot be cleared) and lazily rebuilt;
-- a resumed continuation schedules identical batches across kinds and
-  re-admits purged URLs that reappear as candidates.
+- a resumed continuation schedules the same batch as a reference whose
+  filter is rebuilt from the purged seen table, and re-admits purged URLs
+  that reappear as candidates.
 """
 
 import pytest
@@ -29,7 +29,7 @@ from url_pattern_algorithm_spark.sources.synthetic import (
 N_DOCS = 400
 N_HOSTS = 6
 ITERS = 3
-KINDS = ("bloom", "cuckoo")
+KINDS = ("cuckoo",)
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +43,7 @@ def purged_runs(spark, tmp_path_factory):
         run_crawl(spark, docs, seeds, robots, root, N_DOCS,
                   iterations=ITERS, prefilter_kind=kind)
         roots[kind] = root
-    cat = Catalog(spark, roots["bloom"])
+    cat = Catalog(spark, roots["cuckoo"])
     pre = {
         (r["url_hash"], r["first_iter"])
         for r in read_seen(cat, ITERS).select("url_hash", "first_iter").collect()
@@ -109,27 +109,33 @@ def test_unsee_cuckoo_incremental_no_false_negatives(purged_runs):
 
 def test_unsee_bloom_snapshot_dropped_then_rebuilt(purged_runs):
     spark, docs, seeds, robots, roots, pre, purged, _ = purged_runs
-    cat = Catalog(spark, roots["bloom"])
-    assert not cat.exists(f"bloom_{ITERS}")
-    # cuckoo snapshot is updated in place, not dropped
+    # the cuckoo snapshot is updated in place, not dropped
     assert Catalog(spark, roots["cuckoo"]).exists(f"cuckoo_{ITERS}")
 
 
 def test_resume_after_unsee_parity_across_kinds(purged_runs):
+    # independent reference: a copy of the purged root without cuckoo_3,
+    # so its resume rebuilds the filter from the purged seen table instead
+    # of extending the incrementally deleted one; iteration 4 must agree
+    import shutil
+
     spark, docs, seeds, robots, roots, pre, purged, _ = purged_runs
+    ref = roots["cuckoo"] + "_rebuilt"
+    shutil.copytree(roots["cuckoo"], ref)
+    Catalog(spark, ref).drop(f"cuckoo_{ITERS}")
     batches = {}
-    for kind in KINDS:
-        counts = run_crawl(spark, docs, seeds, robots, roots[kind], N_DOCS,
+    for name, root in (("incremental", roots["cuckoo"]), ("rebuilt", ref)):
+        counts = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
                            iterations=ITERS + 1, resume_from=ITERS,
-                           prefilter_kind=kind, run_id="after_purge")
-        cat = Catalog(spark, roots[kind])
+                           run_id="after_purge")
+        cat = Catalog(spark, root)
         rows = (
             cat.read(f"scheduled_{ITERS + 1}")
             .orderBy("host", "sched_rank")
             .select("url", "url_canon", "url_hash", "host", "sched_rank")
             .collect()
         )
-        batches[kind] = [tuple(r) for r in rows]
+        batches[name] = [tuple(r) for r in rows]
         assert counts[ITERS + 1] == len(rows)
         # seen means "entered the frontier" — iteration 4 may legitimately
         # schedule backlog rows from pending_3 (discovered earlier, held by
@@ -142,10 +148,10 @@ def test_resume_after_unsee_parity_across_kinds(purged_runs):
                 for r in cat.read(f"scheduled_{it}").select("url_hash").collect()
             }
         assert ({r["url_hash"] for r in rows} & prior) <= purged
-    assert batches["bloom"] == batches["cuckoo"]
-    # and the final seen sets agree across kinds
-    assert _seen_hashes(spark, roots["bloom"], ITERS + 1) == _seen_hashes(
-        spark, roots["cuckoo"], ITERS + 1
+    assert batches["incremental"] == batches["rebuilt"]
+    # and the final seen sets agree
+    assert _seen_hashes(spark, roots["cuckoo"], ITERS + 1) == _seen_hashes(
+        spark, ref, ITERS + 1
     )
 
 
@@ -223,8 +229,7 @@ def test_reenqueue_seen_urls_rescheduled(spark, tmp_path):
     seeds = seeds_df(spark, 4)
     robots = robots_df(spark, 4)
     root = str(tmp_path / "replain")
-    run_crawl(spark, docs, seeds, robots, root, 200, iterations=2,
-              prefilter_kind="bloom")
+    run_crawl(spark, docs, seeds, robots, root, 200, iterations=2)
     cat = Catalog(spark, root)
     victims = (
         cat.read("scheduled_1").orderBy("url_hash").limit(3)

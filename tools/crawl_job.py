@@ -28,19 +28,12 @@ def main() -> None:
     ap.add_argument("--budget", type=float, default=256.0)
     ap.add_argument("--resume", type=int, default=None)
     ap.add_argument("--run-id", default="run1")
-    ap.add_argument("--no-bloom", action="store_true")
-    ap.add_argument("--bloom-m-bits", type=int, default=None,
-                    help="fixed per-bucket Bloom bitmap bits; default: "
-                         "derived from --docs (scaling.derive_bloom_m_bits)")
     ap.add_argument("--bloom-buckets", type=int, default=None,
-                    help="Bloom bucket count; default: derived from --docs "
-                         "(scaling.derive_bloom_buckets; 4096 at 10^10)")
+                    help="seen/prefilter bucket count; default: derived "
+                         "from --docs (scaling.derive_bloom_buckets; 4096 "
+                         "at 10^10)")
     ap.add_argument("--compact-every", type=int, default=4,
                     help="collapse seen epochs every K iterations (0=off)")
-    ap.add_argument("--prefilter-kind", choices=("bloom", "cuckoo"),
-                    default="bloom",
-                    help="seen-prefilter implementation (operators/cuckoo "
-                         "adds DELETE + ~10x lower fp at ~2x bytes)")
     ap.add_argument("--robots-mode", choices=("any_disallow",
                                               "longest_match"),
                     default="any_disallow",
@@ -75,10 +68,9 @@ def main() -> None:
     counts = run_crawl(
         spark, docs, seeds, robots, args.ckpt, n_docs=args.docs,
         iterations=args.iterations, run_id=args.run_id,
-        resume_from=args.resume, use_bloom=not args.no_bloom, pol=pol,
-        bloom_buckets=args.bloom_buckets, bloom_m_bits=args.bloom_m_bits,
-        compact_every=args.compact_every,
-        prefilter_kind=args.prefilter_kind, robots_mode=args.robots_mode,
+        resume_from=args.resume, pol=pol,
+        bloom_buckets=args.bloom_buckets, compact_every=args.compact_every,
+        robots_mode=args.robots_mode,
     )
     dt = time.time() - t0
     total = sum(counts.values())

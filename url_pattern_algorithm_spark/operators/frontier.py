@@ -6,7 +6,8 @@ transform — no driver-side loops, no collect of frontier-scale data:
 
 - seen filter     = ``left_anti`` join on the 64-bit canonical hash, with an
   optional partitioned-Bloom prefilter that routes the (at steady state,
-  dominant) definitely-unseen candidates around the shuffle;
+  dominant) definitely-unseen candidates around the shuffle (the crawl
+  loop uses the cuckoo prefilter of operators/cuckoo.py instead);
 - robots filter   = broadcast join of per-host disallow prefixes;
 - politeness      = token-bucket state table joined on host; budget caps the
   per-host top-k;
@@ -33,12 +34,6 @@ from url_pattern_algorithm_spark.scaling import broadcast_if_small
 
 BLOOM_BITS_PER_KEY = 10  # ~1% fp at k=7
 BLOOM_HASHES = 7
-# Position-derivation schema version, persisted in every crawl run's meta:
-# format 2 = murmur3-remixed positions (r5). Bitmaps built under a different
-# format CANNOT be probed or OR-merged — positions would be random w.r.t.
-# the stored bits, i.e. silent false negatives that bypass the exact seen
-# anti-join — so resume refuses on mismatch (plans/crawl._check_run_meta).
-BLOOM_FORMAT = 2
 
 
 def _remix(hashes: "np.ndarray") -> "np.ndarray":
@@ -89,6 +84,7 @@ def _probe_bits(bits: "np.ndarray", hashes: "np.ndarray",
     return hit
 
 
+# perfbench replays this Bloom operator; the crawl loop runs operators/cuckoo
 def build_bloom(seen: DataFrame, n_buckets: int = 64,
                 bits_per_key: int = BLOOM_BITS_PER_KEY,
                 m_bits: int | None = None) -> DataFrame:
@@ -129,6 +125,7 @@ def build_bloom(seen: DataFrame, n_buckets: int = 64,
     )
 
 
+# perfbench replays this Bloom operator; the crawl loop runs operators/cuckoo
 def update_blooms(state: DataFrame, delta_hashes: DataFrame,
                   n_buckets: int = 64,
                   m_bits: int = 1 << 17) -> DataFrame:
@@ -175,6 +172,7 @@ def update_blooms(state: DataFrame, delta_hashes: DataFrame,
     )
 
 
+# perfbench replays this Bloom operator; the crawl loop runs operators/cuckoo
 def bloom_maybe_seen(candidates: DataFrame, blooms: DataFrame,
                      n_buckets: int = 64) -> DataFrame:
     """Tag candidates with ``maybe_seen``: False -> definitely unseen (skip
@@ -215,6 +213,7 @@ def bloom_maybe_seen(candidates: DataFrame, blooms: DataFrame,
     )
 
 
+# perfbench passes the Bloom ``blooms`` argument; the crawl loop runs cuckoo
 def seen_filter(candidates: DataFrame, seen: DataFrame | None,
                 blooms: DataFrame | None = None,
                 n_buckets: int = 64) -> DataFrame:

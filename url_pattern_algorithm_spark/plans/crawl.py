@@ -5,7 +5,7 @@ One iteration (all DataFrame ops, nothing frontier-scale on the driver):
     pending ⋈ politeness budgets -> salted priority top-k  = scheduled batch
     scheduled -> deterministic fetch (url_hash -> doc)     = fetched docs
     docs -> extract_links -> normalize -> robots filter
-         -> Bloom + anti-join seen filter                  = new frontier rows
+         -> cuckoo prefilter + anti-join seen filter       = new frontier rows
     state' = (pending - scheduled + new, seen + new, token buckets debited)
 
 State-table I/O is sized for a 10^10-key frontier:
@@ -17,10 +17,13 @@ State-table I/O is sized for a 10^10-key frontier:
   epoch-pruned read. Per-iteration write volume is O(delta), not O(seen) —
   the previous snapshot-per-iteration design wrote the full seen table every
   iteration (quadratic cumulative I/O over a long crawl).
-- Bloom bitmaps are maintained INCREMENTALLY: ``bloom_i = bloom_{i-1} |
-  bloom(delta)`` in one fused cogroup pass (operators.frontier.update_blooms)
-  at fixed per-bucket size ``bloom_m_bits``. Maintenance cost is
-  O(delta keys + bitmap bytes); bitmap bytes are ~10 *bits* per seen key.
+- The seen prefilter is a partitioned cuckoo filter (operators/cuckoo.py),
+  maintained INCREMENTALLY: ``cuckoo_i = cuckoo_{i-1} + insert(delta)`` in
+  one cogroup pass (update_cuckoos) at per-bucket size ``cuckoo_nb``, and
+  deleted from in O(|purged|) by ``unsee_urls``. It is exact-safe: a
+  maybe-seen candidate still goes through the anti-join, so a missing or
+  stale-positive snapshot is rebuilt from the seen table, never trusted
+  into a false negative. Filter bytes are ~2 bytes per seen key.
 - ``compact_seen`` collapses old epochs into the single ``epoch=-1``
   partition on a cadence (``compact_every``), bounding file counts exactly
   like Iceberg's rewrite_data_files; ``first_iter`` is a data column, so
@@ -47,17 +50,16 @@ from url_pattern_algorithm_spark.functions.links import extract_normalize_udf
 from url_pattern_algorithm_spark.functions.udfs import with_url_columns
 from url_pattern_algorithm_spark.operators.cuckoo import (
     build_cuckoo,
+    delete_from_cuckoos,
+    derive_cuckoo_nb,
     seen_filter_cuckoo,
     update_cuckoos,
 )
 from url_pattern_algorithm_spark.operators.frontier import (
-    build_bloom,
     host_crawl_delays,
     politeness_budgets,
     robots_filter,
     schedule_top_k,
-    seen_filter,
-    update_blooms,
 )
 from url_pattern_algorithm_spark.scaling import (
     BROADCAST_MAX_ROWS,
@@ -70,28 +72,20 @@ TOKENS_INIT = 2.0
 TOKENS_CAP = 4.0
 REFILL = 1.0
 
-BLOOM_M_BITS = 1 << 17  # fixed per-bucket bitmap bits (incremental OR mode)
+# perfbench reads this; written to the run meta as a constant, never read back
+BLOOM_M_BITS = 1 << 17
 PENDING_HBUCKETS = 16  # host-hash partition count for pending snapshots
 
 
 def _run_writers(writers) -> None:
-    """Run the iteration's independent state-write jobs.
-
-    Default: submit them as CONCURRENT Spark jobs from driver threads — the
-    standard multi-executor driver pattern (independent output jobs fill
-    scheduler slots a single ~32-task write leaves idle). Each writer targets
-    a disjoint table and reads only cached/parquet inputs, so ordering is
-    immaterial; crash semantics are unchanged (any subset of the iteration's
-    tables may exist after a failure, and resume re-runs the whole iteration
-    idempotently). ``SPARK_GRAFT_SEQ_WRITES=1`` forces sequential submission
-    (the A/B lever for tools/writes_ab_probe.py).
+    """Run the iteration's independent state-write jobs as CONCURRENT Spark
+    jobs from driver threads — the standard multi-executor driver pattern
+    (independent output jobs fill scheduler slots a single ~32-task write
+    leaves idle). Each writer targets a disjoint table and reads only
+    cached/parquet inputs, so ordering is immaterial; crash semantics are
+    unchanged (any subset of the iteration's tables may exist after a
+    failure, and resume re-runs the whole iteration idempotently).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SEQ_WRITES") == "1":
-        for w in writers:
-            w()
-        return
     with ThreadPoolExecutor(max_workers=len(writers)) as pool:
         # .result() re-raises the first writer failure on the driver thread
         for fut in [pool.submit(w) for w in writers]:
@@ -208,9 +202,10 @@ def prune_checkpoint_history(cat: Catalog, upto: int) -> list[str]:
 
     run_crawl refuses resumes below the compaction watermark, so snapshots
     before it are unreachable dead weight — without pruning a 10^5-iteration
-    crawl leaves 4x10^5 checkpoint dirs. Drops ``bloom_N`` / ``cuckoo_N`` /
-    ``pending_N`` /
-    ``host_state_N`` for N < upto (N == upto is the live resume point) and
+    crawl leaves 4x10^5 checkpoint dirs. Drops ``cuckoo_N`` / ``pending_N``
+    / ``host_state_N`` (and the ``bloom_N`` bitmaps a root written by an
+    older build may still hold) for N < upto (N == upto is the live resume
+    point) and
     ``scheduled_N`` for N <= upto (scheduled is write-only w.r.t. later
     iterations — it is the per-iteration OUTPUT log; callers that consume it
     downstream should copy batches out before the compaction cadence, or
@@ -254,6 +249,15 @@ def _read_crawl_meta(cat: Catalog) -> dict:
         return json.load(f)
 
 
+def _stamp(filters: DataFrame, run_id: str, iteration: int) -> DataFrame:
+    """Lineage columns for a cuckoo snapshot rewritten outside
+    write_checkpoint; coalesce: n_buckets rows never need 32 files."""
+    return (filters.withColumn("run_id", F.lit(run_id))
+            .withColumn("iteration", F.lit(iteration))
+            .withColumn("partition_id", F.spark_partition_id())
+            .coalesce(4))
+
+
 def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
                run_id: str = "unsee") -> int:
     """Purge URLs from the crawl's seen state so future organic discovery
@@ -276,7 +280,7 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     write via Catalog.rewrite — a real Iceberg deployment swaps this for
     positional deletes; the lock also refuses to race an in-flight
     iteration's writers, same as compact_seen). Seen is purged FIRST,
-    then the prefilter snapshot at the run's last iteration is brought in
+    then the cuckoo snapshot at the run's last iteration is brought in
     line — that order is crash-safe: a stale-POSITIVE prefilter is exact
     (maybe-seen candidates route through the anti-join, whose rows are
     gone), whereas updating the filter before the rows are gone would
@@ -284,28 +288,18 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     earlier snapshots, whose filters still contain the purged keys, stay
     exact.
 
-    Prefilter update, by kind (run meta):
-
-    - cuckoo: O(|purged|) incremental ``delete_from_cuckoos`` — the
-      capability the cuckoo kind was added for. Only hashes actually
-      present in seen are deleted (semi-join guard): deleting a
-      never-inserted key could evict a colliding fingerprint and turn a
-      prefilter false-positive into a FALSE NEGATIVE for a still-seen
-      URL (the Fan et al. delete caveat).
-    - bloom: bits cannot be cleared, so the stale snapshot is DROPPED and
-      the next iteration rebuilds it from the post-purge seen table
-      (full-scan rebuild — the cost asymmetry that motivates cuckoo for
-      delete-heavy deployments).
+    The filter update is an O(|purged|) incremental ``delete_from_cuckoos``.
+    Only hashes actually present in seen are deleted (semi-join guard):
+    deleting a never-inserted key could evict a colliding fingerprint and
+    turn a prefilter false-positive into a FALSE NEGATIVE for a still-seen
+    URL (the Fan et al. delete caveat). A root without the snapshot (one
+    written by an older Bloom-prefilter build) needs no update: the next
+    iteration rebuilds the filter from the post-purge seen table.
     """
-    from url_pattern_algorithm_spark.operators.cuckoo import (
-        delete_from_cuckoos,
-    )
-
     cat = Catalog(spark, ckpt_root)
     meta = _read_crawl_meta(cat)
     n_buckets = int(meta["bloom_buckets"])
     last = int(meta.get("last_iteration", 0))
-    kind = meta.get("prefilter_kind", "bloom")
     if "url_hash" not in urls.columns:
         urls = with_url_columns(urls)
     hashes = urls.select("url_hash").distinct()
@@ -328,22 +322,15 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
                                  .repartition(n_buckets, "bucket"),
                     partition_by=["epoch", "bucket"],
                 )
-                snap = f"{kind}_{last}"
-                if kind == "cuckoo" and cat.exists(snap):
+                snap = f"cuckoo_{last}"
+                if cat.exists(snap):
                     # rename-aside rewrite, not an in-place overwrite: a
                     # crash mid-write must leave a readable snapshot
-                    cat.rewrite(
-                        snap,
-                        lambda df: delete_from_cuckoos(
+                    cat.rewrite(snap, lambda df: _stamp(
+                        delete_from_cuckoos(
                             df.select("bucket", "nb", "table", "stash"),
                             present, n_buckets,
-                        ).withColumn("run_id", F.lit(run_id))
-                         .withColumn("iteration", F.lit(last))
-                         .withColumn("partition_id", F.spark_partition_id())
-                         .coalesce(4),
-                    )
-                elif kind == "bloom" and cat.exists(snap):
-                    cat.drop(snap)
+                        ), run_id, last))
         finally:
             present.unpersist()
     return n
@@ -373,15 +360,10 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
 
     ``urls`` accepts the same shapes as :func:`unsee_urls`.
     """
-    from url_pattern_algorithm_spark.operators.cuckoo import update_cuckoos
-
     cat = Catalog(spark, ckpt_root)
     meta = _read_crawl_meta(cat)
     n_buckets = int(meta["bloom_buckets"])
-    m_bits = int(meta["bloom_m_bits"])
     last = int(meta.get("last_iteration", 0))
-    kind = meta.get("prefilter_kind", "bloom")
-    nb = meta.get("cuckoo_nb")
     if "url_hash" not in urls.columns:
         urls = with_url_columns(urls)
     if "url_canon" not in urls.columns:
@@ -414,27 +396,14 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
         ).persist()
         try:
             if restore.count():
-                snap = f"{kind}_{last}"
+                snap = f"cuckoo_{last}"
                 if cat.exists(snap):
-                    delta = restore.select("url_hash")
-                    if kind == "cuckoo":
-                        upd = lambda df: update_cuckoos(  # noqa: E731
+                    cat.rewrite(snap, lambda df: _stamp(
+                        update_cuckoos(
                             df.select("bucket", "nb", "table", "stash"),
-                            delta, n_buckets, nb=int(nb),
-                        )
-                    else:
-                        upd = lambda df: update_blooms(  # noqa: E731
-                            df.select("bucket", "m_bits", "bitmap"),
-                            delta, n_buckets, m_bits,
-                        )
-                    cat.rewrite(snap, lambda df: (
-                        upd(df)
-                        .withColumn("run_id", F.lit(run_id))
-                        .withColumn("iteration", F.lit(last))
-                        .withColumn("partition_id",
-                                    F.spark_partition_id())
-                        .coalesce(4)
-                    ))
+                            restore.select("url_hash"), n_buckets,
+                            nb=int(meta["cuckoo_nb"]),
+                        ), run_id, last))
                 seen_cols = cat.read("seen").columns
                 seen_delta = (
                     restore.select(
@@ -497,88 +466,66 @@ def _seen_count_from_metrics(cat: Catalog) -> int | None:
     return int(row) if row is not None else None
 
 
-def _maybe_grow_prefilter(cat: Catalog, it: int, n_buckets: int,
-                          m_bits: int, nb: int, kind: str,
-                          run_id: str) -> tuple[int, int]:
-    """Compaction-time prefilter rescale: re-derive the per-bucket filter
+def _maybe_grow_prefilter(cat: Catalog, it: int, n_buckets: int, nb: int,
+                          run_id: str) -> int:
+    """Compaction-time prefilter rescale: re-derive the per-bucket cuckoo
     size from the ACTUAL seen count and rebuild the snapshot if it grew.
 
     Initial sizing derives from ``n_docs``, but the seen set is URLs and
     grows without bound in a long crawl — a filter pinned at start-time
-    size eventually saturates: the bloom's fp rate decays toward 1 (the
-    prefilter routes everything into the anti-join — correct, useless)
-    and the cuckoo degrades to stash (exact, bytes grow linearly,
+    size eventually degrades to stash (exact, bytes grow linearly,
     operators/cuckoo.py overload guards). Riding the compaction schedule
     gives the rebuild the same amortization and the same watermark
     semantics: resumes before this point are already refused, and the run
     meta re-pins the grown size so later resumes adopt it
     (run_crawl ``None`` params read the meta).
 
-    Growth only — shrink would invalidate the incremental OR/insert chain
-    for nothing. Returns the (possibly grown) (m_bits, nb)."""
-    from url_pattern_algorithm_spark.operators.cuckoo import derive_cuckoo_nb
-    from url_pattern_algorithm_spark.scaling import derive_bloom_m_bits
-
+    Growth only — shrink would invalidate the incremental insert chain
+    for nothing. Returns the (possibly grown) nb."""
     n_seen = _seen_count_from_metrics(cat)
     if n_seen is None:
-        return m_bits, nb
-    new_m = max(m_bits, derive_bloom_m_bits(n_seen, n_buckets))
+        return nb
     new_nb = max(nb, derive_cuckoo_nb(n_seen, n_buckets))
-
-    def _stamp(df: DataFrame) -> DataFrame:
-        return (df.withColumn("run_id", F.lit(run_id))
-                .withColumn("iteration", F.lit(it))
-                .withColumn("partition_id", F.spark_partition_id())
-                .coalesce(4))
-
     # rename-aside rewrite, NOT an in-place overwrite: meta already
     # records iteration ``it`` as completed, so a crash mid-write must
     # leave a READABLE snapshot (old or new, both exact) — a resume then
     # self-heals any size mismatch against the meta
     # (_heal_prefilter_size_mismatch)
-    if kind == "cuckoo" and new_nb > nb:
+    if new_nb > nb:
         cat.rewrite(f"cuckoo_{it}", lambda _old: _stamp(
-            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb)
+            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb),
+            run_id, it,
         ))
-        return m_bits, new_nb
-    if kind == "bloom" and new_m > m_bits:
-        cat.rewrite(f"bloom_{it}", lambda _old: _stamp(
-            build_bloom(read_seen(cat, it), n_buckets, m_bits=new_m)
-        ))
-        return new_m, nb
-    return m_bits, nb
+    return new_nb
 
 
-def _heal_prefilter_size_mismatch(cat: Catalog, iteration: int, kind: str,
-                                  m_bits: int, nb: int) -> None:
+def _heal_prefilter_size_mismatch(cat: Catalog, iteration: int,
+                                  nb: int) -> None:
     """Resume-time self-heal for the one crash window compaction-time
     rescaling leaves: a crash between the snapshot rebuild and the meta
     re-pin (either order) makes the stored snapshot's per-bucket size
     disagree with the size the resume adopted from the meta. The probe
-    kernels tolerate per-row sizes, but the incremental update kernels
-    refuse a mismatch (loud, not silent) — so a mismatched snapshot is
+    kernel tolerates per-row sizes, but the incremental update kernel
+    refuses a mismatch (loud, not silent) — so a mismatched snapshot is
     DROPPED here and the first resumed iteration rebuilds it from the
     seen table at the adopted size (_read_prefilter fallback, exact
     either way). One 1-row read of a bucket-count-sized table."""
-    snap = f"{kind}_{iteration}"
+    snap = f"cuckoo_{iteration}"
     if not cat.exists(snap):
         return
-    col = "nb" if kind == "cuckoo" else "m_bits"
-    expected = nb if kind == "cuckoo" else m_bits
-    row = cat.read(snap).select(col).limit(1).collect()
-    if row and int(row[0][col]) != expected:
+    row = cat.read(snap).select("nb").limit(1).collect()
+    if row and int(row[0]["nb"]) != nb:
         cat.drop(snap)
 
 
-def _write_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
+def _write_run_meta(cat: Catalog, bloom_buckets: int,
                     last_iteration: int = 0,
                     robots_mode: str = "any_disallow",
-                    prefilter_kind: str = "bloom",
                     cuckoo_nb: int | None = None) -> None:
     """Persist the run's structural parameters (driver-side file, no Spark
-    job): the bucket count is baked into every stored bloom bitmap and seen
-    bucket column, so resuming with different values would silently produce
-    Bloom false negatives — validated on resume instead.
+    job): the bucket count is baked into every stored cuckoo table and seen
+    bucket column, so resuming with a different value would silently
+    produce prefilter false negatives — validated on resume instead.
     ``last_iteration`` (updated after every completed iteration) bounds
     resume_from: a reused checkpoint root can hold LATER pending/host_state
     snapshots from a longer previous run, and resuming past this run's end
@@ -590,26 +537,22 @@ def _write_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
     # meta is rewritten after EVERY iteration: write-to-temp + atomic
     # os.replace so a crash mid-write can't leave truncated JSON that
     # blocks the resume path
-    from url_pattern_algorithm_spark.operators.frontier import BLOOM_FORMAT
-
     final = os.path.join(cat.root, "_run_meta.json")
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
+        # perfbench reads bloom_buckets, bloom_m_bits and cuckoo_nb
         json.dump({"bloom_buckets": bloom_buckets,
-                   "bloom_m_bits": bloom_m_bits,
-                   "bloom_format": BLOOM_FORMAT,
+                   "bloom_m_bits": BLOOM_M_BITS,
                    "robots_mode": robots_mode,
-                   "prefilter_kind": prefilter_kind,
+                   "prefilter_kind": "cuckoo",
                    "cuckoo_nb": cuckoo_nb,
                    "last_iteration": last_iteration}, f)
     os.replace(tmp, final)
 
 
-def _check_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
+def _check_run_meta(cat: Catalog, bloom_buckets: int,
                     resume_from: int | None = None,
-                    use_bloom: bool = True,
                     robots_mode: str = "any_disallow",
-                    prefilter_kind: str = "bloom",
                     cuckoo_nb: int | None = None) -> None:
     import json
     import os
@@ -627,28 +570,14 @@ def _check_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
                 "fix or was damaged externally — delete the file to resume "
                 "an otherwise-intact checkpoint (parameters then unchecked)"
             ) from e
-    if (meta.get("bloom_buckets") != bloom_buckets
-            or meta.get("bloom_m_bits") != bloom_m_bits):
+    if meta.get("bloom_buckets") != bloom_buckets:
         raise ValueError(
-            f"resume with bloom_buckets={bloom_buckets}/"
-            f"bloom_m_bits={bloom_m_bits} does not match the checkpoint's "
-            f"{meta}: stored bitmaps and seen buckets are keyed by these — "
-            "resume with the original values or start a fresh run"
+            f"resume with bloom_buckets={bloom_buckets} does not match the "
+            f"checkpoint's {meta}: stored filters and seen buckets are "
+            "keyed by it — resume with the original value or start a fresh "
+            "run"
         )
-    from url_pattern_algorithm_spark.operators.frontier import BLOOM_FORMAT
-
-    stored_kind = meta.get("prefilter_kind", "bloom")  # pre-cuckoo metas
-    if use_bloom and stored_kind != prefilter_kind:
-        raise ValueError(
-            f"resume with prefilter_kind={prefilter_kind!r} does not match "
-            f"the checkpoint's {stored_kind!r}: the stored {stored_kind}_N "
-            "snapshots are the incremental state this resume would extend — "
-            "resume with the original kind (or use_bloom=False to continue "
-            "without a prefilter; the exact anti-join semantics are "
-            "identical either way)"
-        )
-    if (use_bloom and prefilter_kind == "cuckoo"
-            and meta.get("cuckoo_nb") is not None
+    if (meta.get("cuckoo_nb") is not None
             and meta.get("cuckoo_nb") != cuckoo_nb):
         raise ValueError(
             f"resume with cuckoo_nb={cuckoo_nb} does not match the "
@@ -656,23 +585,6 @@ def _check_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
             "are keyed by their bucket count — resume with the original "
             "value or start a fresh run"
         )
-    stored_format = meta.get("bloom_format", 1)  # pre-r5 metas: raw-hash
-    if stored_format != BLOOM_FORMAT:
-        if use_bloom and prefilter_kind == "bloom":
-            raise ValueError(
-                f"checkpoint bloom bitmaps use position format "
-                f"{stored_format}, this build probes format {BLOOM_FORMAT} "
-                "(r5 remix): probing them would produce SILENT false "
-                "negatives past the seen anti-join — start a fresh run, or "
-                "resume with use_bloom=False (stale-format bitmaps are then "
-                "dropped and rebuild from the seen table when re-enabled)"
-            )
-        # bloom disabled: the stale-format snapshots must not survive to be
-        # probed by a LATER use_bloom=True resume — drop them (derived
-        # data; _read_blooms rebuilds from the seen table when needed)
-        for name in cat.table_names():
-            if _base_table_name(name).startswith("bloom_"):
-                cat.drop(name)
     stored_mode = meta.get("robots_mode", "any_disallow")  # pre-r5 metas
     if stored_mode != robots_mode:
         raise ValueError(
@@ -692,30 +604,16 @@ def _check_run_meta(cat: Catalog, bloom_buckets: int, bloom_m_bits: int,
         )
 
 
-def _read_blooms(cat: Catalog, iteration: int, n_buckets: int,
-                 m_bits: int) -> DataFrame:
-    """Bloom state as of ``iteration``: the stored snapshot when present,
-    else rebuilt once from the seen table (e.g. resuming a run that was
-    started with use_bloom=False)."""
-    name = f"bloom_{iteration}"
+def _read_prefilter(cat: Catalog, iteration: int, n_buckets: int,
+                    cuckoo_nb: int) -> DataFrame:
+    """Cuckoo prefilter state as of ``iteration``: the stored snapshot when
+    present, else rebuilt once from the seen table (a root written by an
+    older Bloom-prefilter or no-prefilter build, or a snapshot dropped by
+    the size-mismatch heal)."""
+    name = f"cuckoo_{iteration}"
     if cat.exists(name):
-        return cat.read(name).select("bucket", "m_bits", "bitmap")
-    return build_bloom(read_seen(cat, iteration), n_buckets, m_bits=m_bits)
-
-
-def _read_prefilter(cat: Catalog, iteration: int, kind: str, n_buckets: int,
-                    m_bits: int, cuckoo_nb: int) -> DataFrame:
-    """Seen-prefilter state as of ``iteration`` for the run's configured
-    kind ('bloom' | 'cuckoo'): stored snapshot when present, else rebuilt
-    once from the seen table (resuming a run started with use_bloom=False,
-    or after a stale-format bloom drop)."""
-    if kind == "cuckoo":
-        name = f"cuckoo_{iteration}"
-        if cat.exists(name):
-            return cat.read(name).select("bucket", "nb", "table", "stash")
-        return build_cuckoo(read_seen(cat, iteration), n_buckets,
-                            nb=cuckoo_nb)
-    return _read_blooms(cat, iteration, n_buckets, m_bits)
+        return cat.read(name).select("bucket", "nb", "table", "stash")
+    return build_cuckoo(read_seen(cat, iteration), n_buckets, nb=cuckoo_nb)
 
 
 def _with_hbucket(pending: DataFrame,
@@ -734,13 +632,12 @@ def _new_frontier_rows(
     spark: SparkSession,
     raw_candidates: DataFrame,
     robots: DataFrame,
-    seen: DataFrame | None,
-    blooms: DataFrame | None,
+    seen: DataFrame,
+    filters: DataFrame,
     discovered_iter: int,
     bloom_buckets: int = 64,
     est_robots: int | None = None,
     robots_mode: str = "any_disallow",
-    prefilter_kind: str = "bloom",
 ) -> DataFrame:
     """candidates -> normalized, robots-filtered, unseen, deduped rows.
 
@@ -757,10 +654,7 @@ def _new_frontier_rows(
     cand = cand.filter(F.col("url_canon").isNotNull())
     cand = robots_filter(cand, robots, est_rows=est_robots,
                          longest_match=robots_mode == "longest_match")
-    if prefilter_kind == "cuckoo":
-        cand = seen_filter_cuckoo(cand, seen, blooms, bloom_buckets)
-    else:
-        cand = seen_filter(cand, seen, blooms, bloom_buckets)
+    cand = seen_filter_cuckoo(cand, seen, filters, bloom_buckets)
     # batch-internal dedup on the canonical hash; deterministic representative
     dedup = cand.groupBy("url_hash").agg(
         F.min("url").alias("url"),
@@ -784,19 +678,16 @@ def init_state(
     cat: Catalog,
     run_id: str,
     pol: Politeness = DEFAULT_POLITENESS,
-    use_bloom: bool = True,
     bloom_buckets: int = 64,
-    bloom_m_bits: int = BLOOM_M_BITS,
     est_robots: int | None = None,
     stats: dict | None = None,
     hbuckets: int = PENDING_HBUCKETS,
     delays: DataFrame | None = None,
     robots_mode: str = "any_disallow",
-    prefilter_kind: str = "bloom",
     cuckoo_nb: int = 1 << 14,
 ) -> None:
     """Iteration 0: seed list -> pending snapshot + seen delta + the
-    iteration-0 seen-prefilter snapshot (bloom_0 or cuckoo_0).
+    iteration-0 seen-prefilter snapshot cuckoo_0.
 
     ``stats`` (when given) receives ``n_hosts`` = host_state_0 row count,
     which run_crawl threads into iteration 1's politeness size gate."""
@@ -823,16 +714,10 @@ def init_state(
         _write_seen_delta(cat, pending, run_id, 0, bloom_buckets)
 
     def write_prefilter() -> None:
-        if prefilter_kind == "cuckoo":
-            flt0 = build_cuckoo(
-                pending.select("url_hash"), bloom_buckets, nb=cuckoo_nb
-            )
-            cat.write_checkpoint(flt0.coalesce(4), "cuckoo_0", run_id, 0)
-        else:
-            flt0 = build_bloom(
-                pending.select("url_hash"), bloom_buckets, m_bits=bloom_m_bits
-            )
-            cat.write_checkpoint(flt0.coalesce(4), "bloom_0", run_id, 0)
+        flt0 = build_cuckoo(
+            pending.select("url_hash"), bloom_buckets, nb=cuckoo_nb
+        )
+        cat.write_checkpoint(flt0.coalesce(4), "cuckoo_0", run_id, 0)
 
     def write_host_state() -> None:
         host_state = _with_crawl_delay(
@@ -847,10 +732,7 @@ def init_state(
         if stats is not None:
             stats["n_hosts"] = n
 
-    writers = [write_seen, write_host_state]
-    if use_bloom:
-        writers.append(write_prefilter)
-    _run_writers(writers)
+    _run_writers([write_seen, write_host_state, write_prefilter])
     cat.flush_metrics()
     pending.unpersist()
 
@@ -864,9 +746,7 @@ def run_iteration(
     iteration: int,
     n_docs: int,
     salts: int = 16,
-    use_bloom: bool = True,
     bloom_buckets: int = 64,
-    bloom_m_bits: int = BLOOM_M_BITS,
     pol: Politeness = DEFAULT_POLITENESS,
     est_hosts: int | None = None,
     est_robots: int | None = None,
@@ -874,7 +754,6 @@ def run_iteration(
     hbuckets: int = PENDING_HBUCKETS,
     delays: DataFrame | None = None,
     robots_mode: str = "any_disallow",
-    prefilter_kind: str = "bloom",
     cuckoo_nb: int = 1 << 14,
 ) -> int:
     """Advance one iteration from state as of ``iteration-1``; returns the
@@ -934,23 +813,17 @@ def run_iteration(
     raw_candidates = pages.select(
         F.explode(extract_normalize_udf(F.col("spans"))).alias("l")
     ).select("l.url", "l.url_canon", "l.host")
-    blooms = (
-        _read_prefilter(cat, prev, prefilter_kind, bloom_buckets,
-                        bloom_m_bits, cuckoo_nb)
-        if use_bloom
-        else None
-    )
+    filters = _read_prefilter(cat, prev, bloom_buckets, cuckoo_nb)
     new_rows = _new_frontier_rows(
-        spark, raw_candidates, robots, seen, blooms, iteration, bloom_buckets,
-        est_robots=est_robots, robots_mode=robots_mode,
-        prefilter_kind=prefilter_kind,
+        spark, raw_candidates, robots, seen, filters, iteration,
+        bloom_buckets, est_robots=est_robots, robots_mode=robots_mode,
     )
     # the candidate pipeline (links UDF -> normalize UDF -> robots -> seen
-    # filter -> dedup shuffle) feeds pending_N, the seen delta, bloom_N and
-    # host_state_N: persist so it runs once, not four times
+    # filter -> dedup shuffle) feeds pending_N, the seen delta, cuckoo_N
+    # and host_state_N: persist so it runs once, not four times
     new_rows = new_rows.persist()
 
-    # 4. next state: pending/host_state snapshots + seen/bloom DELTAS only.
+    # 4. next state: pending/host_state snapshots + seen/filter DELTAS only.
     # The seen-delta write runs FIRST: it is the cheapest job that touches
     # every partition of the persisted candidate pipeline, so it pays the
     # one-time UDF/dedup cost and leaves new_rows fully cached. The three
@@ -969,21 +842,13 @@ def run_iteration(
         )
 
     def write_prefilter() -> None:
-        # one cogroup pass builds the delta AND folds it into the stored
-        # state (OR-merge for bloom, true insert for cuckoo); coalesce:
-        # n_buckets rows never need 32 files
-        if prefilter_kind == "cuckoo":
-            next_flt = update_cuckoos(
-                blooms, new_rows.select("url_hash"), bloom_buckets, cuckoo_nb
-            )
-            name = f"cuckoo_{iteration}"
-        else:
-            next_flt = update_blooms(
-                blooms, new_rows.select("url_hash"), bloom_buckets,
-                bloom_m_bits
-            )
-            name = f"bloom_{iteration}"
-        cat.write_checkpoint(next_flt.coalesce(4), name, run_id, iteration)
+        # one cogroup pass inserts the delta into the stored filters;
+        # coalesce: n_buckets rows never need 32 files
+        next_flt = update_cuckoos(
+            filters, new_rows.select("url_hash"), bloom_buckets, cuckoo_nb
+        )
+        cat.write_checkpoint(next_flt.coalesce(4), f"cuckoo_{iteration}",
+                             run_id, iteration)
 
     def write_host_state() -> None:
         new_hosts = _with_crawl_delay(
@@ -1006,10 +871,7 @@ def run_iteration(
         if stats is not None:
             stats["n_hosts"] = n
 
-    writers = [write_pending, write_host_state]
-    if use_bloom:
-        writers.append(write_prefilter)
-    _run_writers(writers)
+    _run_writers([write_pending, write_host_state, write_prefilter])
     cat.flush_metrics()
     new_rows.unpersist()
     scheduled.unpersist()
@@ -1027,15 +889,13 @@ def run_crawl(
     run_id: str = "run1",
     resume_from: int | None = None,
     salts: int | None = 16,
-    use_bloom: bool = True,
     bloom_buckets: int | None = 64,
-    bloom_m_bits: int | None = BLOOM_M_BITS,
     compact_every: int = 0,
     prune_history: bool = False,
     pol: Politeness = DEFAULT_POLITENESS,
     pending_hbuckets: int | None = None,
     robots_mode: str = "any_disallow",
-    prefilter_kind: str = "bloom",
+    prefilter_kind: str = "cuckoo",  # perfbench passes it; only "cuckoo"
     cuckoo_nb: int | None = None,
 ) -> dict[int, int]:
     """Run (or resume) the crawl; returns {iteration: n_scheduled}.
@@ -1050,16 +910,24 @@ def run_crawl(
     state kind instead of one per iteration forever. Off by default because
     it also drops the scheduled_N output log through the watermark.
 
-    ``bloom_buckets=None`` / ``bloom_m_bits=None`` derive both from the
-    ``n_docs`` universe estimate (scaling.derive_bloom_*): at the 10^10-URL
-    north_rule scale that lands on 4096 buckets x 2^25-bit bitmaps; the
-    sandbox sizes clamp down to the tested constants. The per-bucket
-    filter SIZE additionally rescales at each compaction point from the
-    actual seen count (_maybe_grow_prefilter: rebuild + meta re-pin riding
-    the compaction watermark) — the seen set is URLs and outgrows any
-    start-time estimate in a long crawl; on resume, ``None`` size params
-    adopt the checkpoint's stored (possibly grown) values. The BUCKET
-    count never changes (it is baked into the seen table layout). ``pending_hbuckets``
+    The seen prefilter is a partitioned cuckoo filter (operators/cuckoo.py):
+    exact-safe, deletable (``unsee_urls``), ~0.01% fp at ~2 bytes per seen
+    key. ``bloom_buckets`` is its outer bucket count, shared with the seen
+    table's ``bucket`` column (the name predates the cuckoo filter).
+    ``bloom_buckets=None`` / ``cuckoo_nb=None`` derive the bucket count
+    and the per-bucket cuckoo size from the ``n_docs`` universe estimate
+    (scaling.derive_bloom_buckets, cuckoo.derive_cuckoo_nb): 4096 buckets
+    at the 10^10-URL north_rule scale; the sandbox sizes clamp down to the
+    tested constants. The per-bucket filter SIZE additionally rescales at
+    each compaction point from the actual seen count
+    (_maybe_grow_prefilter: rebuild + meta re-pin riding the compaction
+    watermark) — the seen set is URLs and outgrows any start-time estimate
+    in a long crawl; on resume, ``None`` size params adopt the
+    checkpoint's stored (possibly grown) values. The BUCKET count never
+    changes (it is baked into the seen table layout). A resume of a root
+    written by an older Bloom-prefilter or no-prefilter build finds no
+    ``cuckoo_k`` snapshot and rebuilds it once from the seen table; the
+    schedule is unchanged. ``pending_hbuckets``
     (the pending snapshots' host-hash partition count) likewise derives from
     ``n_docs`` by default — 8192 dirs at 10^10, the 16 sandbox constant
     below ~10^7. ``salts=None`` derives the top-k salt factor the same way
@@ -1073,29 +941,16 @@ def run_crawl(
     'longest_match' (Google robots spec precedence incl. wildcards —
     operators/frontier.robots_filter longest_match=True). Both modes are
     oracle-parity-tested end-to-end (tests/test_crawl_parity.py).
-
-    ``prefilter_kind`` (active when ``use_bloom=True``): 'bloom' (default —
-    OR-mergeable bitmaps, order-independent snapshot bytes) or 'cuckoo'
-    (operators/cuckoo.py: ~10x lower fp routes more steady-state candidates
-    around the anti-join shuffle, plus deletability, at ~2x the filter
-    bytes). Both are exact-safe prefilters over the same outer-bucket
-    cogroup layout — scheduled batches and the seen set are identical
-    across kinds (tests pin it). The kind is pinned in the run meta;
-    resume refuses the other kind (its incremental snapshots are the state
-    being extended). ``cuckoo_nb=None`` derives the per-bucket cuckoo size
-    from ``n_docs`` like the bloom sizes.
     """
-    from url_pattern_algorithm_spark.operators.cuckoo import derive_cuckoo_nb
     from url_pattern_algorithm_spark.scaling import (
         derive_bloom_buckets,
-        derive_bloom_m_bits,
         derive_pending_hbuckets,
         derive_salts,
     )
 
     if robots_mode not in ("any_disallow", "longest_match"):
         raise ValueError(f"unknown robots_mode: {robots_mode!r}")
-    if prefilter_kind not in ("bloom", "cuckoo"):
+    if prefilter_kind != "cuckoo":
         raise ValueError(f"unknown prefilter_kind: {prefilter_kind!r}")
     if salts is None:
         # worst-case skew assumption: one host could hold half the universe
@@ -1116,9 +971,6 @@ def run_crawl(
     if bloom_buckets is None:
         bloom_buckets = stored_meta.get("bloom_buckets") or \
             derive_bloom_buckets(n_docs)
-    if bloom_m_bits is None:
-        bloom_m_bits = stored_meta.get("bloom_m_bits") or \
-            derive_bloom_m_bits(n_docs, bloom_buckets)
     if pending_hbuckets is None:
         pending_hbuckets = derive_pending_hbuckets(n_docs)
     if cuckoo_nb is None:
@@ -1144,9 +996,8 @@ def run_crawl(
     try:
         return _run_crawl_inner(
             spark, docs, seeds, robots, cat, n_docs, iterations, run_id,
-            resume_from, salts, use_bloom, bloom_buckets, bloom_m_bits,
-            compact_every, prune_history, pol, pending_hbuckets, robots_mode,
-            prefilter_kind, cuckoo_nb,
+            resume_from, salts, bloom_buckets, compact_every, prune_history,
+            pol, pending_hbuckets, robots_mode, cuckoo_nb,
         )
     finally:
         if parsed_robots is not None:
@@ -1164,16 +1015,13 @@ def _run_crawl_inner(
     run_id: str,
     resume_from: int | None,
     salts: int,
-    use_bloom: bool,
     bloom_buckets: int,
-    bloom_m_bits: int,
     compact_every: int,
     prune_history: bool,
     pol: Politeness,
     pending_hbuckets: int,
-    robots_mode: str = "any_disallow",
-    prefilter_kind: str = "bloom",
-    cuckoo_nb: int = 1 << 14,
+    robots_mode: str,
+    cuckoo_nb: int,
 ) -> dict[int, int]:
     if "doc_index" not in docs.columns:
         docs = docs.withColumn(
@@ -1193,11 +1041,12 @@ def _run_crawl_inner(
     delays = host_crawl_delays(robots)
     if resume_from is None:
         # fresh run: wipe EVERYTHING a crawl writes — the append-style
-        # tables (seen, blooms, compaction watermark, metrics) would
+        # tables (seen, filters, compaction watermark, metrics) would
         # silently merge with a prior run's state, and a longer prior
         # run's per-iteration snapshots (pending_N/host_state_N/
         # scheduled_N for N past this run's end) would otherwise survive
-        # and corrupt a later out-of-range resume
+        # and corrupt a later out-of-range resume. bloom_N: bitmaps an
+        # older build's run may have left in the root.
         for name in cat.table_names():
             # a crash inside Catalog.rewrite's swap window leaves the live
             # data under <base>__compact_old; wipe by BASE name so a prior
@@ -1208,24 +1057,19 @@ def _run_crawl_inner(
                     or base.startswith(("bloom_", "cuckoo_", "pending_",
                                         "host_state_", "scheduled_"))):
                 cat.drop(name)
-        _write_run_meta(cat, bloom_buckets, bloom_m_bits,
-                        robots_mode=robots_mode,
-                        prefilter_kind=prefilter_kind, cuckoo_nb=cuckoo_nb)
+        _write_run_meta(cat, bloom_buckets, robots_mode=robots_mode,
+                        cuckoo_nb=cuckoo_nb)
         init_stats: dict = {}
         init_state(spark, seeds, robots, cat, run_id, pol,
-                   use_bloom=use_bloom, bloom_buckets=bloom_buckets,
-                   bloom_m_bits=bloom_m_bits, est_robots=est_robots,
+                   bloom_buckets=bloom_buckets, est_robots=est_robots,
                    stats=init_stats, hbuckets=pending_hbuckets,
                    delays=delays, robots_mode=robots_mode,
-                   prefilter_kind=prefilter_kind, cuckoo_nb=cuckoo_nb)
+                   cuckoo_nb=cuckoo_nb)
         est_hosts = init_stats.get("n_hosts")
     else:
-        _check_run_meta(cat, bloom_buckets, bloom_m_bits, resume_from,
-                        use_bloom=use_bloom, robots_mode=robots_mode,
-                        prefilter_kind=prefilter_kind, cuckoo_nb=cuckoo_nb)
-        if use_bloom:
-            _heal_prefilter_size_mismatch(cat, resume_from, prefilter_kind,
-                                          bloom_m_bits, cuckoo_nb)
+        _check_run_meta(cat, bloom_buckets, resume_from,
+                        robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
+        _heal_prefilter_size_mismatch(cat, resume_from, cuckoo_nb)
         wm = compaction_watermark(cat)
         if resume_from < wm:
             raise ValueError(
@@ -1236,32 +1080,27 @@ def _run_crawl_inner(
         start = resume_from + 1
     for it in range(start, iterations + 1):
         it_stats: dict = {}
+        # looked up at call time: perfbench swaps run_iteration for its
+        # step probe
         counts[it] = run_iteration(
-            spark, docs, robots, cat, run_id, it, n_docs, salts, use_bloom,
-            bloom_buckets=bloom_buckets, bloom_m_bits=bloom_m_bits, pol=pol,
+            spark, docs, robots, cat, run_id, it, n_docs, salts,
+            bloom_buckets=bloom_buckets, pol=pol,
             est_hosts=est_hosts, est_robots=est_robots, stats=it_stats,
             hbuckets=pending_hbuckets, delays=delays, robots_mode=robots_mode,
-            prefilter_kind=prefilter_kind, cuckoo_nb=cuckoo_nb,
+            cuckoo_nb=cuckoo_nb,
         )
         est_hosts = it_stats.get("n_hosts")
-        _write_run_meta(cat, bloom_buckets, bloom_m_bits, it,
-                        robots_mode=robots_mode,
-                        prefilter_kind=prefilter_kind, cuckoo_nb=cuckoo_nb)
+        _write_run_meta(cat, bloom_buckets, it, robots_mode=robots_mode,
+                        cuckoo_nb=cuckoo_nb)
         if compact_every and it % compact_every == 0:
             compact_seen(cat, it, bloom_buckets)
             if prune_history:
                 prune_checkpoint_history(cat, it)
-            if use_bloom:
-                grown_m, grown_nb = _maybe_grow_prefilter(
-                    cat, it, bloom_buckets, bloom_m_bits, cuckoo_nb,
-                    prefilter_kind, run_id,
-                )
-                if (grown_m, grown_nb) != (bloom_m_bits, cuckoo_nb):
-                    bloom_m_bits, cuckoo_nb = grown_m, grown_nb
-                    # re-pin immediately: later resumes (and the stale-
-                    # format check) must see the grown sizes
-                    _write_run_meta(cat, bloom_buckets, bloom_m_bits, it,
-                                    robots_mode=robots_mode,
-                                    prefilter_kind=prefilter_kind,
-                                    cuckoo_nb=cuckoo_nb)
+            grown_nb = _maybe_grow_prefilter(cat, it, bloom_buckets,
+                                             cuckoo_nb, run_id)
+            if grown_nb != cuckoo_nb:
+                cuckoo_nb = grown_nb
+                # re-pin immediately: later resumes must see the grown size
+                _write_run_meta(cat, bloom_buckets, it,
+                                robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
     return counts

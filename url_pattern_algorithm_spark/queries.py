@@ -1044,8 +1044,12 @@ def q_leaf_alternations_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_trees(corpus, min_host_urls=50, sort_urls=True))
 
 
-def _cluster_urls(spark: SparkSession, sf_dir: str,
-                  window: int = 1500, amp: int = 10) -> DataFrame:
+# The cluster corpus's key window and amplification (see _cluster_urls).
+CLUSTER_WINDOW = 1500
+CLUSTER_AMP = 10
+
+
+def _cluster_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster corpus for rewrite learning (EP1): every page is
     reachable under two URL shapes, each alias carrying a unique junk param —
     the duplicate-page signal the reference mines rewrite rules from.
@@ -1053,21 +1057,21 @@ def _cluster_urls(spark: SparkSession, sf_dir: str,
     leaf nodes of the two shapes overlap the cluster at rate 1.0 (>= the 0.5
     threshold, TreeNode.java:775-778) and a view->doc rewrite rule emerges.
 
-    Scale-pinned (r3): keys = o_orderkey < ``window`` (orderkeys are dense
-    0..N-1 at every sf, so the window is identical at sf0.001/0.01/0.1)
-    amplified x ``amp`` — the corpus is a pure function of (window, amp),
-    byte-identical at every scale factor. That makes the LEARNED rule set a
+    Scale-pinned (r3): keys = o_orderkey < ``CLUSTER_WINDOW`` (orderkeys
+    are dense 0..N-1 at every sf, so the window is identical at
+    sf0.001/0.01/0.1) amplified x ``CLUSTER_AMP`` — the corpus is a pure
+    function of the two constants, byte-identical at every scale factor.
+    That makes the LEARNED rule set a
     fixed closed form, SQL-statable once for every sf the driver checks
     (r2's custkey-derived corpus fell into the no-rules regime at sf0.001:
     per-page counts under the >50 salient override stop the split).
-    bench.py scales ``amp`` with the table size instead, so the benched
-    learn workload still grows with sf.
 
     24 hosts (contiguous 625-key blocks): per-host rule learning is an
     applyInPandas group per host (the reference's own reducer-per-host
     distribution), so the corpus must offer enough groups to fill the
     cores; 625 urls/host keeps every per-page count above the >50 salient
     override (thinnest page ~62)."""
+    window, amp = CLUSTER_WINDOW, CLUSTER_AMP
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < window)
     ok = (F.col("o_orderkey") * amp + F.col("j")).alias("ok2")
     exploded = o.select(
@@ -1119,15 +1123,14 @@ def q_rewrite_rules_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return learn_rules(clusters, min_cluster_size=2)
 
 
-def q_rewrite_compression(spark: SparkSession, sf_dir: str,
-                          window: int = 1500, amp: int = 10) -> DataFrame:
+def q_rewrite_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end EP1: learn -> apply -> compression (Fun.java:519-569).
     SQL-oracled (r3): with the closed-form learned rules, rule 0 matches
     every view URL and rule 3 every epsilon doc URL, all rewriting to the
     host's single epsilon target; only non-epsilon doc URLs pass through."""
     # the cluster corpus feeds BOTH the learn pass (collected inside
     # apply_rules) and the rewrite scan — persist so it derives once
-    clusters = _persist(_cluster_urls(spark, sf_dir, window, amp))
+    clusters = _persist(_cluster_urls(spark, sf_dir))
     rules = learn_rules(clusters, min_cluster_size=2)
     rewritten = apply_rules(spark, clusters.select("host", "url"), rules)
     m = compression_metric(rewritten)
