@@ -85,6 +85,58 @@ def test_seen_as_of_prunes_future_iterations(crawl_run):
     assert upto1 == want1
 
 
+def test_edge_seeds_admitted_like_links(crawl_run, tmp_path):
+    # seeds go through the links' URL projection and candidate pipeline:
+    # a path java.net.URI rejects still yields the kernel's host (so the
+    # seed is scheduled), a case variant of a seed collapses onto it with
+    # the larger priority and the smaller url, and a robots-disallowed or
+    # scheme-less seed is dropped — exactly as the oracle admits them
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    spark, *_ = crawl_run
+    docs = docs_df(spark, N_DOCS, N_HOSTS, partitions=4)
+    robots = robots_df(spark, N_HOSTS)
+    seeds_local = [(r["url"], r["priority"])
+                   for r in seeds_df(spark, N_HOSTS).collect()] + [
+        # site1's seeds are at 0.99 and 0.49; its iteration-1 budget is 3
+        ("http://site1.example.com/a|b", 0.7),
+        # same canonical URL as the 1.0 seed http://site0.example.com/
+        ("HTTP://SITE0.EXAMPLE.COM/", 0.2),
+        ("http://site2.example.com/private/p", 0.9),
+        ("site3.example.com/no-scheme", 0.9),
+    ]
+    seeds = spark.createDataFrame(seeds_local, "url string, priority double")
+    ckpt = str(tmp_path / "edge_seeds")
+    counts = run_crawl(spark, docs, seeds, robots, ckpt, N_DOCS,
+                       iterations=ITERS)
+    oracle = run_oracle_crawl(seeds_local, robots_rules(N_HOSTS), N_DOCS,
+                              N_HOSTS, ITERS)
+    first = {(r[0], r[4]) for r in oracle.scheduled[1]}
+    assert ("http://site1.example.com/a|b", 0.7) in first
+    assert ("HTTP://SITE0.EXAMPLE.COM/", 1.0) in first
+    for it in range(1, ITERS + 1):
+        got = _spark_scheduled(spark, ckpt, it)
+        want = [(r[0], r[1], r[2], r[3], r[6]) for r in oracle.scheduled[it]]
+        assert got == want, f"iteration {it} mismatch"
+        assert counts[it] == len(want)
+    cat = Catalog(spark, ckpt)
+    got_seen = {
+        (r["url_hash"], r["first_iter"])
+        for r in read_seen(cat, ITERS).select("url_hash",
+                                              "first_iter").collect()
+    }
+    assert got_seen == set(oracle.seen.items())
+    pending_0 = cat.read("pending_0")
+    assert pending_0.filter(F.col("host").isNull()).count() == 0
+    # one seen row per admitted seed, as the lineage metrics record it
+    rows = Counter()
+    for r in cat.read("_metrics").filter("iteration = 0").collect():
+        rows[r["table"]] += r["rows"]
+    assert rows["seen"] == rows["pending_0"] == pending_0.count()
+
+
 def test_compaction_preserves_seen_set(crawl_run, tmp_path):
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
     ckpt2 = str(tmp_path / "compacted")

@@ -128,6 +128,7 @@ def test_robots_default_mode_honors_wildcards(spark):
         "http://h.com/docs/a.pdf",   # '/*.pdf$' -> blocked
         "http://h.com/a.pdf.html",   # '$' anchor -> kept
         "http://h.com/plain/x",      # literal fast path -> blocked
+        "http://h.com/plain|x",      # a path java.net.URI rejects -> blocked
         "http://h.com/open",         # no rule -> kept
     ]
     robots = spark.createDataFrame(
@@ -202,7 +203,7 @@ def test_robots_longest_match_randomized_cross_check(spark):
     from url_pattern_algorithm_spark.operators.frontier import robots_filter
 
     rng = random.Random(20260818)
-    segs = ["cat", "item", "a", "bb", "x1", "p.q", "z+w"]
+    segs = ["cat", "item", "a", "bb", "x1", "p.q", "z+w", "a|b"]
 
     def rand_pattern():
         parts = ["/" + rng.choice(segs) for _ in range(rng.randint(1, 3))]

@@ -66,37 +66,43 @@ def extract_links_udf(spans: pd.Series) -> pd.Series:
     return spans.map(extract_links)
 
 
-_LINK_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("url", StringType()),
-            StructField("url_canon", StringType()),
-            StructField("host", StringType()),
-        ]
-    )
+URL_STRUCT = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("url_canon", StringType()),
+        StructField("host", StringType()),
+    ]
 )
 
 
-@pandas_udf(_LINK_SCHEMA)
+def url_columns(u: str | None) -> dict:
+    """The frontier's per-URL projection: url -> (url, url_canon, host),
+    one host parse (``get_host``, the reference's ProcessedUrl.java:90-96
+    rule) and the single normalization chain. Unparsable URLs get null
+    url_canon (filtered downstream, same rule as normalize_url_udf)."""
+    if u is None:
+        return {"url": None, "url_canon": None, "host": None}
+    try:
+        # None for unparsable/bracketed hosts (the single shared
+        # chain — kernel.rfc3986.normalize_frontier_url)
+        canon = normalize_frontier_url(u)
+    except Exception:
+        canon = None
+    return {"url": u, "url_canon": canon, "host": get_host_lower(u)}
+
+
+@pandas_udf(URL_STRUCT)
+def url_columns_udf(urls: pd.Series) -> pd.DataFrame:
+    """Arrow-batched :func:`url_columns` over a URL column."""
+    return pd.DataFrame([url_columns(u) for u in urls],
+                        columns=URL_STRUCT.fieldNames())
+
+
+@pandas_udf(ArrayType(URL_STRUCT))
 def extract_normalize_udf(spans: pd.Series) -> pd.Series:
-    """Fused extract + full normalization chain in ONE Arrow pass:
+    """Fused extract + :func:`url_columns` in ONE Arrow pass:
     spans -> [(url, url_canon, host)]. On the crawl hot path this halves the
     JVM<->Python round trips vs extract_links_udf followed by a separate
-    normalize UDF over the exploded candidates (the exploded stream is the
-    largest relation in an iteration). Unparsable URLs get null url_canon
-    (filtered downstream, same rule as normalize_url_udf)."""
-
-    def one(spans_row):
-        out = []
-        for u in extract_links(spans_row):
-            host = get_host_lower(u)
-            try:
-                # None for unparsable/bracketed hosts (the single shared
-                # chain — kernel.rfc3986.normalize_frontier_url)
-                canon = normalize_frontier_url(u)
-            except Exception:
-                canon = None
-            out.append({"url": u, "url_canon": canon, "host": host})
-        return out
-
-    return spans.map(one)
+    projection over the exploded candidates (the exploded stream is the
+    largest relation in an iteration)."""
+    return spans.map(lambda row: [url_columns(u) for u in extract_links(row)])

@@ -249,7 +249,7 @@ def robots_filter(candidates: DataFrame, robots: DataFrame,
     table grows with DISTINCT HOSTS (10^7-10^8 at north_rule scale), so the
     hint is size-gated (scaling.broadcast_if_small). ``est_rows`` is the
     caller-known robots row count (the crawl loop probes once per run);
-    when None a bounded probe decides. Uses url (raw) path.
+    when None a bounded probe decides. Uses the url's raw path.
 
     Default mode: drop candidates whose path matches any disallow rule
     (allow rows ignored) — the crawl loop's parity semantics (the
@@ -273,10 +273,13 @@ def robots_filter(candidates: DataFrame, robots: DataFrame,
     rows across recomputed partitions), and duplicate candidate rows
     pass through independently like the default mode.
     """
-    # try_parse_url: ANSI parse_url throws on malformed URLs (web-scale
-    # candidate streams always contain some)
-    _parse = getattr(F, "try_parse_url", F.parse_url)
-    path = F.coalesce(_parse(F.col("url"), F.lit("PATH")), F.lit("/"))
+    # the raw path by kernel/crawl_oracle.raw_path's rule: after the FIRST
+    # '://' and the authority, up to '?'/'#'; '/' when there is none.
+    # parse_url returns NULL for URLs java.net.URI rejects (e.g. a '|' in
+    # the path), which would test '/' instead of the real path.
+    raw = F.regexp_extract(F.col("url"),
+                           r"(?s)^(?>.*?://)[^/?#]*+(/[^?#]*)", 1)
+    path = F.coalesce(F.nullif(raw, F.lit("")), F.lit("/"))
 
     # pattern -> anchored regex, built once per DIMENSION row (never per
     # candidate): escape every regex metachar, then '\*' -> '.*' and a

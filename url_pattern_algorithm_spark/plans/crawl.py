@@ -1,11 +1,28 @@
 """The frontier crawl loop: iterative batch over checkpoint tables (north_rule).
 
-One iteration (all DataFrame ops, nothing frontier-scale on the driver):
+Every URL the loop admits has ONE projection to (url, url_canon, host):
+the kernel's per-URL function ``functions.links.url_columns`` — applied by
+``url_columns_udf`` to seeds and to takedown/recrawl requests, and inside
+the fused link UDF to extracted links — plus the built-in xxhash64 of the
+canonical form. A URL therefore gets the same host and hash wherever it
+enters (the reference parses each URL once, ProcessedUrl.java:90-96).
+
+Seeds (iteration 0) and links (iteration N) then share one candidate
+pipeline and one state commit:
+
+    candidates -> robots filter -> cuckoo prefilter + anti-join seen filter
+               -> dedup on url_hash, max(priority)     = new frontier rows
+    commit: seen delta, then pending / host_state / cuckoo snapshots
+            (concurrent writers), then the iteration's _metrics rows
+
+Iteration 0 has no prior state: nothing is seen, the cuckoo snapshot is
+built instead of updated and every host starts with fresh tokens. Seeds
+keep their given priority; iteration-N links get 1/(N+1). Iteration N's
+candidates come from the state as of N-1:
 
     pending ⋈ politeness budgets -> salted priority top-k  = scheduled batch
     scheduled -> deterministic fetch (url_hash -> doc)     = fetched docs
-    docs -> extract_links -> normalize -> robots filter
-         -> cuckoo prefilter + anti-join seen filter       = new frontier rows
+    docs -> extract links (fused with the URL projection)  = candidates
     state' = (pending - scheduled + new, seen + new, token buckets debited)
 
 State-table I/O is sized for a 10^10-key frontier:
@@ -46,8 +63,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from url_pattern_algorithm_spark.functions.links import extract_normalize_udf
-from url_pattern_algorithm_spark.functions.udfs import with_url_columns
+from url_pattern_algorithm_spark.functions.links import (
+    extract_normalize_udf,
+    url_columns_udf,
+)
 from url_pattern_algorithm_spark.operators.cuckoo import (
     build_cuckoo,
     delete_from_cuckoos,
@@ -64,6 +83,9 @@ from url_pattern_algorithm_spark.operators.frontier import (
 from url_pattern_algorithm_spark.scaling import (
     BROADCAST_MAX_ROWS,
     broadcast_if_small,
+    derive_bloom_buckets,
+    derive_pending_hbuckets,
+    derive_salts,
 )
 from url_pattern_algorithm_spark.sources.catalog import Catalog
 from url_pattern_algorithm_spark.sources.synthetic import _mix
@@ -148,20 +170,23 @@ def read_seen(cat: Catalog, upto: int) -> DataFrame:
     return s.filter((F.col("epoch") <= upto) & (F.col("first_iter") <= upto))
 
 
-def _write_seen_delta(cat: Catalog, rows: DataFrame, run_id: str,
-                      iteration: int, n_buckets: int) -> int:
-    """Append one iteration's delta: dynamic overwrite of ``epoch=i`` only.
-
-    The delta is repartitioned by bucket first so each (epoch, bucket)
-    partition gets exactly one file per iteration."""
-    delta = rows.select(
+def _seen_delta(rows: DataFrame, iteration: int, n_buckets: int) -> DataFrame:
+    """Seen-table rows for ``rows`` first seen at ``iteration``,
+    repartitioned by bucket so each (epoch, bucket) partition gets exactly
+    one file per write."""
+    return rows.select(
         "url_hash", "url_canon",
         F.lit(iteration).alias("first_iter"),
         F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
         F.lit(iteration).alias("epoch"),
     ).repartition(n_buckets, "bucket")
+
+
+def _write_seen_delta(cat: Catalog, rows: DataFrame, run_id: str,
+                      iteration: int, n_buckets: int) -> int:
+    """Append one iteration's delta: dynamic overwrite of ``epoch=i`` only."""
     return cat.write_checkpoint(
-        delta, "seen", run_id, iteration,
+        _seen_delta(rows, iteration, n_buckets), "seen", run_id, iteration,
         partition_by=["epoch", "bucket"], dynamic=True,
     )
 
@@ -249,13 +274,13 @@ def _read_crawl_meta(cat: Catalog) -> dict:
         return json.load(f)
 
 
-def _stamp(filters: DataFrame, run_id: str, iteration: int) -> DataFrame:
-    """Lineage columns for a cuckoo snapshot rewritten outside
-    write_checkpoint; coalesce: n_buckets rows never need 32 files."""
-    return (filters.withColumn("run_id", F.lit(run_id))
-            .withColumn("iteration", F.lit(iteration))
-            .withColumn("partition_id", F.spark_partition_id())
-            .coalesce(4))
+def _url_columns(df: DataFrame, urls, *keep: str) -> DataFrame:
+    """The loop's one URL projection: ``urls`` is a (url, url_canon, host)
+    struct column from the kernel's per-URL function (``url_columns_udf``,
+    or the exploded fused link UDF); flattened, with the ``keep`` columns
+    carried along, + ``url_hash`` (built-in xxhash64, JVM-side)."""
+    return (df.select(urls.alias("_u"), *keep).select("_u.*", *keep)
+            .withColumn("url_hash", F.xxhash64("url_canon")))
 
 
 def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
@@ -268,8 +293,8 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     puts the URL back on the frontier directly.
 
     ``urls``: DataFrame with a ``url_hash`` column, or a ``url`` column
-    (projected through the same normalize kernel the loop uses, so the
-    hash always matches what the loop stored).
+    (projected by the loop's own per-URL function, so the hash always
+    matches what the loop stored).
 
     Hashes still in the latest pending snapshot are SKIPPED: a pending URL
     is already awaiting its first fetch, and removing its seen row would
@@ -301,7 +326,7 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     n_buckets = int(meta["bloom_buckets"])
     last = int(meta.get("last_iteration", 0))
     if "url_hash" not in urls.columns:
-        urls = with_url_columns(urls)
+        urls = _url_columns(urls, url_columns_udf("url"))
     hashes = urls.select("url_hash").distinct()
     with cat.rewrite_lock("seen"):
         # hashes actually stored and NOT awaiting first fetch (bounded by
@@ -326,11 +351,11 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
                 if cat.exists(snap):
                     # rename-aside rewrite, not an in-place overwrite: a
                     # crash mid-write must leave a readable snapshot
-                    cat.rewrite(snap, lambda df: _stamp(
+                    cat.rewrite(snap, lambda df: cat.stamp(
                         delete_from_cuckoos(
                             df.select("bucket", "nb", "table", "stash"),
                             present, n_buckets,
-                        ), run_id, last))
+                        ).coalesce(4), run_id, last))
         finally:
             present.unpersist()
     return n
@@ -358,26 +383,29 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     O(|restored|) incremental insert; keys are guaranteed absent (they
     were deleted when unseen), so the insert-once contract holds.
 
-    ``urls`` accepts the same shapes as :func:`unsee_urls`.
+    ``urls``: a ``url`` column, or ``(url_hash, url_canon)`` as the loop
+    stored them. Either way the host comes from the loop's per-URL
+    function; the pending row's ``url`` is the canonical form.
     """
     cat = Catalog(spark, ckpt_root)
     meta = _read_crawl_meta(cat)
     n_buckets = int(meta["bloom_buckets"])
     last = int(meta.get("last_iteration", 0))
     if "url_hash" not in urls.columns:
-        urls = with_url_columns(urls)
-    if "url_canon" not in urls.columns:
+        req = _url_columns(urls, url_columns_udf("url"))
+    elif "url_canon" in urls.columns:
+        # the stored hash and canonical form are kept as given: the
+        # canonical form is not a normalization fixpoint for every URL
+        # (>= 10 path tokens, tests/test_properties.py)
+        req = urls.withColumn("host", url_columns_udf("url_canon")["host"])
+    else:
         raise ValueError(
             "reenqueue_urls needs a 'url' column or both "
             "('url_hash', 'url_canon'): pending rows carry the canonical "
             "URL and host, which a bare hash cannot reconstruct"
         )
-    parse_host = getattr(F, "try_parse_url", F.parse_url)
-    req = (
-        urls.select("url_hash", "url_canon").distinct()
-        .withColumn("host", F.lower(parse_host(F.col("url_canon"),
-                                               F.lit("HOST"))))
-    )
+    req = (req.filter(F.col("url_canon").isNotNull())
+           .select("url_hash", "url_canon", "host").distinct())
     pname = f"pending_{last}"
     # no table-wide lock here: each append registers a writer marker, which
     # already excludes a concurrent compaction (and the filter rewrite takes
@@ -398,33 +426,20 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
             if restore.count():
                 snap = f"cuckoo_{last}"
                 if cat.exists(snap):
-                    cat.rewrite(snap, lambda df: _stamp(
+                    cat.rewrite(snap, lambda df: cat.stamp(
                         update_cuckoos(
                             df.select("bucket", "nb", "table", "stash"),
                             restore.select("url_hash"), n_buckets,
                             nb=int(meta["cuckoo_nb"]),
-                        ), run_id, last))
-                seen_cols = cat.read("seen").columns
-                seen_delta = (
-                    restore.select(
-                        "url_hash", "url_canon",
-                        F.lit(last).alias("first_iter"),
-                        F.pmod(F.col("url_hash"), F.lit(n_buckets))
-                         .cast("int").alias("bucket"),
-                        F.lit(last).alias("epoch"),
-                        F.lit(run_id).alias("run_id"),
-                        F.lit(last).alias("iteration"),
-                        F.spark_partition_id().alias("partition_id"),
-                    ).select(*seen_cols)
-                )
+                        ).coalesce(4), run_id, last))
                 # append, NOT the loop's dynamic epoch overwrite — the
                 # epoch=last partition already holds that iteration's
                 # organic delta and must survive
-                cat.append(seen_delta, "seen",
-                           partition_by=["epoch", "bucket"])
+                cat.append(cat.stamp(_seen_delta(restore, last, n_buckets),
+                                     run_id, last),
+                           "seen", partition_by=["epoch", "bucket"])
         finally:
             restore.unpersist()
-        pend_cols = cat.read(pname).columns
         rows = _with_hbucket(
             todo.select(
                 F.col("url_canon").alias("url"), "url_canon",
@@ -434,31 +449,27 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
             ),
             # hbucket is file-layout only (reads select PENDING_COLS by
             # name), so the default bucket count is safe even when the
-            # run derived a different pending_hbuckets
-            hbuckets=PENDING_HBUCKETS,
-        ).select(*[
-            c if c not in ("run_id", "iteration", "partition_id")
-            else {
-                "run_id": F.lit(run_id).alias("run_id"),
-                "iteration": F.lit(last).alias("iteration"),
-                "partition_id":
-                    F.spark_partition_id().alias("partition_id"),
-            }[c]
-            for c in pend_cols
-        ])
-        cat.append(rows, pname, partition_by=["hbucket"])
+            # run derived a different one from n_docs
+        )
+        cat.append(cat.stamp(rows, run_id, last), pname,
+                   partition_by=["hbucket"])
     finally:
         todo.unpersist()
     return n
 
 
 def _seen_count_from_metrics(cat: Catalog) -> int | None:
-    """Total seen-set size from the lineage metrics table (one tiny file
-    read, no data scan): seen deltas are exact-once inserts, so the sum of
-    per-iteration 'seen' row counts IS the table size. unsee_urls removals
-    and reenqueue restores bypass metrics, so the figure can overestimate
-    slightly after purges — conservative in the direction growth sizing
-    wants."""
+    """Seen-set size estimate from the lineage metrics table (one tiny file
+    read, no data scan): the sum of per-iteration 'seen' row counts. Seen
+    deltas are exact-once inserts, so without maintenance ops it IS the
+    table size. unsee_urls and reenqueue_urls write no metrics rows, so
+    after them it can be off in EITHER direction: purges make it
+    overestimate, and restores make it underestimate — reenqueue_urls
+    restores every request missing from seen, including URLs the loop
+    never saw. The figure only sizes the filter, and the filter stays
+    exact at any size: keys a full table cannot place go to the stash
+    (probed like the table), and every maybe-seen candidate still goes
+    through the anti-join against the seen table."""
     if not cat.exists("_metrics"):
         return None
     row = (cat.read("_metrics").filter(F.col("table") == "seen")
@@ -492,9 +503,9 @@ def _maybe_grow_prefilter(cat: Catalog, it: int, n_buckets: int, nb: int,
     # self-heals any size mismatch against the meta
     # (_heal_prefilter_size_mismatch)
     if new_nb > nb:
-        cat.rewrite(f"cuckoo_{it}", lambda _old: _stamp(
-            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb),
-            run_id, it,
+        cat.rewrite(f"cuckoo_{it}", lambda _old: cat.stamp(
+            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb)
+            .coalesce(4), run_id, it,
         ))
     return new_nb
 
@@ -629,46 +640,108 @@ def _with_hbucket(pending: DataFrame,
 
 
 def _new_frontier_rows(
-    spark: SparkSession,
-    raw_candidates: DataFrame,
+    candidates: DataFrame,
     robots: DataFrame,
-    seen: DataFrame,
-    filters: DataFrame,
+    seen: DataFrame | None,
+    filters: DataFrame | None,
     discovered_iter: int,
     bloom_buckets: int = 64,
     est_robots: int | None = None,
     robots_mode: str = "any_disallow",
 ) -> DataFrame:
-    """candidates -> normalized, robots-filtered, unseen, deduped rows.
+    """Projected candidates (url, url_canon, host, url_hash, priority) ->
+    robots-filtered, unseen, deduped frontier rows (PENDING_COLS).
 
-    Accepts either raw (url) rows or pre-normalized (url, url_canon, host)
-    rows from the fused extract+normalize UDF (one Arrow pass on the hot
-    path). ``est_robots``: robots row count threaded from run_crawl's
+    ``seen``/``filters`` None: nothing is seen yet (iteration 0). The dedup
+    keeps the smallest url/url_canon/host and the LARGEST priority of each
+    url_hash. ``est_robots``: robots row count threaded from run_crawl's
     once-per-run probe so the robots broadcast size gate costs no
     per-iteration job. ``robots_mode``: 'any_disallow' (parity default) or
     'longest_match' (Google-spec precedence, operators/frontier.py)."""
-    if "url_canon" not in raw_candidates.columns:
-        cand = with_url_columns(raw_candidates)
-    else:
-        cand = raw_candidates.withColumn("url_hash", F.xxhash64("url_canon"))
-    cand = cand.filter(F.col("url_canon").isNotNull())
+    cand = candidates.filter(F.col("url_canon").isNotNull())
     cand = robots_filter(cand, robots, est_rows=est_robots,
                          longest_match=robots_mode == "longest_match")
     cand = seen_filter_cuckoo(cand, seen, filters, bloom_buckets)
     # batch-internal dedup on the canonical hash; deterministic representative
-    dedup = cand.groupBy("url_hash").agg(
+    return cand.groupBy("url_hash").agg(
         F.min("url").alias("url"),
         F.min("url_canon").alias("url_canon"),
         F.min("host").alias("host"),
-    )
-    return dedup.select(
-        "url",
-        "url_canon",
-        "url_hash",
-        "host",
-        F.lit(1.0 / (discovered_iter + 1.0)).alias("priority"),
-        F.lit(discovered_iter).alias("discovered_iter"),
-    )
+        F.max("priority").alias("priority"),
+    ).select(*PENDING_COLS[:5], F.lit(discovered_iter).alias("discovered_iter"))
+
+
+def _commit(
+    cat: Catalog,
+    run_id: str,
+    iteration: int,
+    new_rows: DataFrame,
+    pending: DataFrame | None,
+    host_state: DataFrame | None,
+    filters: DataFrame | None,
+    n_docs: int,
+    bloom_buckets: int,
+    cuckoo_nb: int,
+    pol: Politeness,
+    delays: DataFrame | None,
+    est_robots: int | None,
+) -> int:
+    """Write iteration ``iteration``'s state from its new frontier rows and
+    the carried-over ``pending`` / ``host_state`` / cuckoo ``filters``
+    (all None at iteration 0); returns the host_state row count.
+
+    The new rows feed four writes, so they are persisted. The seen-delta
+    write runs FIRST: it is the cheapest job that touches every partition
+    of the candidate pipeline, so it pays the one-time UDF/dedup cost and
+    leaves the rows cached. pending_N, host_state_N and cuckoo_N then read
+    only cached/parquet inputs and target disjoint tables, so
+    _run_writers submits them as concurrent driver jobs. The buffered
+    _metrics rows are flushed last."""
+    new_rows = new_rows.persist()
+    _write_seen_delta(cat, new_rows, run_id, iteration, bloom_buckets)
+    n_hosts: list[int] = []
+
+    def write_pending() -> None:
+        rows = new_rows.select(*PENDING_COLS)
+        if pending is not None:
+            rows = pending.select(*PENDING_COLS).unionByName(rows)
+        cat.write_checkpoint(
+            _with_hbucket(rows, derive_pending_hbuckets(n_docs)),
+            f"pending_{iteration}", run_id, iteration,
+            partition_by=["hbucket"],
+        )
+
+    def write_prefilter() -> None:
+        # iteration 0 builds the filter, later ones insert their delta in
+        # one cogroup pass; coalesce: n_buckets rows never need 32 files
+        delta = new_rows.select("url_hash")
+        flt = (build_cuckoo(delta, bloom_buckets, nb=cuckoo_nb)
+               if filters is None
+               else update_cuckoos(filters, delta, bloom_buckets, cuckoo_nb))
+        cat.write_checkpoint(flt.coalesce(4), f"cuckoo_{iteration}", run_id,
+                             iteration)
+
+    def write_host_state() -> None:
+        hosts = new_rows.select("host").distinct()
+        if host_state is not None:
+            hosts = hosts.join(host_state.select("host"), "host", "left_anti")
+        rows = _with_crawl_delay(hosts, delays, est_robots).select(
+            "host",
+            F.lit(pol.tokens_init).alias("tokens"),
+            F.lit(iteration).alias("last_iter"),
+            "crawl_delay",
+        )
+        if host_state is not None:
+            rows = host_state.select(
+                "host", "tokens", "last_iter", "crawl_delay"
+            ).unionByName(rows)
+        n_hosts.append(cat.write_checkpoint(
+            rows, f"host_state_{iteration}", run_id, iteration))
+
+    _run_writers([write_pending, write_host_state, write_prefilter])
+    cat.flush_metrics()
+    new_rows.unpersist()
+    return n_hosts[0]
 
 
 def init_state(
@@ -677,64 +750,25 @@ def init_state(
     robots: DataFrame,
     cat: Catalog,
     run_id: str,
+    n_docs: int,
     pol: Politeness = DEFAULT_POLITENESS,
     bloom_buckets: int = 64,
     est_robots: int | None = None,
-    stats: dict | None = None,
-    hbuckets: int = PENDING_HBUCKETS,
     delays: DataFrame | None = None,
     robots_mode: str = "any_disallow",
     cuckoo_nb: int = 1 << 14,
-) -> None:
-    """Iteration 0: seed list -> pending snapshot + seen delta + the
-    iteration-0 seen-prefilter snapshot cuckoo_0.
-
-    ``stats`` (when given) receives ``n_hosts`` = host_state_0 row count,
-    which run_crawl threads into iteration 1's politeness size gate."""
-    cand = with_url_columns(seeds).filter(F.col("url_canon").isNotNull())
-    cand = robots_filter(cand, robots, est_rows=est_robots,
-                         longest_match=robots_mode == "longest_match")
-    pending = cand.groupBy("url_hash").agg(
-        F.min("url").alias("url"),
-        F.min("url_canon").alias("url_canon"),
-        F.min("host").alias("host"),
-        F.max("priority").alias("priority"),
-    ).select(*PENDING_COLS[:5], F.lit(0).alias("discovered_iter"))
-    # one UDF pass: pending feeds four checkpoint writes. pending_0 runs
-    # first (pays the UDF cost, fills the cache); the remaining three read
-    # only the cache and target disjoint tables -> concurrent driver jobs,
-    # same pattern as run_iteration's state writes.
-    pending = pending.persist()
-    cat.write_checkpoint(
-        _with_hbucket(pending, hbuckets), "pending_0", run_id, 0,
-        partition_by=["hbucket"],
+) -> int:
+    """Iteration 0: the seed list (url, priority) through the candidate
+    pipeline, then the commit, with no prior state. Returns the
+    host_state_0 row count, which run_crawl threads into iteration 1's
+    politeness size gate."""
+    cand = _url_columns(seeds, url_columns_udf("url"), "priority")
+    new_rows = _new_frontier_rows(
+        cand, robots, None, None, 0, bloom_buckets,
+        est_robots=est_robots, robots_mode=robots_mode,
     )
-
-    def write_seen() -> None:
-        _write_seen_delta(cat, pending, run_id, 0, bloom_buckets)
-
-    def write_prefilter() -> None:
-        flt0 = build_cuckoo(
-            pending.select("url_hash"), bloom_buckets, nb=cuckoo_nb
-        )
-        cat.write_checkpoint(flt0.coalesce(4), "cuckoo_0", run_id, 0)
-
-    def write_host_state() -> None:
-        host_state = _with_crawl_delay(
-            pending.select("host").distinct(), delays, est_robots
-        ).select(
-            "host",
-            F.lit(pol.tokens_init).alias("tokens"),
-            F.lit(0).alias("last_iter"),
-            "crawl_delay",
-        )
-        n = cat.write_checkpoint(host_state, "host_state_0", run_id, 0)
-        if stats is not None:
-            stats["n_hosts"] = n
-
-    _run_writers([write_seen, write_host_state, write_prefilter])
-    cat.flush_metrics()
-    pending.unpersist()
+    return _commit(cat, run_id, 0, new_rows, None, None, None, n_docs,
+                   bloom_buckets, cuckoo_nb, pol, delays, est_robots)
 
 
 def run_iteration(
@@ -745,26 +779,23 @@ def run_iteration(
     run_id: str,
     iteration: int,
     n_docs: int,
-    salts: int = 16,
     bloom_buckets: int = 64,
     pol: Politeness = DEFAULT_POLITENESS,
     est_hosts: int | None = None,
     est_robots: int | None = None,
-    stats: dict | None = None,
-    hbuckets: int = PENDING_HBUCKETS,
     delays: DataFrame | None = None,
     robots_mode: str = "any_disallow",
     cuckoo_nb: int = 1 << 14,
-) -> int:
-    """Advance one iteration from state as of ``iteration-1``; returns the
-    number of scheduled URLs.
+) -> tuple[int, int]:
+    """Advance one iteration from state as of ``iteration-1``; returns
+    (scheduled URLs, host_state row count) — the latter sizes the next
+    iteration's politeness gate.
 
     ``est_hosts``/``est_robots``: known dimension cardinalities for the
     politeness/robots broadcast size gates (run_crawl threads the previous
     iteration's host_state write count and a once-per-run robots probe, so
     warm iterations pay zero extra jobs; ``None`` falls back to a bounded
-    probe). ``stats`` (when given) receives ``n_hosts`` = this iteration's
-    host_state row count for the next iteration's gate."""
+    probe)."""
     prev = iteration - 1
     pending = cat.read(f"pending_{prev}").select(*PENDING_COLS)
     seen = read_seen(cat, prev).select("url_hash")
@@ -781,7 +812,11 @@ def run_iteration(
     frontier = pending.join(
         broadcast_if_small(budgets, est_hosts), "host", "inner"
     )
-    scheduled = schedule_top_k(frontier, F.col("budget"), salts=salts)
+    # worst-case skew assumption: one host could hold half the universe
+    # (salting is cheap to oversize — schedule results are
+    # salt-count-invariant, only partitioning moves)
+    scheduled = schedule_top_k(frontier, F.col("budget"),
+                               salts=derive_salts(n_docs // 2))
     scheduled = scheduled.persist()
     n_scheduled = cat.write_checkpoint(
         scheduled.select(*PENDING_COLS, "sched_rank"),
@@ -792,7 +827,7 @@ def run_iteration(
 
     # 2. debit token buckets; unknown hosts keep state
     spent = scheduled.groupBy("host").agg(F.count("*").alias("n_sched"))
-    new_host_state = (
+    debited = (
         budgets.join(spent, "host", "left")
         .na.fill({"n_sched": 0})
         .select(
@@ -803,79 +838,31 @@ def run_iteration(
         .join(host_state.select("host", "crawl_delay"), "host", "inner")
     )
 
-    # 3. fetch + extract + normalize + filter
+    # 3. fetch + extract + project + filter
     fetched = scheduled.withColumn(
         "doc_index", fetch_doc_index_udf(n_docs)(F.col("url_hash"))
     )
     # docs must carry a deterministic doc_index (run_crawl derives it from
     # doc_id); never monotonically_increasing_id — that's partition-dependent
     pages = fetched.join(docs, "doc_index", "inner")
-    raw_candidates = pages.select(
-        F.explode(extract_normalize_udf(F.col("spans"))).alias("l")
-    ).select("l.url", "l.url_canon", "l.host")
+    cand = _url_columns(
+        pages, F.explode(extract_normalize_udf(F.col("spans")))
+    ).withColumn("priority", F.lit(1.0 / (iteration + 1.0)))
     filters = _read_prefilter(cat, prev, bloom_buckets, cuckoo_nb)
     new_rows = _new_frontier_rows(
-        spark, raw_candidates, robots, seen, filters, iteration,
-        bloom_buckets, est_robots=est_robots, robots_mode=robots_mode,
+        cand, robots, seen, filters, iteration, bloom_buckets,
+        est_robots=est_robots, robots_mode=robots_mode,
     )
-    # the candidate pipeline (links UDF -> normalize UDF -> robots -> seen
-    # filter -> dedup shuffle) feeds pending_N, the seen delta, cuckoo_N
-    # and host_state_N: persist so it runs once, not four times
-    new_rows = new_rows.persist()
 
-    # 4. next state: pending/host_state snapshots + seen/filter DELTAS only.
-    # The seen-delta write runs FIRST: it is the cheapest job that touches
-    # every partition of the persisted candidate pipeline, so it pays the
-    # one-time UDF/dedup cost and leaves new_rows fully cached. The three
-    # remaining state writes read only cached/parquet inputs and target
-    # disjoint tables -> _run_writers submits them as concurrent driver jobs.
-    _write_seen_delta(cat, new_rows, run_id, iteration, bloom_buckets)
-
-    def write_pending() -> None:
-        remaining = pending.join(
-            scheduled.select("url_hash"), "url_hash", "left_anti"
-        ).select(*PENDING_COLS)
-        next_pending = remaining.unionByName(new_rows.select(*PENDING_COLS))
-        cat.write_checkpoint(
-            _with_hbucket(next_pending, hbuckets), f"pending_{iteration}",
-            run_id, iteration, partition_by=["hbucket"],
-        )
-
-    def write_prefilter() -> None:
-        # one cogroup pass inserts the delta into the stored filters;
-        # coalesce: n_buckets rows never need 32 files
-        next_flt = update_cuckoos(
-            filters, new_rows.select("url_hash"), bloom_buckets, cuckoo_nb
-        )
-        cat.write_checkpoint(next_flt.coalesce(4), f"cuckoo_{iteration}",
-                             run_id, iteration)
-
-    def write_host_state() -> None:
-        new_hosts = _with_crawl_delay(
-            new_rows.select("host").distinct()
-            .join(new_host_state.select("host"), "host", "left_anti"),
-            delays, est_robots,
-        ).select(
-            "host",
-            F.lit(pol.tokens_init).alias("tokens"),
-            F.lit(iteration).alias("last_iter"),
-            "crawl_delay",
-        )
-        n = cat.write_checkpoint(
-            new_host_state.select("host", "tokens", "last_iter", "crawl_delay")
-            .unionByName(new_hosts),
-            f"host_state_{iteration}",
-            run_id,
-            iteration,
-        )
-        if stats is not None:
-            stats["n_hosts"] = n
-
-    _run_writers([write_pending, write_host_state, write_prefilter])
-    cat.flush_metrics()
-    new_rows.unpersist()
+    # 4. next state: pending minus the scheduled batch, debited buckets
+    remaining = pending.join(
+        scheduled.select("url_hash"), "url_hash", "left_anti"
+    )
+    n_hosts = _commit(cat, run_id, iteration, new_rows, remaining, debited,
+                      filters, n_docs, bloom_buckets, cuckoo_nb, pol, delays,
+                      est_robots)
     scheduled.unpersist()
-    return n_scheduled
+    return n_scheduled, n_hosts
 
 
 def run_crawl(
@@ -888,17 +875,21 @@ def run_crawl(
     iterations: int = 3,
     run_id: str = "run1",
     resume_from: int | None = None,
-    salts: int | None = 16,
     bloom_buckets: int | None = 64,
     compact_every: int = 0,
     prune_history: bool = False,
     pol: Politeness = DEFAULT_POLITENESS,
-    pending_hbuckets: int | None = None,
     robots_mode: str = "any_disallow",
     prefilter_kind: str = "cuckoo",  # perfbench passes it; only "cuckoo"
     cuckoo_nb: int | None = None,
 ) -> dict[int, int]:
     """Run (or resume) the crawl; returns {iteration: n_scheduled}.
+
+    ``seeds``: (url, priority) rows. A fresh run admits them as iteration 0
+    through the same URL projection, candidate pipeline and state commit
+    as every later iteration's links (module docstring): a seed without a
+    parsable scheme://host is dropped, robots applies, and seeds with one
+    canonical URL collapse to one row with the largest priority.
 
     ``resume_from=k`` skips init and iterations <= k, reading state as of k —
     byte-identical continuation (F6 resume test; the seen delta write is
@@ -927,14 +918,15 @@ def run_crawl(
     changes (it is baked into the seen table layout). A resume of a root
     written by an older Bloom-prefilter or no-prefilter build finds no
     ``cuckoo_k`` snapshot and rebuilds it once from the seen table; the
-    schedule is unchanged. ``pending_hbuckets``
-    (the pending snapshots' host-hash partition count) likewise derives from
-    ``n_docs`` by default — 8192 dirs at 10^10, the 16 sandbox constant
-    below ~10^7. ``salts=None`` derives the top-k salt factor the same way
-    (scaling.derive_salts under a worst-case one-host-holds-half skew
-    assumption: 4096-way at 10^10, the reference's 80-way analogue); the
-    schedule OUTPUT is salt-count invariant (tests pin it), so the tested
-    16 stays the explicit default.
+    schedule is unchanged.
+
+    Two sizes always derive from ``n_docs``: the pending snapshots'
+    host-hash partition count (scaling.derive_pending_hbuckets: 8192 dirs
+    at 10^10) and the top-k salt factor (scaling.derive_salts under a
+    worst-case one-host-holds-half skew assumption: 4096-way at 10^10, the
+    reference's 80-way analogue). Both are 16 for every ``n_docs`` up to
+    10^7, and the schedule OUTPUT does not depend on either (tests pin the
+    salt-count invariance).
 
     ``robots_mode``: 'any_disallow' (the reference-parity default: a
     candidate dies if ANY disallow rule matches; allow rows ignored) or
@@ -942,21 +934,10 @@ def run_crawl(
     operators/frontier.robots_filter longest_match=True). Both modes are
     oracle-parity-tested end-to-end (tests/test_crawl_parity.py).
     """
-    from url_pattern_algorithm_spark.scaling import (
-        derive_bloom_buckets,
-        derive_pending_hbuckets,
-        derive_salts,
-    )
-
     if robots_mode not in ("any_disallow", "longest_match"):
         raise ValueError(f"unknown robots_mode: {robots_mode!r}")
     if prefilter_kind != "cuckoo":
         raise ValueError(f"unknown prefilter_kind: {prefilter_kind!r}")
-    if salts is None:
-        # worst-case skew assumption: one host could hold half the universe
-        # (the synthetic hot host holds ~50%; salting is cheap to oversize —
-        # schedule results are salt-count-invariant, only partitioning moves)
-        salts = derive_salts(n_docs // 2)
     cat = Catalog(spark, ckpt_root)
     # a resume adopts the checkpoint's stored prefilter sizes for any the
     # caller left None: compaction-time rescaling (_maybe_grow_prefilter)
@@ -971,8 +952,6 @@ def run_crawl(
     if bloom_buckets is None:
         bloom_buckets = stored_meta.get("bloom_buckets") or \
             derive_bloom_buckets(n_docs)
-    if pending_hbuckets is None:
-        pending_hbuckets = derive_pending_hbuckets(n_docs)
     if cuckoo_nb is None:
         cuckoo_nb = stored_meta.get("cuckoo_nb") or \
             derive_cuckoo_nb(n_docs, bloom_buckets)
@@ -996,8 +975,8 @@ def run_crawl(
     try:
         return _run_crawl_inner(
             spark, docs, seeds, robots, cat, n_docs, iterations, run_id,
-            resume_from, salts, bloom_buckets, compact_every, prune_history,
-            pol, pending_hbuckets, robots_mode, cuckoo_nb,
+            resume_from, bloom_buckets, compact_every, prune_history,
+            pol, robots_mode, cuckoo_nb,
         )
     finally:
         if parsed_robots is not None:
@@ -1014,12 +993,10 @@ def _run_crawl_inner(
     iterations: int,
     run_id: str,
     resume_from: int | None,
-    salts: int,
     bloom_buckets: int,
     compact_every: int,
     prune_history: bool,
     pol: Politeness,
-    pending_hbuckets: int,
     robots_mode: str,
     cuckoo_nb: int,
 ) -> dict[int, int]:
@@ -1059,13 +1036,12 @@ def _run_crawl_inner(
                 cat.drop(name)
         _write_run_meta(cat, bloom_buckets, robots_mode=robots_mode,
                         cuckoo_nb=cuckoo_nb)
-        init_stats: dict = {}
-        init_state(spark, seeds, robots, cat, run_id, pol,
-                   bloom_buckets=bloom_buckets, est_robots=est_robots,
-                   stats=init_stats, hbuckets=pending_hbuckets,
-                   delays=delays, robots_mode=robots_mode,
-                   cuckoo_nb=cuckoo_nb)
-        est_hosts = init_stats.get("n_hosts")
+        # perfbench wraps init_state by name and ends its set-up at the
+        # first run_iteration call, so iteration 0 stays a separate call
+        est_hosts = init_state(spark, seeds, robots, cat, run_id, n_docs, pol,
+                               bloom_buckets=bloom_buckets,
+                               est_robots=est_robots, delays=delays,
+                               robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
     else:
         _check_run_meta(cat, bloom_buckets, resume_from,
                         robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
@@ -1079,17 +1055,14 @@ def _run_crawl_inner(
             )
         start = resume_from + 1
     for it in range(start, iterations + 1):
-        it_stats: dict = {}
         # looked up at call time: perfbench swaps run_iteration for its
         # step probe
-        counts[it] = run_iteration(
-            spark, docs, robots, cat, run_id, it, n_docs, salts,
+        counts[it], est_hosts = run_iteration(
+            spark, docs, robots, cat, run_id, it, n_docs,
             bloom_buckets=bloom_buckets, pol=pol,
-            est_hosts=est_hosts, est_robots=est_robots, stats=it_stats,
-            hbuckets=pending_hbuckets, delays=delays, robots_mode=robots_mode,
-            cuckoo_nb=cuckoo_nb,
+            est_hosts=est_hosts, est_robots=est_robots,
+            delays=delays, robots_mode=robots_mode, cuckoo_nb=cuckoo_nb,
         )
-        est_hosts = it_stats.get("n_hosts")
         _write_run_meta(cat, bloom_buckets, it, robots_mode=robots_mode,
                         cuckoo_nb=cuckoo_nb)
         if compact_every and it % compact_every == 0:

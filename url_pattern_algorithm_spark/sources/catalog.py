@@ -379,6 +379,15 @@ class Catalog:
             name, lambda df: df.coalesce(target_partitions), partition_by
         )
 
+    @staticmethod
+    def stamp(df: DataFrame, run_id: str, iteration: int) -> DataFrame:
+        """``df`` + the lineage columns every checkpoint row carries; for
+        rows that reach a table through :meth:`append` or :meth:`rewrite`
+        rather than :meth:`write_checkpoint` (no ``_metrics`` row)."""
+        return (df.withColumn("run_id", F.lit(run_id))
+                .withColumn("iteration", F.lit(iteration))
+                .withColumn("partition_id", F.spark_partition_id()))
+
     def write_checkpoint(
         self,
         df: DataFrame,
@@ -398,12 +407,8 @@ class Catalog:
         ``GROUP BY run_id, iteration, partition_id``.
         """
         obs = Observation()
-        stamped = (
-            df.withColumn("run_id", F.lit(run_id))
-            .withColumn("iteration", F.lit(iteration))
-            .withColumn("partition_id", F.spark_partition_id())
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
-        )
+        stamped = self.stamp(df, run_id, iteration).observe(
+            obs, F.count(F.lit(1)).alias("rows"))
         self.write(stamped, name, partition_by=partition_by, dynamic=dynamic)
         n = int(obs.get["rows"])
         self._metrics_buf.append((run_id, iteration, name, n))
