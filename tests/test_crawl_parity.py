@@ -291,6 +291,51 @@ def test_fresh_run_wipes_orphaned_compact_old(crawl_run, tmp_path):
         Catalog(spark, ckpt), ITERS).count()
 
 
+def test_iteration_runs_each_udf_once(crawl_run, tmp_path, monkeypatch):
+    # the fetch and link UDFs run once per scheduled URL / fetched doc: no
+    # state write drops a cached frame that a later write still reads, and
+    # the prefilter's two branches share one candidate build
+    from collections.abc import Iterator
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from url_pattern_algorithm_spark.plans import crawl
+
+    spark, _, _, _, docs, seeds, robots = crawl_run
+    sc = spark.sparkContext
+    link_rows = sc.accumulator(0)
+    fetch_rows = sc.accumulator(0)
+    extract = crawl.extract_normalize_udf
+    fetch = crawl.fetch_doc_index_udf
+
+    def counted_extract(spans: pd.Series) -> pd.Series:
+        link_rows.add(len(spans))
+        return extract.func(spans)
+
+    def counted_fetch(n_docs):
+        inner = fetch(n_docs).func
+
+        def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+            def counted():
+                for s in batches:
+                    fetch_rows.add(len(s))
+                    yield s
+
+            return inner(counted())
+
+        return F.pandas_udf(fn, "long")
+
+    monkeypatch.setattr(crawl, "extract_normalize_udf",
+                        F.pandas_udf(counted_extract, extract.returnType))
+    monkeypatch.setattr(crawl, "fetch_doc_index_udf", counted_fetch)
+    counts = run_crawl(spark, docs, seeds, robots, str(tmp_path / "once"),
+                       N_DOCS, iterations=ITERS)
+    n_scheduled = sum(counts[it] for it in range(1, ITERS + 1))
+    assert n_scheduled > 0
+    assert (link_rows.value, fetch_rows.value) == (n_scheduled, n_scheduled)
+
+
 def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
     # with concurrent state writes, a mid-iteration crash can leave ANY
     # subset of the iteration's tables written; _run_meta's last_iteration
@@ -304,32 +349,42 @@ def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
     root = str(tmp_path / "crashed")
     run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS)
-    # simulate the crash inside iteration ITERS: the seen delta + pending
-    # snapshot landed, host_state/cuckoo/scheduled did not, meta still at
-    # ITERS-1 (it is only written after the writer pool joins)
-    for name in (f"host_state_{ITERS}", f"cuckoo_{ITERS}",
-                 f"scheduled_{ITERS}"):
-        shutil.rmtree(os.path.join(root, name))
-    meta_path = os.path.join(root, "_run_meta.json")
-    meta = json.load(open(meta_path))
-    meta["last_iteration"] = ITERS - 1
-    json.dump(meta, open(meta_path, "w"))
-
-    counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
-                        iterations=ITERS, resume_from=ITERS - 1,
-                        run_id="recovered")
-    assert counts2[ITERS] == counts[ITERS]
-    assert _spark_scheduled(spark, root, ITERS) == _spark_scheduled(
-        spark, ckpt, ITERS
+    want_count = Catalog(spark, ckpt).read("seen").count()
+    # each crash inside iteration ITERS leaves meta at ITERS-1 (it is only
+    # written after the commit returns); the recovered root of one case is
+    # the uninterrupted state the next case crashes from
+    crashes = (
+        # the seen delta + pending snapshot landed, host_state/cuckoo/
+        # scheduled did not
+        [f"host_state_{ITERS}", f"cuckoo_{ITERS}", f"scheduled_{ITERS}"],
+        # the commit writes the seen delta after pending/host_state/cuckoo:
+        # every snapshot landed, the seen epoch did not
+        [os.path.join("seen", f"epoch={ITERS}")],
     )
-    cat = Catalog(spark, root)
-    got = {
-        (r["url_hash"], r["first_iter"])
-        for r in read_seen(cat, ITERS).select("url_hash", "first_iter").collect()
-    }
-    assert got == set(oracle.seen.items())
-    # the partial epoch was overwritten, not doubled
-    assert cat.read("seen").count() == len(got)
+    for lost in crashes:
+        for name in lost:
+            shutil.rmtree(os.path.join(root, name))
+        meta_path = os.path.join(root, "_run_meta.json")
+        meta = json.load(open(meta_path))
+        meta["last_iteration"] = ITERS - 1
+        json.dump(meta, open(meta_path, "w"))
+
+        counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                            iterations=ITERS, resume_from=ITERS - 1,
+                            run_id="recovered")
+        assert counts2[ITERS] == counts[ITERS], lost
+        assert _spark_scheduled(spark, root, ITERS) == _spark_scheduled(
+            spark, ckpt, ITERS
+        ), lost
+        cat = Catalog(spark, root)
+        got = {
+            (r["url_hash"], r["first_iter"])
+            for r in read_seen(cat, ITERS)
+            .select("url_hash", "first_iter").collect()
+        }
+        assert got == set(oracle.seen.items()), lost
+        # the partial epoch was overwritten (or written), not doubled
+        assert cat.read("seen").count() == len(got) == want_count, lost
 
 
 def test_prune_history_bounds_snapshots_and_resumes(crawl_run, tmp_path):

@@ -17,6 +17,7 @@ exec spark-submit \
   --conf spark.sql.shuffle.partitions="${SHUFFLE:-32}" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
+  --conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --py-files "$ZIP" \
   tools/crawl_job.py --ckpt "$CKPT" "$@"

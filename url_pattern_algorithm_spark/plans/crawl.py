@@ -12,8 +12,8 @@ pipeline and one state commit:
 
     candidates -> robots filter -> cuckoo prefilter + anti-join seen filter
                -> dedup on url_hash, max(priority)     = new frontier rows
-    commit: seen delta, then pending / host_state / cuckoo snapshots
-            (concurrent writers), then the iteration's _metrics rows
+    commit: pending / host_state / cuckoo snapshots (concurrent writers),
+            then the seen delta, then the iteration's _metrics rows
 
 Iteration 0 has no prior state: nothing is seen, the cuckoo snapshot is
 built instead of updated and every host starts with fresh tokens. Seeds
@@ -690,15 +690,16 @@ def _commit(
     the carried-over ``pending`` / ``host_state`` / cuckoo ``filters``
     (all None at iteration 0); returns the host_state row count.
 
-    The new rows feed four writes, so they are persisted. The seen-delta
-    write runs FIRST: it is the cheapest job that touches every partition
-    of the candidate pipeline, so it pays the one-time UDF/dedup cost and
-    leaves the rows cached. pending_N, host_state_N and cuckoo_N then read
-    only cached/parquet inputs and target disjoint tables, so
-    _run_writers submits them as concurrent driver jobs. The buffered
-    _metrics rows are flushed last."""
+    The new rows feed four writes, so they are persisted. pending_N,
+    host_state_N and cuckoo_N read only cached/parquet inputs and target
+    disjoint tables, so _run_writers submits them as concurrent driver
+    jobs; the first of them to reach a partition of the rows builds it
+    once. The seen delta is written LAST: a write to ``seen`` drops the
+    cache of every persisted frame that reads it (Spark recaches by path),
+    and the new rows read it through the seen filter, so writing it first
+    would make the writers build them again. The buffered _metrics rows
+    are flushed after all four writes."""
     new_rows = new_rows.persist()
-    _write_seen_delta(cat, new_rows, run_id, iteration, bloom_buckets)
     n_hosts: list[int] = []
 
     def write_pending() -> None:
@@ -739,6 +740,7 @@ def _commit(
             rows, f"host_state_{iteration}", run_id, iteration))
 
     _run_writers([write_pending, write_host_state, write_prefilter])
+    _write_seen_delta(cat, new_rows, run_id, iteration, bloom_buckets)
     cat.flush_metrics()
     new_rows.unpersist()
     return n_hosts[0]
@@ -817,7 +819,12 @@ def run_iteration(
     # salt-count-invariant, only partitioning moves)
     scheduled = schedule_top_k(frontier, F.col("budget"),
                                salts=derive_salts(n_docs // 2))
-    scheduled = scheduled.persist()
+    # fetch inside the persisted batch: computed after it, the docs join's
+    # inferred isnotnull(doc_index) filter would run the UDF again on every
+    # read of the batch
+    scheduled = scheduled.withColumn(
+        "doc_index", fetch_doc_index_udf(n_docs)(F.col("url_hash"))
+    ).persist()
     n_scheduled = cat.write_checkpoint(
         scheduled.select(*PENDING_COLS, "sched_rank"),
         f"scheduled_{iteration}",
@@ -838,16 +845,15 @@ def run_iteration(
         .join(host_state.select("host", "crawl_delay"), "host", "inner")
     )
 
-    # 3. fetch + extract + project + filter
-    fetched = scheduled.withColumn(
-        "doc_index", fetch_doc_index_udf(n_docs)(F.col("url_hash"))
-    )
-    # docs must carry a deterministic doc_index (run_crawl derives it from
-    # doc_id); never monotonically_increasing_id — that's partition-dependent
-    pages = fetched.join(docs, "doc_index", "inner")
+    # 3. extract + project the fetched docs, then filter. docs must carry a
+    # deterministic doc_index (run_crawl derives it from doc_id); never
+    # monotonically_increasing_id — that's partition-dependent. The
+    # candidates are persisted: the prefilter's sure-new and maybe-seen
+    # branches both read them, and would each run the link UDF otherwise
+    pages = scheduled.join(docs, "doc_index", "inner")
     cand = _url_columns(
         pages, F.explode(extract_normalize_udf(F.col("spans")))
-    ).withColumn("priority", F.lit(1.0 / (iteration + 1.0)))
+    ).withColumn("priority", F.lit(1.0 / (iteration + 1.0))).persist()
     filters = _read_prefilter(cat, prev, bloom_buckets, cuckoo_nb)
     new_rows = _new_frontier_rows(
         cand, robots, seen, filters, iteration, bloom_buckets,
@@ -861,6 +867,7 @@ def run_iteration(
     n_hosts = _commit(cat, run_id, iteration, new_rows, remaining, debited,
                       filters, n_docs, bloom_buckets, cuckoo_nb, pol, delays,
                       est_robots)
+    cand.unpersist()
     scheduled.unpersist()
     return n_scheduled, n_hosts
 

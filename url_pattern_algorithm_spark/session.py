@@ -5,8 +5,14 @@ Scale design (100 TB / 1000-executor target, tested on local[N]):
   reference's hand-tuned MR knobs (PatternJob.java:79-85).
 - Arrow on: every custom kernel crosses the JVM/Python boundary as Arrow
   batches (pandas UDFs), never row-at-a-time.
-- shuffle.partitions defaults to max(32, 2x cores) locally; on a real cluster
-  AQE coalesces from a deliberately high initial number.
+- shuffle.partitions is 32 (``SPARK_GRAFT_SHUFFLE`` or ``shuffle_partitions``
+  overrides it); AQE coalesces each shuffle from that initial number, and on
+  a real cluster the initial number is set deliberately high.
+- Cached plans may change their output partitioning. Spark's default pins a
+  persisted frame at its shuffle's initial partition count, so every Python
+  UDF stage reading one would run that many mostly-empty tasks; allowing the
+  change lets AQE coalesce the final stage of a persisted plan like any
+  other.
 """
 
 from __future__ import annotations
@@ -32,6 +38,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

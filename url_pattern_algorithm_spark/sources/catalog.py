@@ -12,6 +12,11 @@ Lineage columns stamped on every checkpoint write (FIXTURES.md F2):
 ``spark_partition_id()``), plus a per-write row-count metric appended to the
 ``_metrics`` table.
 
+Every write to a table drops the cache of every persisted frame that reads
+that table's path (Spark recaches by path after a file write), so a caller
+that keeps a frame persisted across writes must not write a table the frame
+reads until it is done with the frame.
+
 Concurrency semantics vs real Iceberg (tests/test_catalog.py pins these):
 
 - concurrent DYNAMIC overwrites of DISJOINT partitions merge, like two
