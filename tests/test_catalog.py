@@ -272,8 +272,7 @@ def test_compact_seen_between_iterations_unaffected_by_guard(spark, tmp_path):
             F.pmod(F.col("id"), F.lit(4)).cast("int").alias("bucket"),
             F.lit(it).alias("epoch"),
         )
-        cat.write_checkpoint(delta, "seen", "r", it,
-                             partition_by=["epoch", "bucket"], dynamic=True)
+        cat.write_checkpoint(delta, "seen", "r", it, dynamic=True)
     compact_seen(cat, 1, n_buckets=4)
     assert read_seen(cat, 1).count() == 20
 
@@ -301,8 +300,7 @@ def test_compact_seen_refused_before_watermark_side_effect(spark, tmp_path):
         F.pmod(F.col("id"), F.lit(4)).cast("int").alias("bucket"),
         F.lit(0).alias("epoch"),
     )
-    cat.write_checkpoint(delta, "seen", "r", 0,
-                         partition_by=["epoch", "bucket"], dynamic=True)
+    cat.write_checkpoint(delta, "seen", "r", 0, dynamic=True)
     marker = cat._register_writer("seen")
     try:
         with pytest.raises(RewriteConflict, match="writer.*in flight"):

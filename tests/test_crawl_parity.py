@@ -12,8 +12,13 @@ import os
 import pytest
 
 from url_pattern_algorithm_spark.kernel.crawl_oracle import run_oracle_crawl
-from url_pattern_algorithm_spark.plans.crawl import read_seen, run_crawl
-from url_pattern_algorithm_spark.sources.catalog import Catalog
+from url_pattern_algorithm_spark.plans.crawl import (
+    read_seen,
+    reenqueue_urls,
+    run_crawl,
+    unsee_urls,
+)
+from url_pattern_algorithm_spark.sources.catalog import TABLES, Catalog
 from url_pattern_algorithm_spark.sources.synthetic import (
     docs_df,
     robots_df,
@@ -334,6 +339,84 @@ def test_iteration_runs_each_udf_once(crawl_run, tmp_path, monkeypatch):
     n_scheduled = sum(counts[it] for it in range(1, ITERS + 1))
     assert n_scheduled > 0
     assert (link_rows.value, fetch_rows.value) == (n_scheduled, n_scheduled)
+
+
+def test_iteration_probes_each_candidate_once(crawl_run, tmp_path,
+                                             monkeypatch):
+    # the cuckoo probe (a cogroup pandas UDF) sees each candidate that
+    # reaches the prefilter once: its sure-new and maybe-seen branches
+    # share one probe instead of each running their own
+    from url_pattern_algorithm_spark.operators import cuckoo
+    from url_pattern_algorithm_spark.plans import crawl
+
+    spark, _, _, _, docs, seeds, robots = crawl_run
+    probed = spark.sparkContext.accumulator(0)
+    reached: list[int] = []
+    probe = cuckoo.cuckoo_maybe_seen
+
+    def counted_probe(candidates, filters, n_buckets=64):
+        reached.append(candidates.count())
+        tagged = probe(candidates, filters, n_buckets)
+
+        def count(batches):
+            for pdf in batches:
+                probed.add(len(pdf))
+                yield pdf
+
+        return tagged.mapInPandas(count, tagged.schema)
+
+    monkeypatch.setattr(cuckoo, "cuckoo_maybe_seen", counted_probe)
+    monkeypatch.setattr(crawl, "cuckoo_maybe_seen", counted_probe,
+                        raising=False)
+    run_crawl(spark, docs, seeds, robots, str(tmp_path / "probe"), N_DOCS,
+              iterations=ITERS)
+    assert len(reached) == ITERS and sum(reached) > 0
+    assert probed.value == sum(reached)
+
+
+def test_declared_reads_run_no_job(crawl_run):
+    # a declared table is read with its declared schema, so the read plans
+    # without the Spark job schema inference runs. seen is left out: its
+    # bucket= directories still make Spark list them in a job
+    spark, ckpt, *_ = crawl_run
+    sc = spark.sparkContext
+    cat = Catalog(spark, ckpt)
+    for name in (f"pending_{ITERS}", f"host_state_{ITERS}",
+                 f"cuckoo_{ITERS}", f"scheduled_{ITERS}", "_metrics"):
+        group = f"declared-read-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            cat.read(name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+def test_written_tables_match_declarations(crawl_run, tmp_path):
+    # a declared read drops a column its declaration lacks and reads NULL
+    # for one the files lack, so every table the crawl and its maintenance
+    # ops write must hold exactly the declared columns and types
+    from pyspark.sql.types import StructType
+
+    spark, _, _, _, docs, seeds, robots = crawl_run
+    root = str(tmp_path / "drift")
+    run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS,
+              compact_every=2)
+    cat = Catalog(spark, root)
+    fetched = cat.read("scheduled_2").select("url_hash", "url_canon")
+    assert unsee_urls(spark, root, fetched.select("url_hash")) > 0
+    assert reenqueue_urls(spark, root, fetched) > 0
+    kinds = set()
+    for name in cat.table_names():
+        table = Catalog.declared(name)
+        if table is None:
+            continue
+        kinds.add(Catalog.table_kind(name)[0])
+        got = spark.read.parquet(cat.path(name)).schema
+        want = StructType.fromDDL(table.schema)
+        assert ([(f.name, f.dataType) for f in got]
+                == [(f.name, f.dataType) for f in want]), name
+    assert kinds == set(TABLES)
 
 
 def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):

@@ -11,7 +11,6 @@ from url_pattern_algorithm_spark.scaling import (
     derive_bloom_buckets,
     derive_bloom_m_bits,
     derive_n_planes,
-    derive_pending_hbuckets,
 )
 
 
@@ -41,13 +40,6 @@ def test_n_planes_targets():
     for n in (10**6, 10**8, 10**10):
         p = derive_n_planes(n)
         assert n / (1 << p) <= 2 * 4096
-
-
-def test_pending_hbuckets_targets():
-    assert derive_pending_hbuckets(10**10) == 8192
-    assert derive_pending_hbuckets(10**5) == 16  # sandbox clamp
-    b = derive_pending_hbuckets(10**8)
-    assert b & (b - 1) == 0
 
 
 # ---------------------------------------------------------------------------

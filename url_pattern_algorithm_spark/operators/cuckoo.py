@@ -54,6 +54,7 @@ OVERLOAD_FILL = 0.98
 BATCH_KICK_FACTOR = 8
 
 CUCKOO_SCHEMA = "bucket int, nb long, table binary, stash binary"
+CUCKOO_COLS = [c.split()[0] for c in CUCKOO_SCHEMA.split(",")]
 
 # Capacity floor mirroring scaling.derive_bloom_m_bits' 2^17-bit floor
 # (13.1k keys/bucket at the 10-bits/key design point): a crawl's seen set
@@ -289,8 +290,7 @@ def update_cuckoos(state: DataFrame, delta_hashes: DataFrame,
     )
     return (
         delta_b.groupBy("bucket")
-        .cogroup(state.select("bucket", "nb", "table", "stash")
-                 .groupBy("bucket"))
+        .cogroup(state.select(*CUCKOO_COLS).groupBy("bucket"))
         .applyInPandas(merge, CUCKOO_SCHEMA)
     )
 
@@ -306,8 +306,7 @@ def delete_from_cuckoos(state: DataFrame, del_hashes: DataFrame,
     def drop(del_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(state_pdf):
             return pd.DataFrame({c: pd.Series(dtype=t) for c, t in zip(
-                ["bucket", "nb", "table", "stash"],
-                ["int32", "int64", "object", "object"])})
+                CUCKOO_COLS, ["int32", "int64", "object", "object"])})
         size, table, stash_arr = _deserialize(state_pdf.iloc[0])
         bucket = int(state_pdf["bucket"].iloc[0])
         stash = [int(x) for x in stash_arr]
@@ -334,8 +333,7 @@ def delete_from_cuckoos(state: DataFrame, del_hashes: DataFrame,
     )
     return (
         del_b.groupBy("bucket")
-        .cogroup(state.select("bucket", "nb", "table", "stash")
-                 .groupBy("bucket"))
+        .cogroup(state.select(*CUCKOO_COLS).groupBy("bucket"))
         .applyInPandas(drop, CUCKOO_SCHEMA)
     )
 
@@ -366,10 +364,20 @@ def cuckoo_maybe_seen(candidates: DataFrame, filters: DataFrame,
     ) + ", maybe_seen boolean"
     return (
         cand_b.groupBy("bucket")
-        .cogroup(filters.groupBy("bucket"))
+        .cogroup(filters.select(*CUCKOO_COLS).groupBy("bucket"))
         .applyInPandas(test, schema)
         .drop("bucket")
     )
+
+
+def route_maybe_seen(tagged: DataFrame, seen: DataFrame) -> DataFrame:
+    """Unseen rows of :func:`cuckoo_maybe_seen`'s output: definitely-unseen
+    rows skip the anti-join's shuffle. Both branches read ``tagged``, so a
+    caller persists it to run the probe once."""
+    sure_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    checked = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
+    return sure_new.unionByName(checked)
 
 
 def seen_filter_cuckoo(candidates: DataFrame, seen: DataFrame | None,
@@ -377,13 +385,11 @@ def seen_filter_cuckoo(candidates: DataFrame, seen: DataFrame | None,
                        n_buckets: int = 64) -> DataFrame:
     """Seen anti-join with the cuckoo prefilter routing definitely-unseen
     rows around the shuffle — drop-in alternative to frontier.seen_filter's
-    Bloom mode with identical split semantics."""
+    Bloom mode with identical split semantics. The probe's output is not
+    persisted, so it runs once per branch (the crawl loop persists it)."""
     if seen is None:
         return candidates
     if filters is not None:
-        tagged = cuckoo_maybe_seen(candidates, filters, n_buckets)
-        sure_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        checked = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
-        return sure_new.unionByName(checked)
+        return route_maybe_seen(
+            cuckoo_maybe_seen(candidates, filters, n_buckets), seen)
     return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")

@@ -46,8 +46,10 @@ State-table I/O is sized for a 10^10-key frontier:
   like Iceberg's rewrite_data_files; ``first_iter`` is a data column, so
   compaction never loses lineage.
 - ``pending``/``host_state`` stay per-iteration snapshots (they are the
-  live working set, not an accumulating log); pending is written
-  partitioned by a host-hash bucket for pruned per-host reads.
+  live working set, not an accumulating log). Pending's 16 host-hash
+  directories only bound a write at one file each; every read takes the
+  whole snapshot. Each table's layout is declared in
+  ``sources.catalog.TABLES``, so no call site here names one.
 
 The 'web' is simulated deterministically: fetching a URL returns the synthetic
 doc with index splitmix(url_hash) — same function in the pure-python oracle
@@ -56,6 +58,9 @@ doc with index splitmix(url_hash) — same function in the pure-python oracle
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
@@ -69,9 +74,10 @@ from url_pattern_algorithm_spark.functions.links import (
 )
 from url_pattern_algorithm_spark.operators.cuckoo import (
     build_cuckoo,
+    cuckoo_maybe_seen,
     delete_from_cuckoos,
     derive_cuckoo_nb,
-    seen_filter_cuckoo,
+    route_maybe_seen,
     update_cuckoos,
 )
 from url_pattern_algorithm_spark.operators.frontier import (
@@ -84,10 +90,9 @@ from url_pattern_algorithm_spark.scaling import (
     BROADCAST_MAX_ROWS,
     broadcast_if_small,
     derive_bloom_buckets,
-    derive_pending_hbuckets,
     derive_salts,
 )
-from url_pattern_algorithm_spark.sources.catalog import Catalog
+from url_pattern_algorithm_spark.sources.catalog import TABLES, Catalog
 from url_pattern_algorithm_spark.sources.synthetic import _mix
 
 TOKENS_INIT = 2.0
@@ -96,7 +101,6 @@ REFILL = 1.0
 
 # perfbench reads this; written to the run meta as a constant, never read back
 BLOOM_M_BITS = 1 << 17
-PENDING_HBUCKETS = 16  # host-hash partition count for pending snapshots
 
 
 def _run_writers(writers) -> None:
@@ -127,8 +131,10 @@ class Politeness:
 
 DEFAULT_POLITENESS = Politeness()
 
-PENDING_COLS = ["url", "url_canon", "url_hash", "host", "priority", "discovered_iter"]
-SEEN_COLS = ["url_hash", "url_canon", "first_iter"]
+FRONTIER_COLS = TABLES["pending"].names  # a pending / scheduled row
+HOST_STATE_COLS = TABLES["host_state"].names
+# every table kind a crawl writes, and an older build's bloom_N bitmaps
+STATE_KINDS = (*TABLES, "bloom")
 
 
 def _with_crawl_delay(hosts: DataFrame, delays: DataFrame | None,
@@ -166,28 +172,17 @@ def read_seen(cat: Catalog, upto: int) -> DataFrame:
     (compacted history lives in epoch=-1, always included); the row-level
     ``first_iter <= upto`` makes the as-of exact after compaction merges
     epochs."""
-    s = cat.read("seen")
-    return s.filter((F.col("epoch") <= upto) & (F.col("first_iter") <= upto))
+    return cat.read("seen").filter(
+        (F.col("epoch") <= upto) & (F.col("first_iter") <= upto))
 
 
 def _seen_delta(rows: DataFrame, iteration: int, n_buckets: int) -> DataFrame:
-    """Seen-table rows for ``rows`` first seen at ``iteration``,
-    repartitioned by bucket so each (epoch, bucket) partition gets exactly
-    one file per write."""
+    """Seen-table rows for ``rows`` first seen at ``iteration``."""
     return rows.select(
         "url_hash", "url_canon",
         F.lit(iteration).alias("first_iter"),
         F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
         F.lit(iteration).alias("epoch"),
-    ).repartition(n_buckets, "bucket")
-
-
-def _write_seen_delta(cat: Catalog, rows: DataFrame, run_id: str,
-                      iteration: int, n_buckets: int) -> int:
-    """Append one iteration's delta: dynamic overwrite of ``epoch=i`` only."""
-    return cat.write_checkpoint(
-        _seen_delta(rows, iteration, n_buckets), "seen", run_id, iteration,
-        partition_by=["epoch", "bucket"], dynamic=True,
     )
 
 
@@ -200,14 +195,14 @@ def compact_seen(cat: Catalog, upto: int, n_buckets: int = 64) -> None:
     expires resume points before it: re-running an already-compacted
     iteration would duplicate its rows (epoch=-1 + the re-written epoch).
     A watermark row records the boundary; run_crawl refuses stale resumes.
-    Reading as-of any iteration stays exact (first_iter row filter)."""
+    Reading as-of any iteration stays exact (first_iter row filter).
+    ``n_buckets`` is unused; callers still pass it."""
 
     def collapse(df: DataFrame) -> DataFrame:
-        merged = df.withColumn(
+        return df.withColumn(
             "epoch",
             F.when(F.col("epoch") <= upto, F.lit(-1)).otherwise(F.col("epoch")),
         )
-        return merged.repartition(n_buckets, "bucket")
 
     # the rewrite lock is held across BOTH steps: a compaction refused by
     # in-flight seen writers (or a rival compactor) must fail BEFORE the
@@ -217,9 +212,9 @@ def compact_seen(cat: Catalog, upto: int, n_buckets: int = 64) -> None:
     # some resumes that would still have been valid, instead of permitting
     # a resume into already-compacted history (duplicate rows).
     with cat.rewrite_lock("seen"):
-        wm = cat.spark.createDataFrame([(upto,)], "upto int")
-        cat.append(wm, "_compaction")
-        cat.rewrite_locked("seen", collapse, partition_by=["epoch", "bucket"])
+        cat.append(cat.spark.createDataFrame(
+            [(upto,)], TABLES["_compaction"].schema), "_compaction")
+        cat.rewrite_locked("seen", collapse)
 
 
 def prune_checkpoint_history(cat: Catalog, upto: int) -> list[str]:
@@ -238,24 +233,15 @@ def prune_checkpoint_history(cat: Catalog, upto: int) -> list[str]:
     """
     dropped = []
     for name in cat.table_names():
-        base = _base_table_name(name)
-        for prefix in ("bloom_", "cuckoo_", "pending_", "host_state_",
-                       "scheduled_"):
-            if base.startswith(prefix):
-                try:
-                    n = int(base[len(prefix):])
-                except ValueError:
-                    continue
-                limit = upto + 1 if prefix == "scheduled_" else upto
-                if n < limit:
-                    cat.drop(name)
-                    dropped.append(name)
+        # resolved through the catalog's aux naming scheme, so a crash-
+        # leftover aux dir goes with its snapshot
+        kind, n = Catalog.table_kind(name)
+        if kind not in STATE_KINDS or n is None:
+            continue
+        if n < (upto + 1 if kind == "scheduled" else upto):
+            cat.drop(name)
+            dropped.append(name)
     return dropped
-
-
-# the aux naming scheme is owned by the catalog (Catalog.AUX_SUFFIXES);
-# the wipe/prune sites below resolve through it
-_base_table_name = Catalog.base_table_name
 
 
 def compaction_watermark(cat: Catalog) -> int:
@@ -267,9 +253,6 @@ def compaction_watermark(cat: Catalog) -> int:
 
 
 def _read_crawl_meta(cat: Catalog) -> dict:
-    import json
-    import os
-
     with open(os.path.join(cat.root, "_run_meta.json")) as f:
         return json.load(f)
 
@@ -341,21 +324,15 @@ def unsee_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
         try:
             n = present.count()
             if n:
-                cat.rewrite_locked(
-                    "seen",
-                    lambda df: df.join(present, "url_hash", "left_anti")
-                                 .repartition(n_buckets, "bucket"),
-                    partition_by=["epoch", "bucket"],
-                )
+                cat.rewrite_locked("seen", lambda df: df.join(
+                    present, "url_hash", "left_anti"))
                 snap = f"cuckoo_{last}"
                 if cat.exists(snap):
                     # rename-aside rewrite, not an in-place overwrite: a
                     # crash mid-write must leave a readable snapshot
                     cat.rewrite(snap, lambda df: cat.stamp(
-                        delete_from_cuckoos(
-                            df.select("bucket", "nb", "table", "stash"),
-                            present, n_buckets,
-                        ).coalesce(4), run_id, last))
+                        delete_from_cuckoos(df, present, n_buckets),
+                        run_id, last))
         finally:
             present.unpersist()
     return n
@@ -427,32 +404,22 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
                 snap = f"cuckoo_{last}"
                 if cat.exists(snap):
                     cat.rewrite(snap, lambda df: cat.stamp(
-                        update_cuckoos(
-                            df.select("bucket", "nb", "table", "stash"),
-                            restore.select("url_hash"), n_buckets,
-                            nb=int(meta["cuckoo_nb"]),
-                        ).coalesce(4), run_id, last))
+                        update_cuckoos(df, restore.select("url_hash"),
+                                       n_buckets, nb=int(meta["cuckoo_nb"])),
+                        run_id, last))
                 # append, NOT the loop's dynamic epoch overwrite — the
                 # epoch=last partition already holds that iteration's
                 # organic delta and must survive
                 cat.append(cat.stamp(_seen_delta(restore, last, n_buckets),
-                                     run_id, last),
-                           "seen", partition_by=["epoch", "bucket"])
+                                     run_id, last), "seen")
         finally:
             restore.unpersist()
-        rows = _with_hbucket(
-            todo.select(
-                F.col("url_canon").alias("url"), "url_canon",
-                "url_hash", "host",
-                F.lit(float(priority)).alias("priority"),
-                F.lit(last).alias("discovered_iter"),
-            ),
-            # hbucket is file-layout only (reads select PENDING_COLS by
-            # name), so the default bucket count is safe even when the
-            # run derived a different one from n_docs
+        rows = todo.select(
+            F.col("url_canon").alias("url"), "url_canon", "url_hash", "host",
+            F.lit(float(priority)).alias("priority"),
+            F.lit(last).alias("discovered_iter"),
         )
-        cat.append(cat.stamp(rows, run_id, last), pname,
-                   partition_by=["hbucket"])
+        cat.append(cat.stamp(rows, run_id, last), pname)
     finally:
         todo.unpersist()
     return n
@@ -504,8 +471,8 @@ def _maybe_grow_prefilter(cat: Catalog, it: int, n_buckets: int, nb: int,
     # (_heal_prefilter_size_mismatch)
     if new_nb > nb:
         cat.rewrite(f"cuckoo_{it}", lambda _old: cat.stamp(
-            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb)
-            .coalesce(4), run_id, it,
+            build_cuckoo(read_seen(cat, it), n_buckets, nb=new_nb),
+            run_id, it,
         ))
     return new_nb
 
@@ -541,9 +508,6 @@ def _write_run_meta(cat: Catalog, bloom_buckets: int,
     resume_from: a reused checkpoint root can hold LATER pending/host_state
     snapshots from a longer previous run, and resuming past this run's end
     would silently mix the two runs' states."""
-    import json
-    import os
-
     os.makedirs(cat.root, exist_ok=True)
     # meta is rewritten after EVERY iteration: write-to-temp + atomic
     # os.replace so a crash mid-write can't leave truncated JSON that
@@ -565,9 +529,6 @@ def _check_run_meta(cat: Catalog, bloom_buckets: int,
                     resume_from: int | None = None,
                     robots_mode: str = "any_disallow",
                     cuckoo_nb: int | None = None) -> None:
-    import json
-    import os
-
     path = os.path.join(cat.root, "_run_meta.json")
     if not os.path.exists(path):
         return  # pre-meta checkpoint dirs stay resumable
@@ -623,22 +584,11 @@ def _read_prefilter(cat: Catalog, iteration: int, n_buckets: int,
     the size-mismatch heal)."""
     name = f"cuckoo_{iteration}"
     if cat.exists(name):
-        return cat.read(name).select("bucket", "nb", "table", "stash")
+        return cat.read(name)
     return build_cuckoo(read_seen(cat, iteration), n_buckets, nb=cuckoo_nb)
 
 
-def _with_hbucket(pending: DataFrame,
-                  hbuckets: int = PENDING_HBUCKETS) -> DataFrame:
-    """Host-hash partition column + repartition on it: the repartition
-    bounds the partitioned write at one file per hbucket dir (without it,
-    every write task emits a file into every dir it touches — tasks x dirs
-    small files per snapshot)."""
-    return pending.withColumn(
-        "hbucket",
-        F.pmod(F.xxhash64("host"), F.lit(hbuckets)).cast("int"),
-    ).repartition(hbuckets, "hbucket")
-
-
+@contextlib.contextmanager
 def _new_frontier_rows(
     candidates: DataFrame,
     robots: DataFrame,
@@ -648,11 +598,14 @@ def _new_frontier_rows(
     bloom_buckets: int = 64,
     est_robots: int | None = None,
     robots_mode: str = "any_disallow",
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Projected candidates (url, url_canon, host, url_hash, priority) ->
-    robots-filtered, unseen, deduped frontier rows (PENDING_COLS).
+    robots-filtered, unseen, deduped frontier rows (FRONTIER_COLS), valid
+    inside the ``with`` block.
 
-    ``seen``/``filters`` None: nothing is seen yet (iteration 0). The dedup
+    ``seen``/``filters`` None: nothing is seen yet (iteration 0). Else the
+    cuckoo probe's output is persisted for the block: its sure-new and
+    maybe-seen branches both read it, so the probe runs once. The dedup
     keeps the smallest url/url_canon/host and the LARGEST priority of each
     url_hash. ``est_robots``: robots row count threaded from run_crawl's
     once-per-run probe so the robots broadcast size gate costs no
@@ -661,14 +614,21 @@ def _new_frontier_rows(
     cand = candidates.filter(F.col("url_canon").isNotNull())
     cand = robots_filter(cand, robots, est_rows=est_robots,
                          longest_match=robots_mode == "longest_match")
-    cand = seen_filter_cuckoo(cand, seen, filters, bloom_buckets)
-    # batch-internal dedup on the canonical hash; deterministic representative
-    return cand.groupBy("url_hash").agg(
-        F.min("url").alias("url"),
-        F.min("url_canon").alias("url_canon"),
-        F.min("host").alias("host"),
-        F.max("priority").alias("priority"),
-    ).select(*PENDING_COLS[:5], F.lit(discovered_iter).alias("discovered_iter"))
+    if seen is not None:
+        cand = cuckoo_maybe_seen(cand, filters, bloom_buckets).persist()
+    try:
+        unseen = cand if seen is None else route_maybe_seen(cand, seen)
+        # batch-internal dedup on the canonical hash; deterministic
+        # representative
+        yield unseen.groupBy("url_hash").agg(
+            F.min("url").alias("url"),
+            F.min("url_canon").alias("url_canon"),
+            F.min("host").alias("host"),
+            F.max("priority").alias("priority"),
+            F.lit(discovered_iter).alias("discovered_iter"),
+        ).select(*FRONTIER_COLS)
+    finally:
+        cand.unpersist()  # a no-op at iteration 0
 
 
 def _commit(
@@ -679,7 +639,6 @@ def _commit(
     pending: DataFrame | None,
     host_state: DataFrame | None,
     filters: DataFrame | None,
-    n_docs: int,
     bloom_buckets: int,
     cuckoo_nb: int,
     pol: Politeness,
@@ -703,24 +662,19 @@ def _commit(
     n_hosts: list[int] = []
 
     def write_pending() -> None:
-        rows = new_rows.select(*PENDING_COLS)
+        rows = new_rows
         if pending is not None:
-            rows = pending.select(*PENDING_COLS).unionByName(rows)
-        cat.write_checkpoint(
-            _with_hbucket(rows, derive_pending_hbuckets(n_docs)),
-            f"pending_{iteration}", run_id, iteration,
-            partition_by=["hbucket"],
-        )
+            rows = pending.select(*FRONTIER_COLS).unionByName(rows)
+        cat.write_checkpoint(rows, f"pending_{iteration}", run_id, iteration)
 
     def write_prefilter() -> None:
         # iteration 0 builds the filter, later ones insert their delta in
-        # one cogroup pass; coalesce: n_buckets rows never need 32 files
+        # one cogroup pass
         delta = new_rows.select("url_hash")
         flt = (build_cuckoo(delta, bloom_buckets, nb=cuckoo_nb)
                if filters is None
                else update_cuckoos(filters, delta, bloom_buckets, cuckoo_nb))
-        cat.write_checkpoint(flt.coalesce(4), f"cuckoo_{iteration}", run_id,
-                             iteration)
+        cat.write_checkpoint(flt, f"cuckoo_{iteration}", run_id, iteration)
 
     def write_host_state() -> None:
         hosts = new_rows.select("host").distinct()
@@ -728,19 +682,19 @@ def _commit(
             hosts = hosts.join(host_state.select("host"), "host", "left_anti")
         rows = _with_crawl_delay(hosts, delays, est_robots).select(
             "host",
-            F.lit(pol.tokens_init).alias("tokens"),
+            F.lit(float(pol.tokens_init)).alias("tokens"),
             F.lit(iteration).alias("last_iter"),
             "crawl_delay",
         )
         if host_state is not None:
-            rows = host_state.select(
-                "host", "tokens", "last_iter", "crawl_delay"
-            ).unionByName(rows)
+            rows = host_state.select(*HOST_STATE_COLS).unionByName(rows)
         n_hosts.append(cat.write_checkpoint(
             rows, f"host_state_{iteration}", run_id, iteration))
 
     _run_writers([write_pending, write_host_state, write_prefilter])
-    _write_seen_delta(cat, new_rows, run_id, iteration, bloom_buckets)
+    # the seen delta: dynamic overwrite of epoch=iteration only
+    cat.write_checkpoint(_seen_delta(new_rows, iteration, bloom_buckets),
+                         "seen", run_id, iteration, dynamic=True)
     cat.flush_metrics()
     new_rows.unpersist()
     return n_hosts[0]
@@ -752,7 +706,6 @@ def init_state(
     robots: DataFrame,
     cat: Catalog,
     run_id: str,
-    n_docs: int,
     pol: Politeness = DEFAULT_POLITENESS,
     bloom_buckets: int = 64,
     est_robots: int | None = None,
@@ -765,12 +718,12 @@ def init_state(
     host_state_0 row count, which run_crawl threads into iteration 1's
     politeness size gate."""
     cand = _url_columns(seeds, url_columns_udf("url"), "priority")
-    new_rows = _new_frontier_rows(
+    with _new_frontier_rows(
         cand, robots, None, None, 0, bloom_buckets,
         est_robots=est_robots, robots_mode=robots_mode,
-    )
-    return _commit(cat, run_id, 0, new_rows, None, None, None, n_docs,
-                   bloom_buckets, cuckoo_nb, pol, delays, est_robots)
+    ) as new_rows:
+        return _commit(cat, run_id, 0, new_rows, None, None, None,
+                       bloom_buckets, cuckoo_nb, pol, delays, est_robots)
 
 
 def run_iteration(
@@ -799,11 +752,9 @@ def run_iteration(
     warm iterations pay zero extra jobs; ``None`` falls back to a bounded
     probe)."""
     prev = iteration - 1
-    pending = cat.read(f"pending_{prev}").select(*PENDING_COLS)
+    pending = cat.read(f"pending_{prev}").select(*FRONTIER_COLS)
     seen = read_seen(cat, prev).select("url_hash")
-    host_state = cat.read(f"host_state_{prev}").select(
-        "host", "tokens", "last_iter", "crawl_delay"
-    )
+    host_state = cat.read(f"host_state_{prev}").select(*HOST_STATE_COLS)
 
     # 1. politeness budgets + salted priority top-k
     budgets = politeness_budgets(host_state, pol.refill, pol.tokens_cap)
@@ -826,7 +777,7 @@ def run_iteration(
         "doc_index", fetch_doc_index_udf(n_docs)(F.col("url_hash"))
     ).persist()
     n_scheduled = cat.write_checkpoint(
-        scheduled.select(*PENDING_COLS, "sched_rank"),
+        scheduled.select(*TABLES["scheduled"].names),
         f"scheduled_{iteration}",
         run_id,
         iteration,
@@ -847,27 +798,24 @@ def run_iteration(
 
     # 3. extract + project the fetched docs, then filter. docs must carry a
     # deterministic doc_index (run_crawl derives it from doc_id); never
-    # monotonically_increasing_id — that's partition-dependent. The
-    # candidates are persisted: the prefilter's sure-new and maybe-seen
-    # branches both read them, and would each run the link UDF otherwise
+    # monotonically_increasing_id — that's partition-dependent
     pages = scheduled.join(docs, "doc_index", "inner")
     cand = _url_columns(
         pages, F.explode(extract_normalize_udf(F.col("spans")))
-    ).withColumn("priority", F.lit(1.0 / (iteration + 1.0))).persist()
+    ).withColumn("priority", F.lit(1.0 / (iteration + 1.0)))
     filters = _read_prefilter(cat, prev, bloom_buckets, cuckoo_nb)
-    new_rows = _new_frontier_rows(
-        cand, robots, seen, filters, iteration, bloom_buckets,
-        est_robots=est_robots, robots_mode=robots_mode,
-    )
 
     # 4. next state: pending minus the scheduled batch, debited buckets
     remaining = pending.join(
         scheduled.select("url_hash"), "url_hash", "left_anti"
     )
-    n_hosts = _commit(cat, run_id, iteration, new_rows, remaining, debited,
-                      filters, n_docs, bloom_buckets, cuckoo_nb, pol, delays,
-                      est_robots)
-    cand.unpersist()
+    with _new_frontier_rows(
+        cand, robots, seen, filters, iteration, bloom_buckets,
+        est_robots=est_robots, robots_mode=robots_mode,
+    ) as new_rows:
+        n_hosts = _commit(cat, run_id, iteration, new_rows, remaining,
+                          debited, filters, bloom_buckets, cuckoo_nb, pol,
+                          delays, est_robots)
     scheduled.unpersist()
     return n_scheduled, n_hosts
 
@@ -927,13 +875,10 @@ def run_crawl(
     ``cuckoo_k`` snapshot and rebuilds it once from the seen table; the
     schedule is unchanged.
 
-    Two sizes always derive from ``n_docs``: the pending snapshots'
-    host-hash partition count (scaling.derive_pending_hbuckets: 8192 dirs
-    at 10^10) and the top-k salt factor (scaling.derive_salts under a
-    worst-case one-host-holds-half skew assumption: 4096-way at 10^10, the
-    reference's 80-way analogue). Both are 16 for every ``n_docs`` up to
-    10^7, and the schedule OUTPUT does not depend on either (tests pin the
-    salt-count invariance).
+    The top-k salt factor derives from ``n_docs`` (scaling.derive_salts
+    under a worst-case one-host-holds-half skew assumption: 4096-way at
+    10^10, 16 up to 10^7); the schedule OUTPUT does not depend on it
+    (tests pin the salt-count invariance).
 
     ``robots_mode``: 'any_disallow' (the reference-parity default: a
     candidate dies if ANY disallow rule matches; allow rows ignored) or
@@ -952,8 +897,6 @@ def run_crawl(
     # would then refuse a perfectly valid resume
     stored_meta: dict = {}
     if resume_from is not None:
-        import os
-
         if os.path.exists(os.path.join(cat.root, "_run_meta.json")):
             stored_meta = _read_crawl_meta(cat)
     if bloom_buckets is None:
@@ -980,107 +923,82 @@ def run_crawl(
         parsed_robots = robots_rules_from_bodies(robots).persist()
         robots = parsed_robots
     try:
-        return _run_crawl_inner(
-            spark, docs, seeds, robots, cat, n_docs, iterations, run_id,
-            resume_from, bloom_buckets, compact_every, prune_history,
-            pol, robots_mode, cuckoo_nb,
-        )
+        if "doc_index" not in docs.columns:
+            docs = docs.withColumn(
+                "doc_index",
+                F.col("doc_id").substr(F.lit(4), F.lit(10)).cast("long"),
+            )
+        counts: dict[int, int] = {}
+        start = 1
+        # one bounded probe per RUN sizes the robots broadcast gate for
+        # every iteration; the politeness gate is sized by threading each
+        # iteration's host_state write count into the next (est_hosts). A
+        # resume's first iteration has no threaded count and probes once.
+        est_robots = robots.limit(BROADCAST_MAX_ROWS + 1).count()
+        est_hosts: int | None = None
+        # per-host Crawl-delay directives (None when the robots table has
+        # no crawl_delay column — every host then refills at the 1.0
+        # default)
+        delays = host_crawl_delays(robots)
+        if resume_from is None:
+            # fresh run: wipe EVERYTHING a crawl writes — the append-style
+            # tables (seen, filters, compaction watermark, metrics) would
+            # silently merge with a prior run's state, and a longer prior
+            # run's per-iteration snapshots (pending_N/host_state_N/
+            # scheduled_N for N past this run's end) would otherwise
+            # survive and corrupt a later out-of-range resume. A crash
+            # inside Catalog.rewrite's swap window leaves the live data
+            # under <base>__compact_old; the kind is resolved from the BASE
+            # name so a prior run's seen table can't be resurrected by
+            # _recover mid-run (likewise stale writer markers / locks)
+            for name in cat.table_names():
+                if Catalog.table_kind(name)[0] in STATE_KINDS:
+                    cat.drop(name)
+            _write_run_meta(cat, bloom_buckets, robots_mode=robots_mode,
+                            cuckoo_nb=cuckoo_nb)
+            # perfbench wraps init_state by name and ends its set-up at the
+            # first run_iteration call, so iteration 0 stays a separate call
+            est_hosts = init_state(
+                spark, seeds, robots, cat, run_id, pol,
+                bloom_buckets=bloom_buckets, est_robots=est_robots,
+                delays=delays, robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
+        else:
+            _check_run_meta(cat, bloom_buckets, resume_from,
+                            robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
+            _heal_prefilter_size_mismatch(cat, resume_from, cuckoo_nb)
+            wm = compaction_watermark(cat)
+            if resume_from < wm:
+                raise ValueError(
+                    f"resume_from={resume_from} predates the compaction "
+                    f"watermark {wm}: compacted iterations cannot be "
+                    "re-run (Iceberg snapshot-expiry semantics); resume "
+                    f"from >= {wm}"
+                )
+            start = resume_from + 1
+        for it in range(start, iterations + 1):
+            # looked up at call time: perfbench swaps run_iteration for its
+            # step probe
+            counts[it], est_hosts = run_iteration(
+                spark, docs, robots, cat, run_id, it, n_docs,
+                bloom_buckets=bloom_buckets, pol=pol,
+                est_hosts=est_hosts, est_robots=est_robots,
+                delays=delays, robots_mode=robots_mode, cuckoo_nb=cuckoo_nb,
+            )
+            _write_run_meta(cat, bloom_buckets, it,
+                            robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
+            if compact_every and it % compact_every == 0:
+                compact_seen(cat, it, bloom_buckets)
+                if prune_history:
+                    prune_checkpoint_history(cat, it)
+                grown_nb = _maybe_grow_prefilter(cat, it, bloom_buckets,
+                                                 cuckoo_nb, run_id)
+                if grown_nb != cuckoo_nb:
+                    cuckoo_nb = grown_nb
+                    # re-pin at once: later resumes must see the grown size
+                    _write_run_meta(cat, bloom_buckets, it,
+                                    robots_mode=robots_mode,
+                                    cuckoo_nb=cuckoo_nb)
+        return counts
     finally:
         if parsed_robots is not None:
             parsed_robots.unpersist()
-
-
-def _run_crawl_inner(
-    spark: SparkSession,
-    docs: DataFrame,
-    seeds: DataFrame,
-    robots: DataFrame,
-    cat: Catalog,
-    n_docs: int,
-    iterations: int,
-    run_id: str,
-    resume_from: int | None,
-    bloom_buckets: int,
-    compact_every: int,
-    prune_history: bool,
-    pol: Politeness,
-    robots_mode: str,
-    cuckoo_nb: int,
-) -> dict[int, int]:
-    if "doc_index" not in docs.columns:
-        docs = docs.withColumn(
-            "doc_index",
-            F.col("doc_id").substr(F.lit(4), F.lit(10)).cast("long"),
-        )
-    counts: dict[int, int] = {}
-    start = 1
-    # one bounded probe per RUN sizes the robots broadcast gate for every
-    # iteration; the politeness gate is sized by threading each iteration's
-    # host_state write count into the next (est_hosts). A resume's first
-    # iteration has no threaded count and probes once.
-    est_robots = robots.limit(BROADCAST_MAX_ROWS + 1).count()
-    est_hosts: int | None = None
-    # per-host Crawl-delay directives (None when the robots table has no
-    # crawl_delay column — every host then refills at the 1.0 default)
-    delays = host_crawl_delays(robots)
-    if resume_from is None:
-        # fresh run: wipe EVERYTHING a crawl writes — the append-style
-        # tables (seen, filters, compaction watermark, metrics) would
-        # silently merge with a prior run's state, and a longer prior
-        # run's per-iteration snapshots (pending_N/host_state_N/
-        # scheduled_N for N past this run's end) would otherwise survive
-        # and corrupt a later out-of-range resume. bloom_N: bitmaps an
-        # older build's run may have left in the root.
-        for name in cat.table_names():
-            # a crash inside Catalog.rewrite's swap window leaves the live
-            # data under <base>__compact_old; wipe by BASE name so a prior
-            # run's seen table can't be resurrected by _recover mid-run
-            # (likewise stale writer markers / rewrite locks)
-            base = _base_table_name(name)
-            if (base in ("seen", "_compaction", "_metrics")
-                    or base.startswith(("bloom_", "cuckoo_", "pending_",
-                                        "host_state_", "scheduled_"))):
-                cat.drop(name)
-        _write_run_meta(cat, bloom_buckets, robots_mode=robots_mode,
-                        cuckoo_nb=cuckoo_nb)
-        # perfbench wraps init_state by name and ends its set-up at the
-        # first run_iteration call, so iteration 0 stays a separate call
-        est_hosts = init_state(spark, seeds, robots, cat, run_id, n_docs, pol,
-                               bloom_buckets=bloom_buckets,
-                               est_robots=est_robots, delays=delays,
-                               robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
-    else:
-        _check_run_meta(cat, bloom_buckets, resume_from,
-                        robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
-        _heal_prefilter_size_mismatch(cat, resume_from, cuckoo_nb)
-        wm = compaction_watermark(cat)
-        if resume_from < wm:
-            raise ValueError(
-                f"resume_from={resume_from} predates the compaction "
-                f"watermark {wm}: compacted iterations cannot be re-run "
-                f"(Iceberg snapshot-expiry semantics); resume from >= {wm}"
-            )
-        start = resume_from + 1
-    for it in range(start, iterations + 1):
-        # looked up at call time: perfbench swaps run_iteration for its
-        # step probe
-        counts[it], est_hosts = run_iteration(
-            spark, docs, robots, cat, run_id, it, n_docs,
-            bloom_buckets=bloom_buckets, pol=pol,
-            est_hosts=est_hosts, est_robots=est_robots,
-            delays=delays, robots_mode=robots_mode, cuckoo_nb=cuckoo_nb,
-        )
-        _write_run_meta(cat, bloom_buckets, it, robots_mode=robots_mode,
-                        cuckoo_nb=cuckoo_nb)
-        if compact_every and it % compact_every == 0:
-            compact_seen(cat, it, bloom_buckets)
-            if prune_history:
-                prune_checkpoint_history(cat, it)
-            grown_nb = _maybe_grow_prefilter(cat, it, bloom_buckets,
-                                             cuckoo_nb, run_id)
-            if grown_nb != cuckoo_nb:
-                cuckoo_nb = grown_nb
-                # re-pin immediately: later resumes must see the grown size
-                _write_run_meta(cat, bloom_buckets, it,
-                                robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
-    return counts

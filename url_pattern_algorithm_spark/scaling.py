@@ -1,13 +1,12 @@
 """Cardinality-derived parameter defaults (r2 verdict item 10).
 
-The sandbox constants — 64 Bloom buckets, 8 LSH planes, 16 pending
-host-hash buckets — are right for the 10^5..10^6-key test corpora and
-wrong at the 10^10-key north_rule scale (the operator docstrings promise
-~4096 Bloom buckets there). These helpers derive the parameters from an
-input-cardinality ESTIMATE: a known universe size, a catalog row count, a
-planner statistic — never a mandatory extra Spark action. Every result is
-a power of two (the bucket arithmetic uses masks/pmod) and clamped to a
-sane range.
+The sandbox constants — 64 Bloom buckets, 8 LSH planes — are right for
+the 10^5..10^6-key test corpora and wrong at the 10^10-key north_rule
+scale (the operator docstrings promise ~4096 Bloom buckets there). These
+helpers derive the parameters from an input-cardinality ESTIMATE: a
+known universe size, a catalog row count, a planner statistic — never a
+mandatory extra Spark action. Every result is a power of two (the bucket
+arithmetic uses masks/pmod) and clamped to a sane range.
 
 Documented targets (pinned by tests/test_scaling.py):
 - ``derive_bloom_buckets(10**10)`` == 4096 — ~2.4M keys per bucket, so
@@ -19,8 +18,6 @@ Documented targets (pinned by tests/test_scaling.py):
 - ``derive_n_planes(10**9)`` == 18 — LSH bucket occupancy ~4096 rows, so
   a bucket self-join stays ~10^7 pairs, not quadratic in the corpus
   (operators/similarity.py lsh_buckets);
-- ``derive_pending_hbuckets(10**10)`` == 8192 — ~1.2M pending rows per
-  partition file (plans/crawl.py PENDING_HBUCKETS);
 - ``derive_salts(5 * 10**9)`` == 4096 — the top-k salt factor under the
   worst-case one-host-holds-half assumption at a 10^10 frontier
   (~1.2M rows per phase-1 window task; PredictFssJob.java:155-185 is the
@@ -87,14 +84,6 @@ def derive_salts(est_hot_host_rows: int,
     [16, 4096]: 16 is the tested sandbox floor, 4096 bounds the phase-2
     survivor count (salts x budget rows re-ranked exactly)."""
     return _pow2_round(est_hot_host_rows / rows_per_task, 16, 4096)
-
-
-def derive_pending_hbuckets(n_pending: int,
-                            rows_per_bucket: int = 1_200_000) -> int:
-    """Host-hash partition count for pending-frontier snapshots: one
-    partition file per ~1.2M rows, so partitioned writes stay
-    O(hbuckets) files and each resume read-task gets a full slice."""
-    return _pow2_round(n_pending / rows_per_bucket, 16, 32768)
 
 
 # Size gate for forced-broadcast hints on host-cardinality dimensions.

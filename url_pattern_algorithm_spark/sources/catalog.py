@@ -7,9 +7,19 @@ overwrite / read-by-name / partitioned layout). On a cluster, swap
 ``_FORMAT = "iceberg"`` and point ``root`` at a catalog namespace — every
 caller goes through this interface, nothing else changes.
 
+Each crawl state table kind (its name without the ``_N`` iteration
+suffix) has one declaration in ``TABLES``: schema, partition columns and
+file clustering. A declared table is read with its schema, which costs no
+Spark job (inference runs one); a read returns NULL for a column the files
+lack and drops one the declaration lacks, so tests/test_crawl_parity.py
+checks every written table against it. Undeclared tables (the learner's
+``theme_*`` outputs) are read by inference. Every write lays a declared
+table out by its declaration; ``partition_by`` is for undeclared ones.
+
 Lineage columns stamped on every checkpoint write (FIXTURES.md F2):
 ``run_id``, ``iteration``, ``partition_id`` (physical writing partition via
-``spark_partition_id()``), plus a per-write row-count metric appended to the
+``spark_partition_id()``, filled in by the write after the declared
+clustering), plus a per-write row-count metric appended to the
 ``_metrics`` table.
 
 Every write to a table drops the cache of every persisted frame that reads
@@ -43,12 +53,64 @@ Concurrency semantics vs real Iceberg (tests/test_catalog.py pins these):
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
+import shutil
+import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from url_pattern_algorithm_spark.operators.cuckoo import CUCKOO_SCHEMA
+
 _FORMAT = "parquet"
+
+_LINEAGE = ", run_id string, iteration int, partition_id int"
+_FRONTIER = ("url string, url_canon string, url_hash long, host string, "
+             "priority double, discovered_iter int")
+
+
+@dataclass(frozen=True)
+class Table:
+    """A state table's declaration. ``schema``: DDL in the order a read
+    returns the columns, partition columns last. A write computes the
+    ``derive`` columns (SQL), then clusters rows into files: a hash
+    repartition on ``cluster_by``, one file per partition directory per
+    write, or a coalesce into ``files`` files."""
+
+    schema: str
+    partition_by: tuple[str, ...] = ()
+    cluster_by: str | None = None
+    files: int | None = None
+    derive: dict[str, str] = field(default_factory=dict)
+
+    @property
+    def names(self) -> list[str]:
+        """The row columns: neither lineage nor partition columns."""
+        skip = {*self.partition_by, "run_id", "iteration", "partition_id"}
+        return [c.split()[0] for c in self.schema.split(",")
+                if c.split()[0] not in skip]
+
+
+TABLES = {
+    # append-only by epoch; bucket is the cuckoo filter's outer bucket
+    "seen": Table("url_hash long, url_canon string, first_iter int"
+                  + _LINEAGE + ", epoch int, bucket int",
+                  partition_by=("epoch", "bucket"), cluster_by="bucket"),
+    # 16 host-hash dirs, one file each; no read prunes on them
+    "pending": Table(
+        _FRONTIER + _LINEAGE + ", hbucket int",
+        partition_by=("hbucket",), cluster_by="hbucket",
+        derive={"hbucket": "cast(pmod(xxhash64(host), 16) as int)"}),
+    "host_state": Table("host string, tokens double, last_iter int, "
+                        "crawl_delay double" + _LINEAGE),
+    "cuckoo": Table(CUCKOO_SCHEMA + _LINEAGE, files=4),
+    "scheduled": Table(_FRONTIER + ", sched_rank int" + _LINEAGE),
+    "_metrics": Table("run_id string, iteration int, table string, rows long"),
+    "_compaction": Table("upto int"),
+}
 
 
 def _pid_alive(pid: int) -> bool:
@@ -99,14 +161,27 @@ class Catalog:
                 if not os.path.isdir(final):
                     raise
 
+    @staticmethod
+    def table_kind(name: str) -> tuple[str, int | None]:
+        """(kind, iteration) of a table or aux dir name: ``pending_3``
+        -> ("pending", 3), ``seen__compact_tmp`` -> ("seen", None)."""
+        base = Catalog.base_table_name(name)
+        m = re.fullmatch(r"(.+)_(\d+)", base)
+        return (m[1], int(m[2])) if m else (base, None)
+
+    @staticmethod
+    def declared(name: str) -> Table | None:
+        return TABLES.get(Catalog.table_kind(name)[0])
+
     def read(self, name: str) -> DataFrame:
         self._recover(name)
-        return self.spark.read.format(_FORMAT).load(self.path(name))
+        reader = self.spark.read.format(_FORMAT)
+        if (table := self.declared(name)) is not None:
+            reader = reader.schema(table.schema)
+        return reader.load(self.path(name))
 
     def drop(self, name: str) -> None:
         """Delete a table directory (no-op when absent)."""
-        import shutil
-
         shutil.rmtree(self.path(name), ignore_errors=True)
 
     def table_names(self) -> list[str]:
@@ -141,8 +216,6 @@ class Catalog:
         """Writer marker FIRST, lock check SECOND (the ordering that makes
         overlap impossible — see module docstring). Returns the marker path
         to deregister in the caller's finally."""
-        import uuid
-
         d = self._writers_dir(name)
         marker = os.path.join(d, f"{os.getpid()}-{uuid.uuid4().hex[:8]}")
         while True:
@@ -165,8 +238,6 @@ class Catalog:
 
     @staticmethod
     def _deregister_writer(marker: str) -> None:
-        import contextlib
-
         with contextlib.suppress(OSError):
             os.rmdir(marker)
         with contextlib.suppress(OSError):
@@ -196,8 +267,6 @@ class Catalog:
             if _pid_alive(pid):
                 live.append(m)
             else:  # steal dead-pid markers (crashed writer)
-                import contextlib
-
                 with contextlib.suppress(OSError):
                     os.rmdir(os.path.join(d, m))
         return live
@@ -216,6 +285,30 @@ class Catalog:
         tables must NOT use it (a re-run with fewer partitions would leave
         stale ones behind). Raises :class:`RewriteConflict` when a live
         rewrite/compaction holds this table."""
+        df, partition_by = self._lay_out(df, name, partition_by)
+        self._save(df, name, partition_by, mode, dynamic)
+
+    def _lay_out(self, df: DataFrame, name: str,
+                 partition_by: list[str] | None = None) -> tuple:
+        """(``df`` clustered into files, partition columns) by ``name``'s
+        declaration; an undeclared table keeps ``partition_by``."""
+        if (table := self.declared(name)) is None:
+            return df, partition_by
+        for col, sql in table.derive.items():
+            df = df.withColumn(col, F.expr(sql))
+        if table.cluster_by:
+            df = df.repartition(table.cluster_by)
+        if table.files:
+            df = df.coalesce(table.files)
+        return df, table.partition_by
+
+    def _save(self, df: DataFrame, name: str, partition_by, mode: str,
+              dynamic: bool) -> None:
+        """The file write, with a NULL ``partition_id`` (see :meth:`stamp`)
+        filled in by the partition that writes the row."""
+        if "partition_id" in df.columns:
+            df = df.withColumn("partition_id", F.coalesce(
+                F.col("partition_id"), F.spark_partition_id()))
         marker = self._register_writer(name)
         try:
             w = df.write.format(_FORMAT).mode(mode)
@@ -227,12 +320,10 @@ class Catalog:
         finally:
             self._deregister_writer(marker)
 
-    def append(self, df: DataFrame, name: str,
-               partition_by: list[str] | None = None) -> None:
-        self.write(df, name, mode="append", partition_by=partition_by)
+    def append(self, df: DataFrame, name: str) -> None:
+        self.write(df, name, mode="append")
 
-    def rewrite(self, name: str, transform,
-                partition_by: list[str] | None = None) -> None:
+    def rewrite(self, name: str, transform) -> None:
         """Atomically rewrite a table as ``transform(read(name))`` through a
         temp dir + rename-aside swap (Iceberg's rewrite_data_files shape).
         Crash-safe: the live table is renamed aside, never deleted before
@@ -248,8 +339,9 @@ class Catalog:
         dead pids are stolen; a crash inside rewrite leaves a dead-pid
         lock that the next rewrite reclaims (reads are never blocked)."""
         with self.rewrite_lock(name):
-            self._rewrite_locked(name, transform, partition_by)
+            self._rewrite_locked(name, transform)
 
+    @contextlib.contextmanager
     def rewrite_lock(self, name: str):
         """Context manager: hold ``name``'s rewrite lock across a
         multi-step compaction (e.g. a watermark append + the rewrite
@@ -258,31 +350,23 @@ class Catalog:
         Acquires atomically (dead owners stolen), then refuses if live
         writer markers exist — the same ordering :meth:`rewrite` enforces.
         Inside the context, call :meth:`rewrite_locked`."""
-        import contextlib
-        import shutil
+        lock = self._acquire_rewrite_lock(name)
+        try:
+            live = self._live_writers(name)
+            if live:
+                raise RewriteConflict(
+                    f"rewrite of '{name}' refused: {len(live)} "
+                    f"writer(s) in flight ({live[:3]}...) — compact "
+                    "between iterations, not during one"
+                )
+            yield
+        finally:
+            shutil.rmtree(lock, ignore_errors=True)
 
-        @contextlib.contextmanager
-        def _ctx():
-            lock = self._acquire_rewrite_lock(name)
-            try:
-                live = self._live_writers(name)
-                if live:
-                    raise RewriteConflict(
-                        f"rewrite of '{name}' refused: {len(live)} "
-                        f"writer(s) in flight ({live[:3]}...) — compact "
-                        "between iterations, not during one"
-                    )
-                yield
-            finally:
-                shutil.rmtree(lock, ignore_errors=True)
-
-        return _ctx()
-
-    def rewrite_locked(self, name: str, transform,
-                       partition_by: list[str] | None = None) -> None:
+    def rewrite_locked(self, name: str, transform) -> None:
         """Run the rewrite body while the caller already holds
         :meth:`rewrite_lock` for ``name``."""
-        self._rewrite_locked(name, transform, partition_by)
+        self._rewrite_locked(name, transform)
 
     def _acquire_rewrite_lock(self, name: str) -> str:
         """Atomically acquire ``<name>__rewrite_lock``.
@@ -295,15 +379,11 @@ class Catalog:
         ASIDE (atomic, exactly one winner — the loser's rename raises and
         it re-examines whatever lock now exists), so two stealers can
         never both proceed into concurrent rewrites."""
-        import uuid
-
         lock = self._lock_dir(name)
         tmp = f"{lock}.acq.{os.getpid()}.{uuid.uuid4().hex[:6]}"
         os.mkdir(tmp)
         with open(os.path.join(tmp, "pid"), "w") as f:
             f.write(str(os.getpid()))
-        import shutil
-
         try:
             for _ in range(4):
                 try:
@@ -334,8 +414,6 @@ class Catalog:
 
     def _rewrite_locked(self, name: str, transform,
                         partition_by: list[str] | None = None) -> None:
-        import shutil
-
         df = transform(self.read(name))  # read() runs _recover first
         tmp = f"{name}__compact_tmp"
         try:
@@ -380,18 +458,21 @@ class Catalog:
         register): the ``seen`` table grows by a delta write per iteration
         and at 10^10 keys must be periodically rewritten into its bucketed
         layout (on Iceberg this is rewrite_data_files)."""
-        self.rewrite(
-            name, lambda df: df.coalesce(target_partitions), partition_by
-        )
+        with self.rewrite_lock(name):
+            self._rewrite_locked(
+                name, lambda df: df.coalesce(target_partitions), partition_by
+            )
 
     @staticmethod
     def stamp(df: DataFrame, run_id: str, iteration: int) -> DataFrame:
         """``df`` + the lineage columns every checkpoint row carries; for
         rows that reach a table through :meth:`append` or :meth:`rewrite`
-        rather than :meth:`write_checkpoint` (no ``_metrics`` row)."""
+        rather than :meth:`write_checkpoint` (no ``_metrics`` row). The
+        ``partition_id`` is left NULL for :meth:`write` to fill in after
+        the table's clustering; rows a rewrite carries over keep theirs."""
         return (df.withColumn("run_id", F.lit(run_id))
                 .withColumn("iteration", F.lit(iteration))
-                .withColumn("partition_id", F.spark_partition_id()))
+                .withColumn("partition_id", F.lit(None).cast("int")))
 
     def write_checkpoint(
         self,
@@ -399,7 +480,6 @@ class Catalog:
         name: str,
         run_id: str,
         iteration: int,
-        partition_by: list[str] | None = None,
         dynamic: bool = False,
     ) -> int:
         """Write a lineage-stamped checkpoint table; returns row count.
@@ -411,10 +491,11 @@ class Catalog:
         north_rule asks for is queryable as
         ``GROUP BY run_id, iteration, partition_id``.
         """
+        df, partition_by = self._lay_out(df, name)
         obs = Observation()
         stamped = self.stamp(df, run_id, iteration).observe(
             obs, F.count(F.lit(1)).alias("rows"))
-        self.write(stamped, name, partition_by=partition_by, dynamic=dynamic)
+        self._save(stamped, name, partition_by, "overwrite", dynamic)
         n = int(obs.get["rows"])
         self._metrics_buf.append((run_id, iteration, name, n))
         return n
@@ -424,8 +505,6 @@ class Catalog:
         if not self._metrics_buf:
             return
         metrics = self.spark.createDataFrame(
-            self._metrics_buf,
-            "run_id string, iteration int, table string, rows long",
-        )
+            self._metrics_buf, TABLES["_metrics"].schema)
         self.append(metrics, "_metrics")
         self._metrics_buf = []
