@@ -376,17 +376,21 @@ def test_iteration_probes_each_candidate_once(crawl_run, tmp_path,
 
 def test_declared_reads_run_no_job(crawl_run):
     # a declared table is read with its declared schema, so the read plans
-    # without the Spark job schema inference runs. seen is left out: its
-    # bucket= directories still make Spark list them in a job
+    # without the Spark job schema inference runs, and seen's epoch
+    # directories are listed on the driver
     spark, ckpt, *_ = crawl_run
     sc = spark.sparkContext
     cat = Catalog(spark, ckpt)
-    for name in (f"pending_{ITERS}", f"host_state_{ITERS}",
-                 f"cuckoo_{ITERS}", f"scheduled_{ITERS}", "_metrics"):
+    reads = {name: lambda name=name: cat.read(name)
+             for name in (f"pending_{ITERS}", f"host_state_{ITERS}",
+                          f"cuckoo_{ITERS}", f"scheduled_{ITERS}",
+                          "_metrics")}
+    reads["seen"] = lambda: read_seen(cat, ITERS)
+    for name, read in reads.items():
         group = f"declared-read-{name}"
         sc.setJobGroup(group, name)
         try:
-            cat.read(name)
+            read()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
@@ -735,3 +739,144 @@ def test_prefilter_rescale_crash_window_self_heals(crawl_run, tmp_path):
                         iterations=ITERS, resume_from=ITERS - 1,
                         prefilter_kind="cuckoo", run_id="regrow")
     assert counts3[ITERS] == counts[ITERS]
+
+
+def test_new_host_parity(crawl_run, tmp_path):
+    # hosts first named by a link after iteration 0 enter host_state at
+    # tokens_init with their robots crawl delay: seed half the hosts and
+    # require the oracle's schedule and every host's tokens per iteration
+    spark, *_ = crawl_run
+    docs = docs_df(spark, N_DOCS, N_HOSTS, partitions=4)
+    seeded = {f"site{h}.example.com" for h in range(N_HOSTS // 2)}
+    seeds_local = [(r["url"], r["priority"])
+                   for r in seeds_df(spark, N_HOSTS).collect()
+                   if r["url"].split("/")[2] in seeded]
+    seeds = spark.createDataFrame(seeds_local, "url string, priority double")
+    robots = robots_df(spark, N_HOSTS, with_delays=True)
+    rules = robots_rules(N_HOSTS, with_delays=True)
+    ckpt = str(tmp_path / "new_hosts")
+    run_crawl(spark, docs, seeds, robots, ckpt, N_DOCS, iterations=ITERS)
+    cat = Catalog(spark, ckpt)
+    hosts = {r["host"] for r in cat.read(f"host_state_{ITERS}").collect()}
+    assert hosts - seeded  # links reached hosts no seed named
+    for it in range(1, ITERS + 1):
+        oracle = run_oracle_crawl(seeds_local, rules, N_DOCS, N_HOSTS, it)
+        want = [(r[0], r[1], r[2], r[3], r[6]) for r in oracle.scheduled[it]]
+        assert _spark_scheduled(spark, ckpt, it) == want, it
+        state = cat.read(f"host_state_{it}").collect()
+        assert {r["host"]: r["tokens"] for r in state} == \
+            oracle.host_tokens, it
+        assert {r["host"]: r["crawl_delay"] for r in state} == \
+            {r[0]: r[3] for r in rules if r[0] in oracle.host_tokens}, it
+
+
+def _old_layout_root(crawl_run, root: str) -> Catalog:
+    """A 2-iteration root re-laid out as written before seen was
+    partitioned by epoch only: seen by (epoch, bucket) directories and
+    pending_2 by 16 host-hash directories."""
+    from pyspark.sql import functions as F
+
+    spark, _, _, _, docs, seeds, robots = crawl_run
+    run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=2)
+    cat = Catalog(spark, root)
+    for name, col, parts in (
+        ("seen", None, ["epoch", "bucket"]),
+        ("pending_2", F.pmod(F.xxhash64("host"), F.lit(16)).cast("int"),
+         ["hbucket"]),
+    ):
+        df = spark.read.parquet(cat.path(name))
+        if col is not None:
+            df = df.withColumn(parts[0], col)
+        old = cat.path(name + "_old")
+        df.write.partitionBy(*parts).parquet(old)
+        cat.drop(name)
+        os.rename(old, cat.path(name))
+    assert cat._dir_partitions("seen") == ("epoch", "bucket")
+    assert cat._dir_partitions("pending_2") == ("hbucket",)
+    return cat
+
+
+def test_resume_of_old_layout_root(crawl_run, tmp_path):
+    # a root written while seen was partitioned by (epoch, bucket) and
+    # pending_N by a 16-way host hash is rewritten into the declared
+    # layout on resume, keeping every epoch and the watermark, and
+    # iteration 3 schedules and sees exactly what the uninterrupted run did
+    from url_pattern_algorithm_spark.plans.crawl import compaction_watermark
+
+    spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
+    root = str(tmp_path / "old_layout")
+    cat = _old_layout_root(crawl_run, root)
+
+    counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                        iterations=3, resume_from=2, run_id="old_layout")
+    assert counts2[3] == counts[3]
+    assert _spark_scheduled(spark, root, 3) == _spark_scheduled(spark, ckpt, 3)
+    got = {
+        (r["url_hash"], r["first_iter"])
+        for r in read_seen(cat, 3).select("url_hash", "first_iter").collect()
+    }
+    assert got == set(oracle.seen.items())
+    epochs = {r["epoch"] for r in cat.read("seen").select("epoch")
+              .distinct().collect()}
+    assert epochs == {0, 1, 2, 3}
+    assert compaction_watermark(cat) == -1
+    for name in ("seen", "pending_2"):
+        assert cat._dir_partitions(name) == TABLES[name.split("_")[0]] \
+            .partition_by, name
+
+
+def test_reenqueue_on_old_layout_root(crawl_run, tmp_path):
+    # reenqueue_urls appends to seen and pending_k, so on a root still in
+    # the old layout it first rewrites both into the declared one; the
+    # appended rows then read back with the rest
+    from pyspark.sql import functions as F
+
+    spark = crawl_run[0]
+    root = str(tmp_path / "old_layout_reenqueue")
+    cat = _old_layout_root(crawl_run, root)
+    n_seen = read_seen(cat, 2).count()
+    fetched = cat.read("scheduled_1").select("url_hash", "url_canon")
+    want = {r["url_hash"] for r in fetched.collect()}
+    assert unsee_urls(spark, root, fetched.limit(1)) == 1
+    assert reenqueue_urls(spark, root, fetched) == len(want)
+    for name in ("seen", "pending_2"):
+        assert cat._dir_partitions(name) == TABLES[name.split("_")[0]] \
+            .partition_by, name
+    pending = cat.read("pending_2")
+    assert {r["url_hash"] for r in pending.filter(F.col("priority") == 2.0)
+            .select("url_hash").collect()} == want
+    assert read_seen(cat, 2).count() == n_seen
+
+
+def test_iteration_jobs_flat_as_crawl_ages(spark, tmp_path, monkeypatch):
+    # an iteration's Spark job count does not grow with the number of seen
+    # epochs. Sized so that every epoch's seen delta spans more than 32 of
+    # the 64 buckets (Spark's parallel partition discovery threshold)
+    from pyspark.sql import functions as F
+
+    from url_pattern_algorithm_spark.plans import crawl
+
+    n_hosts, n_docs = 64, 2048
+    sc = spark.sparkContext
+    jobs: list[int] = []
+    step = crawl.run_iteration
+
+    def high_water() -> int:
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    def counted(*args, **kwargs):
+        j0 = high_water()
+        out = step(*args, **kwargs)
+        jobs.append(high_water() - j0)
+        return out
+
+    monkeypatch.setattr(crawl, "run_iteration", counted)
+    root = str(tmp_path / "aging")
+    run_crawl(spark, docs_df(spark, n_docs, n_hosts, partitions=4),
+              seeds_df(spark, n_hosts), robots_df(spark, n_hosts), root,
+              n_docs, iterations=ITERS)
+    buckets = [r["n"] for r in Catalog(spark, root).read("seen")
+               .groupBy("epoch").agg(F.countDistinct("bucket").alias("n"))
+               .collect()]
+    assert len(buckets) == ITERS + 1 and min(buckets) > 32, buckets
+    assert len(jobs) == ITERS and jobs[-1] == jobs[0], jobs

@@ -395,10 +395,12 @@ def politeness_budgets(host_state: DataFrame, refill: float = 1.0,
                        cap: float = 8.0) -> DataFrame:
     """Advance the per-host token bucket one iteration (F2 host_state):
     tokens' = min(cap, tokens + refill x crawl_delay_factor); budget =
-    floor(tokens'). Returns (host, tokens_avail, budget)."""
+    floor(tokens'). Returns (host, tokens_avail, budget, crawl_delay), so
+    the crawl loop debits the scheduled batch from this one frame."""
     t = F.least(F.lit(cap), F.col("tokens") + F.lit(refill) / F.col("crawl_delay"))
     return host_state.select(
         "host",
         t.alias("tokens_avail"),
         F.floor(t).cast("int").alias("budget"),
+        "crawl_delay",
     )

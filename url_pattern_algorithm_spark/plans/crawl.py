@@ -27,13 +27,16 @@ candidates come from the state as of N-1:
 
 State-table I/O is sized for a 10^10-key frontier:
 
-- ``seen`` is ONE append-only table partitioned by ``(epoch, bucket)``:
-  every iteration writes ONLY its delta (dynamic partition overwrite of
+- ``seen`` is ONE append-only table partitioned by ``epoch`` only: every
+  iteration writes ONLY its delta (dynamic partition overwrite of
   ``epoch=i`` — idempotent on re-run, so resume never duplicates), and
   ``read_seen(cat, k)`` reconstructs the set as of any iteration by
   epoch-pruned read. Per-iteration write volume is O(delta), not O(seen) —
   the previous snapshot-per-iteration design wrote the full seen table every
-  iteration (quadratic cumulative I/O over a long crawl).
+  iteration (quadratic cumulative I/O over a long crawl). The cuckoo
+  filter's outer ``bucket`` is a data column: each delta's rows are
+  hash-clustered on it into a few files, and nothing prunes on it (the
+  anti-join keys on url_hash, the cuckoo build and delete group by it).
 - The seen prefilter is a partitioned cuckoo filter (operators/cuckoo.py),
   maintained INCREMENTALLY: ``cuckoo_i = cuckoo_{i-1} + insert(delta)`` in
   one cogroup pass (update_cuckoos) at per-bucket size ``cuckoo_nb``, and
@@ -44,12 +47,19 @@ State-table I/O is sized for a 10^10-key frontier:
 - ``compact_seen`` collapses old epochs into the single ``epoch=-1``
   partition on a cadence (``compact_every``), bounding file counts exactly
   like Iceberg's rewrite_data_files; ``first_iter`` is a data column, so
-  compaction never loses lineage.
+  compaction never loses lineage. The cadence also bounds the epoch
+  directories a read of ``seen`` lists: past 32 of them
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold``) Spark lists
+  them in a Spark job instead of on the driver. An Iceberg catalog (the
+  ``_FORMAT`` switch in sources/catalog.py) lists no files at all.
 - ``pending``/``host_state`` stay per-iteration snapshots (they are the
-  live working set, not an accumulating log). Pending's 16 host-hash
-  directories only bound a write at one file each; every read takes the
-  whole snapshot. Each table's layout is declared in
-  ``sources.catalog.TABLES``, so no call site here names one.
+  live working set, not an accumulating log), unpartitioned: every read
+  takes the whole snapshot. ``host_state_N`` is built in one pass: the
+  previous state debited by the scheduled batch, full-outer-joined with
+  the new rows' hosts. Each table's layout is declared in
+  ``sources.catalog.TABLES``, so no call site here names one; a root
+  written with an older layout is rewritten into it on resume
+  (``Catalog.relayout``).
 
 The 'web' is simulated deterministically: fetching a URL returns the synthetic
 doc with index splitmix(url_hash) — same function in the pure-python oracle
@@ -65,6 +75,7 @@ from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,7 +143,6 @@ class Politeness:
 DEFAULT_POLITENESS = Politeness()
 
 FRONTIER_COLS = TABLES["pending"].names  # a pending / scheduled row
-HOST_STATE_COLS = TABLES["host_state"].names
 # every table kind a crawl writes, and an older build's bloom_N bitmaps
 STATE_KINDS = (*TABLES, "bloom")
 
@@ -168,10 +178,11 @@ def fetch_doc_index_udf(n_docs: int):
 def read_seen(cat: Catalog, upto: int) -> DataFrame:
     """Seen set as of iteration ``upto`` from the append-only table.
 
-    ``epoch <= upto`` prunes future-iteration partition dirs at plan time
+    ``epoch <= upto`` prunes future-iteration epoch dirs at plan time
     (compacted history lives in epoch=-1, always included); the row-level
     ``first_iter <= upto`` makes the as-of exact after compaction merges
-    epochs."""
+    epochs. Up to 32 epoch dirs are listed on the driver, so the read runs
+    no Spark job."""
     return cat.read("seen").filter(
         (F.col("epoch") <= upto) & (F.col("first_iter") <= upto))
 
@@ -195,8 +206,10 @@ def compact_seen(cat: Catalog, upto: int, n_buckets: int = 64) -> None:
     expires resume points before it: re-running an already-compacted
     iteration would duplicate its rows (epoch=-1 + the re-written epoch).
     A watermark row records the boundary; run_crawl refuses stale resumes.
-    Reading as-of any iteration stays exact (first_iter row filter).
-    ``n_buckets`` is unused; callers still pass it."""
+    Reading as-of any iteration stays exact (first_iter row filter). The
+    rewrite keeps each row's ``bucket`` column and clusters the collapsed
+    files on it by the table's declaration, so ``n_buckets`` is unused;
+    callers still pass it."""
 
     def collapse(df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -384,6 +397,9 @@ def reenqueue_urls(spark: SparkSession, ckpt_root: str, urls: DataFrame,
     req = (req.filter(F.col("url_canon").isNotNull())
            .select("url_hash", "url_canon", "host").distinct())
     pname = f"pending_{last}"
+    # both tables get appended to: an older root's layout goes first
+    for name in ("seen", pname):
+        cat.relayout(name)
     # no table-wide lock here: each append registers a writer marker, which
     # already excludes a concurrent compaction (and the filter rewrite takes
     # its own snapshot lock). Like compact_seen, this is a between-iterations
@@ -648,6 +664,8 @@ def _commit(
     """Write iteration ``iteration``'s state from its new frontier rows and
     the carried-over ``pending`` / ``host_state`` / cuckoo ``filters``
     (all None at iteration 0); returns the host_state row count.
+    ``host_state`` is the previous state already debited by the scheduled
+    batch: (host, tokens, crawl_delay).
 
     The new rows feed four writes, so they are persisted. pending_N,
     host_state_N and cuckoo_N read only cached/parquet inputs and target
@@ -677,17 +695,21 @@ def _commit(
         cat.write_checkpoint(flt, f"cuckoo_{iteration}", run_id, iteration)
 
     def write_host_state() -> None:
-        hosts = new_rows.select("host").distinct()
+        # one full outer join on host: a host only the new rows name
+        # starts at tokens_init with its robots crawl delay
+        hosts = _with_crawl_delay(new_rows.select("host").distinct(), delays,
+                                  est_robots)
+        tokens = F.lit(float(pol.tokens_init))
         if host_state is not None:
-            hosts = hosts.join(host_state.select("host"), "host", "left_anti")
-        rows = _with_crawl_delay(hosts, delays, est_robots).select(
-            "host",
-            F.lit(float(pol.tokens_init)).alias("tokens"),
-            F.lit(iteration).alias("last_iter"),
-            "crawl_delay",
-        )
-        if host_state is not None:
-            rows = host_state.select(*HOST_STATE_COLS).unionByName(rows)
+            hosts = host_state.join(
+                hosts.withColumnRenamed("crawl_delay", "new_delay"), "host",
+                "full_outer",
+            ).withColumn("crawl_delay",
+                         F.coalesce("crawl_delay", "new_delay"))
+            tokens = F.coalesce("tokens", tokens)
+        rows = hosts.select("host", tokens.alias("tokens"),
+                            F.lit(iteration).alias("last_iter"),
+                            "crawl_delay")
         n_hosts.append(cat.write_checkpoint(
             rows, f"host_state_{iteration}", run_id, iteration))
 
@@ -754,10 +776,10 @@ def run_iteration(
     prev = iteration - 1
     pending = cat.read(f"pending_{prev}").select(*FRONTIER_COLS)
     seen = read_seen(cat, prev).select("url_hash")
-    host_state = cat.read(f"host_state_{prev}").select(*HOST_STATE_COLS)
 
     # 1. politeness budgets + salted priority top-k
-    budgets = politeness_budgets(host_state, pol.refill, pol.tokens_cap)
+    budgets = politeness_budgets(cat.read(f"host_state_{prev}"), pol.refill,
+                                 pol.tokens_cap)
     # size-gated: at 10^8 hosts a forced broadcast of every known host's
     # budget would exceed the 8 GB cap; past the gate AQE plans the
     # equi-join (budgets is a pure projection of host_state, so the
@@ -783,17 +805,13 @@ def run_iteration(
         iteration,
     )
 
-    # 2. debit token buckets; unknown hosts keep state
+    # 2. debit token buckets; every scheduled host has a budget row
     spent = scheduled.groupBy("host").agg(F.count("*").alias("n_sched"))
-    debited = (
-        budgets.join(spent, "host", "left")
-        .na.fill({"n_sched": 0})
-        .select(
-            "host",
-            (F.col("tokens_avail") - F.col("n_sched")).alias("tokens"),
-            F.lit(iteration).alias("last_iter"),
-        )
-        .join(host_state.select("host", "crawl_delay"), "host", "inner")
+    debited = budgets.join(spent, "host", "left").select(
+        "host",
+        (F.col("tokens_avail") - F.coalesce("n_sched", F.lit(0)))
+        .alias("tokens"),
+        "crawl_delay",
     )
 
     # 3. extract + project the fetched docs, then filter. docs must carry a
@@ -870,10 +888,10 @@ def run_crawl(
     watermark) — the seen set is URLs and outgrows any start-time estimate
     in a long crawl; on resume, ``None`` size params adopt the
     checkpoint's stored (possibly grown) values. The BUCKET count never
-    changes (it is baked into the seen table layout). A resume of a root
-    written by an older Bloom-prefilter or no-prefilter build finds no
-    ``cuckoo_k`` snapshot and rebuilds it once from the seen table; the
-    schedule is unchanged.
+    changes (it is baked into every seen row's ``bucket`` column). A
+    resume of a root written by an older Bloom-prefilter or no-prefilter
+    build finds no ``cuckoo_k`` snapshot and rebuilds it once from the
+    seen table; the schedule is unchanged.
 
     The top-k salt factor derives from ``n_docs`` (scaling.derive_salts
     under a worst-case one-host-holds-half skew assumption: 4096-way at
@@ -908,20 +926,22 @@ def run_crawl(
     # accept raw robots.txt bodies directly: a (host, robots_txt) frame is
     # parsed into the structured rule table (sources/robots) — same rows a
     # caller would get by pre-parsing, so parity/oracles are unaffected
-    parsed_robots = None
     if "robots_txt" in robots.columns:
         from url_pattern_algorithm_spark.sources.robots import (
             robots_rules_from_bodies,
         )
 
-        # persist for the run: the parsed table is immutable and read by
-        # the gate probe, host_crawl_delays, init_state, and every
-        # iteration's robots_filter — unpersisted, the mapInPandas body
-        # parse would re-execute 2+ times per iteration. Released in the
-        # finally below — repeated run_crawl calls in one session must not
-        # accumulate run-scoped caches (r4 ADVICE).
-        parsed_robots = robots_rules_from_bodies(robots).persist()
-        robots = parsed_robots
+        robots = robots_rules_from_bodies(robots)
+    # persist the rule table for the run: it is immutable and read by the
+    # gate probe, host_crawl_delays, init_state and every iteration's
+    # robots broadcast. Unpersisted, the body parse, or the unpickling of a
+    # createDataFrame'd row list, would run in Python workers on each
+    # read. A frame the caller already cached stays theirs: it is neither
+    # persisted nor released here. Released in the finally below, so
+    # repeated run_crawl calls in one session accumulate no caches.
+    owned = robots.storageLevel == StorageLevel.NONE
+    if owned:
+        robots = robots.persist()
     try:
         if "doc_index" not in docs.columns:
             docs = docs.withColumn(
@@ -974,6 +994,13 @@ def run_crawl(
                     "re-run (Iceberg snapshot-expiry semantics); resume "
                     f"from >= {wm}"
                 )
+            # a root written while seen and pending_N had bucket
+            # directories is rewritten into the declared layout once, before
+            # a write in that layout would mix two partition schemes in one
+            # table. Every epoch is kept (not a compaction: the watermark
+            # stays); pending_k because reenqueue_urls appends to it
+            for name in ("seen", f"pending_{resume_from}"):
+                cat.relayout(name)
             start = resume_from + 1
         for it in range(start, iterations + 1):
             # looked up at call time: perfbench swaps run_iteration for its
@@ -1000,5 +1027,5 @@ def run_crawl(
                                     cuckoo_nb=cuckoo_nb)
         return counts
     finally:
-        if parsed_robots is not None:
-            parsed_robots.unpersist()
+        if owned:
+            robots.unpersist()

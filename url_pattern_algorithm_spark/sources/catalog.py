@@ -15,6 +15,12 @@ lack and drops one the declaration lacks, so tests/test_crawl_parity.py
 checks every written table against it. Undeclared tables (the learner's
 ``theme_*`` outputs) are read by inference. Every write lays a declared
 table out by its declaration; ``partition_by`` is for undeclared ones.
+The only partition directories are ``seen``'s epochs: a read lists up to
+32 of them on the driver and more in a Spark job
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``), so the
+crawl's compaction cadence bounds that cost. A table whose directories
+follow an older declaration is rewritten into the current one by
+:meth:`Catalog.relayout`.
 
 Lineage columns stamped on every checkpoint write (FIXTURES.md F2):
 ``run_id``, ``iteration``, ``partition_id`` (physical writing partition via
@@ -58,8 +64,9 @@ import os
 import re
 import shutil
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,40 +82,44 @@ _FRONTIER = ("url string, url_canon string, url_hash long, host string, "
 @dataclass(frozen=True)
 class Table:
     """A state table's declaration. ``schema``: DDL in the order a read
-    returns the columns, partition columns last. A write computes the
-    ``derive`` columns (SQL), then clusters rows into files: a hash
-    repartition on ``cluster_by``, one file per partition directory per
-    write, or a coalesce into ``files`` files."""
+    returns the columns, partition columns last. A write clusters rows
+    into files: a hash repartition on ``cluster_by``, one file per
+    partition directory per write, or a coalesce into ``files`` files."""
 
     schema: str
     partition_by: tuple[str, ...] = ()
     cluster_by: str | None = None
     files: int | None = None
-    derive: dict[str, str] = field(default_factory=dict)
+
+    @property
+    def columns(self) -> list[str]:
+        return [c.split()[0] for c in self.schema.split(",")]
 
     @property
     def names(self) -> list[str]:
         """The row columns: neither lineage nor partition columns."""
         skip = {*self.partition_by, "run_id", "iteration", "partition_id"}
-        return [c.split()[0] for c in self.schema.split(",")
-                if c.split()[0] not in skip]
+        return [c for c in self.columns if c not in skip]
 
 
+# No read prunes on the cuckoo bucket or on a host hash (the seen
+# anti-join keys on url_hash; the cuckoo build and delete group by the
+# bucket column), so neither is a directory level. The only directories
+# are seen's epochs, which the dynamic overwrite, the as-of read and
+# compaction address.
 TABLES = {
-    # append-only by epoch; bucket is the cuckoo filter's outer bucket
-    "seen": Table("url_hash long, url_canon string, first_iter int"
-                  + _LINEAGE + ", epoch int, bucket int",
-                  partition_by=("epoch", "bucket"), cluster_by="bucket"),
-    # 16 host-hash dirs, one file each; no read prunes on them
-    "pending": Table(
-        _FRONTIER + _LINEAGE + ", hbucket int",
-        partition_by=("hbucket",), cluster_by="hbucket",
-        derive={"hbucket": "cast(pmod(xxhash64(host), 16) as int)"}),
+    # append-only by epoch; each delta's rows are hash-clustered on the
+    # cuckoo filter's outer bucket, so a bucket's rows share one file
+    "seen": Table("url_hash long, url_canon string, first_iter int, "
+                  "bucket int" + _LINEAGE + ", epoch int",
+                  partition_by=("epoch",), cluster_by="bucket"),
+    "pending": Table(_FRONTIER + _LINEAGE),
     "host_state": Table("host string, tokens double, last_iter int, "
                         "crawl_delay double" + _LINEAGE),
     "cuckoo": Table(CUCKOO_SCHEMA + _LINEAGE, files=4),
     "scheduled": Table(_FRONTIER + ", sched_rank int" + _LINEAGE),
-    "_metrics": Table("run_id string, iteration int, table string, rows long"),
+    "_metrics": Table("run_id string, iteration int, table string, rows long",
+                      files=1),
     "_compaction": Table("upto int"),
 }
 
@@ -294,8 +305,6 @@ class Catalog:
         declaration; an undeclared table keeps ``partition_by``."""
         if (table := self.declared(name)) is None:
             return df, partition_by
-        for col, sql in table.derive.items():
-            df = df.withColumn(col, F.expr(sql))
         if table.cluster_by:
             df = df.repartition(table.cluster_by)
         if table.files:
@@ -463,6 +472,31 @@ class Catalog:
                 name, lambda df: df.coalesce(target_partitions), partition_by
             )
 
+    def _dir_partitions(self, name: str) -> tuple[str, ...]:
+        """The partition columns ``name``'s directories name, read off
+        the first directory at each level."""
+        cols, d = [], self.path(name)
+        while sub := sorted(e for e in os.listdir(d) if "=" in e
+                            and os.path.isdir(os.path.join(d, e))):
+            cols.append(sub[0].split("=", 1)[0])
+            d = os.path.join(d, sub[0])
+        return tuple(cols)
+
+    def relayout(self, name: str) -> None:
+        """Rewrite a declared table whose directories name other partition
+        columns than its declaration (a root written before the
+        declaration changed) into the declared layout. Spark refuses to
+        read a table whose directories mix two partition schemes, so this
+        must run before the first write in the new layout. Every row and
+        column value is kept: a partition column the declaration turned
+        into a data column is read off the old directories, one it dropped
+        is dropped."""
+        table = self.declared(name)
+        self._recover(name)
+        if (table is not None and os.path.isdir(self.path(name))
+                and self._dir_partitions(name) != table.partition_by):
+            self.rewrite(name, lambda df: df.select(*table.columns))
+
     @staticmethod
     def stamp(df: DataFrame, run_id: str, iteration: int) -> DataFrame:
         """``df`` + the lineage columns every checkpoint row carries; for
@@ -501,10 +535,14 @@ class Catalog:
         return n
 
     def flush_metrics(self) -> None:
-        """Append buffered row-count metrics to the ``_metrics`` table."""
+        """Append buffered row-count metrics to the ``_metrics`` table. The
+        rows reach the JVM as one Arrow batch, so the write runs no Python
+        worker (a row list would be unpickled in one)."""
         if not self._metrics_buf:
             return
+        table = TABLES["_metrics"]
         metrics = self.spark.createDataFrame(
-            self._metrics_buf, TABLES["_metrics"].schema)
+            pd.DataFrame(self._metrics_buf, columns=table.columns),
+            table.schema)
         self.append(metrics, "_metrics")
         self._metrics_buf = []
