@@ -8,6 +8,7 @@ synthetic docs:
 """
 
 import os
+from collections import Counter
 
 import pytest
 
@@ -96,8 +97,6 @@ def test_edge_seeds_admitted_like_links(crawl_run, tmp_path):
     # seed is scheduled), a case variant of a seed collapses onto it with
     # the larger priority and the smaller url, and a robots-disallowed or
     # scheme-less seed is dropped — exactly as the oracle admits them
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
     spark, *_ = crawl_run
@@ -181,14 +180,20 @@ def test_resume_from_checkpoint(crawl_run, tmp_path):
 
 
 def test_lineage_metrics(crawl_run):
+    # one row per (table, iteration): test_resume_from_checkpoint re-ran
+    # iteration ITERS on this root, and its rows replace the first run's
     spark, ckpt, counts, *_ = crawl_run
     cat = Catalog(spark, ckpt)
-    m = {
-        (r["table"], r["iteration"]): r["rows"]
-        for r in cat.read("_metrics").filter("run_id = 'run1'").collect()
-    }
-    for it in range(1, ITERS + 1):
-        assert m[(f"scheduled_{it}", it)] == counts[it]
+    rows = [(r["table"], r["iteration"], r["rows"])
+            for r in cat.read("_metrics").collect()]
+    m = {(table, it): n for table, it, n in rows}
+    assert len(m) == len(rows)
+    for it in range(ITERS + 1):
+        tables = {f"pending_{it}", f"host_state_{it}", f"cuckoo_{it}", "seen"}
+        if it:
+            tables.add(f"scheduled_{it}")
+            assert m[(f"scheduled_{it}", it)] == counts[it]
+        assert {t for t, i in m if i == it} == tables
     # per-partition lineage columns present on checkpoints
     cols = set(cat.read("scheduled_1").columns)
     assert {"run_id", "iteration", "partition_id"} <= cols
@@ -423,55 +428,113 @@ def test_written_tables_match_declarations(crawl_run, tmp_path):
     assert kinds == set(TABLES)
 
 
+class _Crash(Exception):
+    """The injected crash."""
+
+
+# iteration N's writes in _commit's order: every write_checkpoint and
+# append goes through Catalog._save, then run_crawl bumps the meta
+_STEPS = (f"scheduled_{ITERS}", f"pending_{ITERS}", f"host_state_{ITERS}",
+          f"cuckoo_{ITERS}", "seen", "_metrics", "_run_meta.json")
+
+
+def _crash_before_step(mp, k: int) -> list[str]:
+    """Make iteration ITERS raise before its (k+1)-th write; returns the
+    names of the writes that ran before it."""
+    from url_pattern_algorithm_spark.plans import crawl
+
+    done: list[str] = []
+    armed = []
+    run_iteration, save, write_meta = (
+        crawl.run_iteration, Catalog._save, crawl._write_run_meta)
+
+    def step(name):
+        if armed:
+            if len(done) == k:
+                raise _Crash(name)
+            done.append(name)
+
+    def armed_iteration(*args, **kwargs):
+        armed.append(True)
+        return run_iteration(*args, **kwargs)
+
+    def crashing_save(self, df, name, *args, **kwargs):
+        step(name)
+        return save(self, df, name, *args, **kwargs)
+
+    def crashing_meta(*args, **kwargs):
+        step("_run_meta.json")
+        return write_meta(*args, **kwargs)
+
+    mp.setattr(crawl, "run_iteration", armed_iteration)
+    mp.setattr(Catalog, "_save", crashing_save)
+    mp.setattr(crawl, "_write_run_meta", crashing_meta)
+    return done
+
+
+def _rows(cat, name):
+    """``name``'s rows without the lineage a re-run changes."""
+    return Counter(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in cat.read(name).drop("run_id", "partition_id").collect())
+
+
 def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
-    # with concurrent state writes, a mid-iteration crash can leave ANY
-    # subset of the iteration's tables written; _run_meta's last_iteration
-    # is bumped only after all of them complete, so the documented recovery
-    # (resume from the last recorded iteration) must rewrite the partial
-    # iteration and converge to the uninterrupted run's state
+    # _commit writes an iteration's tables one after another and the meta
+    # is bumped last, so a crash leaves a prefix of that order with the
+    # meta at ITERS-1. For every prefix, the documented recovery (resume
+    # from the last recorded iteration) must overwrite it and converge to
+    # the uninterrupted run's state
     import json
-    import os
     import shutil
 
     spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
-    root = str(tmp_path / "crashed")
-    run_crawl(spark, docs, seeds, robots, root, N_DOCS, iterations=ITERS)
-    want_count = Catalog(spark, ckpt).read("seen").count()
-    # each crash inside iteration ITERS leaves meta at ITERS-1 (it is only
-    # written after the commit returns); the recovered root of one case is
-    # the uninterrupted state the next case crashes from
-    crashes = (
-        # the seen delta + pending snapshot landed, host_state/cuckoo/
-        # scheduled did not
-        [f"host_state_{ITERS}", f"cuckoo_{ITERS}", f"scheduled_{ITERS}"],
-        # the commit writes the seen delta after pending/host_state/cuckoo:
-        # every snapshot landed, the seen epoch did not
-        [os.path.join("seen", f"epoch={ITERS}")],
-    )
-    for lost in crashes:
-        for name in lost:
+    want = Catalog(spark, ckpt)
+    snapshots = _STEPS[:4]
+    want_rows = {name: _rows(want, name) for name in snapshots}
+    want_seen = {tuple(r) for r in read_seen(want, ITERS).select(
+        "url_hash", "first_iter").collect()}
+    want_count = want.read("seen").count()
+    want_metrics = {(r["table"], r["iteration"]): r["rows"]
+                    for r in want.read("_metrics").collect()}
+    for k in range(len(_STEPS)):
+        # the fixture root with iteration ITERS's tables gone and its meta
+        # at ITERS-1; its _metrics rows of ITERS stay, as an earlier crash
+        # after the flush would leave them
+        root = str(tmp_path / f"crash{k}")
+        shutil.copytree(ckpt, root)
+        for name in (*snapshots, os.path.join("seen", f"epoch={ITERS}")):
             shutil.rmtree(os.path.join(root, name))
         meta_path = os.path.join(root, "_run_meta.json")
         meta = json.load(open(meta_path))
         meta["last_iteration"] = ITERS - 1
         json.dump(meta, open(meta_path, "w"))
 
+        with pytest.MonkeyPatch.context() as mp:
+            done = _crash_before_step(mp, k)
+            with pytest.raises(_Crash):
+                run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                          iterations=ITERS, resume_from=ITERS - 1,
+                          run_id="crashed")
+        assert done == list(_STEPS[:k])
+        assert json.load(open(meta_path))["last_iteration"] == ITERS - 1
+
         counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
                             iterations=ITERS, resume_from=ITERS - 1,
                             run_id="recovered")
-        assert counts2[ITERS] == counts[ITERS], lost
-        assert _spark_scheduled(spark, root, ITERS) == _spark_scheduled(
-            spark, ckpt, ITERS
-        ), lost
+        assert counts2[ITERS] == counts[ITERS], k
         cat = Catalog(spark, root)
-        got = {
-            (r["url_hash"], r["first_iter"])
-            for r in read_seen(cat, ITERS)
-            .select("url_hash", "first_iter").collect()
-        }
-        assert got == set(oracle.seen.items()), lost
+        for name in snapshots:
+            assert _rows(cat, name) == want_rows[name], (k, name)
+        got = {tuple(r) for r in read_seen(cat, ITERS).select(
+            "url_hash", "first_iter").collect()}
+        assert got == want_seen == set(oracle.seen.items()), k
         # the partial epoch was overwritten (or written), not doubled
-        assert cat.read("seen").count() == len(got) == want_count, lost
+        assert cat.read("seen").count() == want_count, k
+        metrics = [(r["table"], r["iteration"], r["rows"])
+                   for r in cat.read("_metrics").collect()]
+        assert len(metrics) == len(want_metrics), k
+        assert {(t, i): n for t, i, n in metrics} == want_metrics, k
 
 
 def test_prune_history_bounds_snapshots_and_resumes(crawl_run, tmp_path):

@@ -12,8 +12,8 @@ pipeline and one state commit:
 
     candidates -> robots filter -> cuckoo prefilter + anti-join seen filter
                -> dedup on url_hash, max(priority)     = new frontier rows
-    commit: pending / host_state / cuckoo snapshots (concurrent writers),
-            then the seen delta, then the iteration's _metrics rows
+    commit: the iteration's state tables, one write after another, in
+            the order ``_commit`` states
 
 Iteration 0 has no prior state: nothing is seen, the cuckoo snapshot is
 built instead of updated and every host starts with fresh tokens. Seeds
@@ -72,7 +72,6 @@ import contextlib
 import json
 import os
 from collections.abc import Iterator
-from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark import StorageLevel
@@ -112,21 +111,6 @@ REFILL = 1.0
 
 # perfbench reads this; written to the run meta as a constant, never read back
 BLOOM_M_BITS = 1 << 17
-
-
-def _run_writers(writers) -> None:
-    """Run the iteration's independent state-write jobs as CONCURRENT Spark
-    jobs from driver threads — the standard multi-executor driver pattern
-    (independent output jobs fill scheduler slots a single ~32-task write
-    leaves idle). Each writer targets a disjoint table and reads only
-    cached/parquet inputs, so ordering is immaterial; crash semantics are
-    unchanged (any subset of the iteration's tables may exist after a
-    failure, and resume re-runs the whole iteration idempotently).
-    """
-    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
-        # .result() re-raises the first writer failure on the driver thread
-        for fut in [pool.submit(w) for w in writers]:
-            fut.result()
 
 
 class Politeness:
@@ -667,59 +651,59 @@ def _commit(
     ``host_state`` is the previous state already debited by the scheduled
     batch: (host, tokens, crawl_delay).
 
-    The new rows feed four writes, so they are persisted. pending_N,
-    host_state_N and cuckoo_N read only cached/parquet inputs and target
-    disjoint tables, so _run_writers submits them as concurrent driver
-    jobs; the first of them to reach a partition of the rows builds it
-    once. The seen delta is written LAST: a write to ``seen`` drops the
-    cache of every persisted frame that reads it (Spark recaches by path),
-    and the new rows read it through the seen filter, so writing it first
-    would make the writers build them again. The buffered _metrics rows
-    are flushed after all four writes."""
+    One iteration is written in this order, one write after another:
+
+        scheduled_N (run_iteration) -> pending_N -> host_state_N -> cuckoo_N
+        -> seen epoch N -> _metrics -> _run_meta.json (run_crawl)
+
+    A crash in iteration N >= 1 therefore leaves a prefix of it, with the
+    meta still at N-1, and a resume from N-1 overwrites that prefix: the
+    snapshots are rewritten whole, the seen delta by a dynamic overwrite
+    of its own epoch, and run_crawl drops the ``_metrics`` rows past the
+    resume point before it re-runs the iteration. Iteration 0 has no
+    scheduled table, and a fresh run writes its meta before it.
+
+    The new rows feed four writes, so they are persisted; the first write
+    builds them. The seen delta comes after the snapshots: a write to
+    ``seen`` drops the cache of every persisted frame that reads it (Spark
+    recaches by path), and the new rows read it through the seen filter,
+    so writing it first would make the snapshot writes build them again."""
     new_rows = new_rows.persist()
-    n_hosts: list[int] = []
+    rows = new_rows
+    if pending is not None:
+        rows = pending.select(*FRONTIER_COLS).unionByName(rows)
+    cat.write_checkpoint(rows, f"pending_{iteration}", run_id, iteration)
 
-    def write_pending() -> None:
-        rows = new_rows
-        if pending is not None:
-            rows = pending.select(*FRONTIER_COLS).unionByName(rows)
-        cat.write_checkpoint(rows, f"pending_{iteration}", run_id, iteration)
+    # one full outer join on host: a host only the new rows name starts at
+    # tokens_init with its robots crawl delay
+    hosts = _with_crawl_delay(new_rows.select("host").distinct(), delays,
+                              est_robots)
+    tokens = F.lit(float(pol.tokens_init))
+    if host_state is not None:
+        hosts = host_state.join(
+            hosts.withColumnRenamed("crawl_delay", "new_delay"), "host",
+            "full_outer",
+        ).withColumn("crawl_delay", F.coalesce("crawl_delay", "new_delay"))
+        tokens = F.coalesce("tokens", tokens)
+    n_hosts = cat.write_checkpoint(
+        hosts.select("host", tokens.alias("tokens"),
+                     F.lit(iteration).alias("last_iter"), "crawl_delay"),
+        f"host_state_{iteration}", run_id, iteration)
 
-    def write_prefilter() -> None:
-        # iteration 0 builds the filter, later ones insert their delta in
-        # one cogroup pass
-        delta = new_rows.select("url_hash")
-        flt = (build_cuckoo(delta, bloom_buckets, nb=cuckoo_nb)
-               if filters is None
-               else update_cuckoos(filters, delta, bloom_buckets, cuckoo_nb))
-        cat.write_checkpoint(flt, f"cuckoo_{iteration}", run_id, iteration)
+    # iteration 0 builds the filter, later ones insert their delta in one
+    # cogroup pass
+    delta = new_rows.select("url_hash")
+    flt = (build_cuckoo(delta, bloom_buckets, nb=cuckoo_nb)
+           if filters is None
+           else update_cuckoos(filters, delta, bloom_buckets, cuckoo_nb))
+    cat.write_checkpoint(flt, f"cuckoo_{iteration}", run_id, iteration)
 
-    def write_host_state() -> None:
-        # one full outer join on host: a host only the new rows name
-        # starts at tokens_init with its robots crawl delay
-        hosts = _with_crawl_delay(new_rows.select("host").distinct(), delays,
-                                  est_robots)
-        tokens = F.lit(float(pol.tokens_init))
-        if host_state is not None:
-            hosts = host_state.join(
-                hosts.withColumnRenamed("crawl_delay", "new_delay"), "host",
-                "full_outer",
-            ).withColumn("crawl_delay",
-                         F.coalesce("crawl_delay", "new_delay"))
-            tokens = F.coalesce("tokens", tokens)
-        rows = hosts.select("host", tokens.alias("tokens"),
-                            F.lit(iteration).alias("last_iter"),
-                            "crawl_delay")
-        n_hosts.append(cat.write_checkpoint(
-            rows, f"host_state_{iteration}", run_id, iteration))
-
-    _run_writers([write_pending, write_host_state, write_prefilter])
     # the seen delta: dynamic overwrite of epoch=iteration only
     cat.write_checkpoint(_seen_delta(new_rows, iteration, bloom_buckets),
                          "seen", run_id, iteration, dynamic=True)
     cat.flush_metrics()
     new_rows.unpersist()
-    return n_hosts[0]
+    return n_hosts
 
 
 def init_state(
@@ -867,7 +851,7 @@ def run_crawl(
     ``resume_from=k`` skips init and iterations <= k, reading state as of k —
     byte-identical continuation (F6 resume test; the seen delta write is
     idempotent, so a re-run of iteration k+1 overwrites exactly its own
-    epoch). ``compact_every=K`` collapses seen epochs every K iterations.
+    epoch, and the ``_metrics`` rows past k are dropped before it). ``compact_every=K`` collapses seen epochs every K iterations.
     ``prune_history=True`` additionally drops the per-iteration snapshots
     compaction made unreachable (prune_checkpoint_history) — the long-crawl
     retention mode: the checkpoint root then holds O(1) snapshot tables per
@@ -1001,6 +985,13 @@ def run_crawl(
             # stays); pending_k because reenqueue_urls appends to it
             for name in ("seen", f"pending_{resume_from}"):
                 cat.relayout(name)
+            # the re-run writes the _metrics rows of the iterations it
+            # repeats again, as it overwrites their seen epochs; a crashed
+            # or longer earlier run's rows would otherwise be counted twice
+            # (_seen_count_from_metrics sizes the prefilter from them)
+            if cat.exists("_metrics"):
+                cat.rewrite("_metrics", lambda df: df.filter(
+                    F.col("iteration") <= resume_from))
             start = resume_from + 1
         for it in range(start, iterations + 1):
             # looked up at call time: perfbench swaps run_iteration for its

@@ -39,8 +39,8 @@ Concurrency semantics vs real Iceberg (tests/test_catalog.py pins these):
   Iceberg overwrite-by-filter commits on disjoint filters;
 - concurrent writers on the SAME partition are last-file-wins with no
   commit ordering — Iceberg would serialize them through optimistic commit
-  retry; callers must not do this (the crawl's concurrent writers target
-  disjoint TABLES);
+  retry; callers must not do this (the crawl writes one table at a time,
+  so only two sessions on one root could);
 - rewrite is atomic w.r.t. crash (rename-aside swap + _recover) and
   tolerates concurrent readers racing the swap window (retry loop), but
   offers NO snapshot isolation: a reader overlapping a rewrite can observe
@@ -162,10 +162,10 @@ class Catalog:
         final = self.path(name)
         old = self.path(f"{name}__compact_old")
         if not os.path.isdir(final) and os.path.isdir(old):
-            # two concurrent readers (the crawl's writer threads, or two
-            # sessions on one root) can both pass the isdir checks; the
-            # loser's rename raises after the winner already healed the
-            # table — tolerate it and let the final isdir re-check decide
+            # two concurrent readers (two sessions on one root) can both
+            # pass the isdir checks; the loser's rename raises after the
+            # winner already healed the table — tolerate it and let the
+            # final isdir re-check decide
             try:
                 os.rename(old, final)
             except OSError:
