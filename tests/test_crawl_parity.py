@@ -438,15 +438,17 @@ _STEPS = (f"scheduled_{ITERS}", f"pending_{ITERS}", f"host_state_{ITERS}",
           f"cuckoo_{ITERS}", "seen", "_metrics", "_run_meta.json")
 
 
-def _crash_before_step(mp, k: int) -> list[str]:
-    """Make iteration ITERS raise before its (k+1)-th write; returns the
-    names of the writes that ran before it."""
+def _crash_before_step(mp, k: int, arm: str = "run_iteration") -> list[str]:
+    """Make the first iteration that the ``arm`` function of plans.crawl
+    runs (``run_iteration``: iteration ITERS of a resume from ITERS-1;
+    ``init_state``: iteration 0) raise before its (k+1)-th write; returns
+    the names of the writes that ran before it."""
     from url_pattern_algorithm_spark.plans import crawl
 
     done: list[str] = []
     armed = []
-    run_iteration, save, write_meta = (
-        crawl.run_iteration, Catalog._save, crawl._write_run_meta)
+    iterate, save, write_meta = (
+        getattr(crawl, arm), Catalog._save, crawl._write_run_meta)
 
     def step(name):
         if armed:
@@ -456,7 +458,7 @@ def _crash_before_step(mp, k: int) -> list[str]:
 
     def armed_iteration(*args, **kwargs):
         armed.append(True)
-        return run_iteration(*args, **kwargs)
+        return iterate(*args, **kwargs)
 
     def crashing_save(self, df, name, *args, **kwargs):
         step(name)
@@ -466,7 +468,7 @@ def _crash_before_step(mp, k: int) -> list[str]:
         step("_run_meta.json")
         return write_meta(*args, **kwargs)
 
-    mp.setattr(crawl, "run_iteration", armed_iteration)
+    mp.setattr(crawl, arm, armed_iteration)
     mp.setattr(Catalog, "_save", crashing_save)
     mp.setattr(crawl, "_write_run_meta", crashing_meta)
     return done
@@ -535,6 +537,42 @@ def test_resume_after_partial_iteration_crash(crawl_run, tmp_path):
                    for r in cat.read("_metrics").collect()]
         assert len(metrics) == len(want_metrics), k
         assert {(t, i): n for t, i, n in metrics} == want_metrics, k
+
+
+# iteration 0's writes in _commit's order, then the meta bump to 0
+_STEPS_0 = ("pending_0", "host_state_0", "cuckoo_0", "seen", "_metrics",
+            "_run_meta.json")
+
+
+def test_resume_after_partial_iteration_zero_crash(crawl_run, tmp_path):
+    # a fresh run records no completed iteration until init_state has
+    # committed iteration 0, so a crash anywhere inside it leaves a root
+    # that refuses resume_from=0; a fresh run on that root then equals the
+    # uninterrupted run
+    import json
+
+    spark, ckpt, counts, oracle, docs, seeds, robots = crawl_run
+    want = {it: _spark_scheduled(spark, ckpt, it)
+            for it in range(1, ITERS + 1)}
+    for k in range(len(_STEPS_0)):
+        root = str(tmp_path / f"crash0_{k}")
+        with pytest.MonkeyPatch.context() as mp:
+            done = _crash_before_step(mp, k, arm="init_state")
+            with pytest.raises(_Crash):
+                run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                          iterations=ITERS, run_id="crashed")
+        assert done == list(_STEPS_0[:k])
+        meta = json.load(open(os.path.join(root, "_run_meta.json")))
+        assert meta["last_iteration"] == -1, k
+        with pytest.raises(ValueError, match="beyond this run's last"):
+            run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                      iterations=ITERS, resume_from=0, run_id="resumed")
+
+        counts2 = run_crawl(spark, docs, seeds, robots, root, N_DOCS,
+                            iterations=ITERS, run_id="fresh")
+        assert counts2 == counts, k
+        for it in range(1, ITERS + 1):
+            assert _spark_scheduled(spark, root, it) == want[it], (k, it)
 
 
 def test_prune_history_bounds_snapshots_and_resumes(crawl_run, tmp_path):

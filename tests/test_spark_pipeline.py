@@ -211,6 +211,49 @@ def test_rewrite_pipeline(spark):
     assert rewritten.orderBy("url").collect() == again.orderBy("url").collect()
 
 
+def test_compression_metric_matches_kernel(spark):
+    # the per-host metric is the kernel's two-set ratio: duplicate URLs
+    # count once, a host whose URLs all rewrite to one URL reads 1/n, and a
+    # NULL url is in neither set (countDistinct skips it too)
+    from url_pattern_algorithm_spark.kernel.rules import (
+        compression_ratio,
+        rewrite_url,
+    )
+
+    host_rules = {"a.com": [("path0:.*/", "path0:#x/")], "b.com": []}
+    urls = {
+        "a.com": ["http://a.com/p1", "http://a.com/p2", "http://a.com/p1",
+                  "http://a.com/p3"],
+        "b.com": ["http://b.com/q1", "http://b.com/q1", None,
+                  "http://b.com/q2"],
+    }
+    assert len({rewrite_url(host_rules["a.com"], u)
+                for u in urls["a.com"]}) == 1
+    frame = spark.createDataFrame(
+        [(h, u) for h, us in urls.items() for u in us],
+        "host string, url string")
+    rules = spark.createDataFrame(
+        [(h, i, p, r) for h, rs in host_rules.items()
+         for i, (p, r) in enumerate(rs)],
+        "host string, rule_id int, pattern string, rule string")
+    rewritten = apply_rules(spark, frame, rules)
+    got = {r["host"]: (r["n_urls"], r["n_rewritten"], r["compression_ratio"])
+           for r in compression_metric(rewritten).collect()}
+    want = {}
+    for h, us in urls.items():
+        kept = [u for u in us if u is not None]
+        want[h] = (len(set(kept)),
+                   len({rewrite_url(host_rules[h], u) for u in kept}),
+                   compression_ratio(host_rules[h], kept))
+    assert got == want == {"a.com": (3, 1, 1 / 3), "b.com": (2, 2, 1.0)}
+    distinct = {r["host"]: (r["n_urls"], r["n_rewritten"])
+                for r in rewritten.groupBy("host").agg(
+                    F.countDistinct("url").alias("n_urls"),
+                    F.countDistinct("url_rewritten").alias("n_rewritten"),
+                ).collect()}
+    assert distinct == {h: v[:2] for h, v in got.items()}
+
+
 def test_sampling_ops(spark, urls_df):
     capped1 = sorted(r["url"] for r in cap_per_host(urls_df, cap=50).collect())
     capped2 = sorted(r["url"] for r in cap_per_host(urls_df, cap=50).collect())
@@ -224,9 +267,11 @@ def test_sampling_ops(spark, urls_df):
 
 
 def test_side_input_collect_guards(spark):
-    # web-scale guard: the setup()-style side-input collects in
-    # classify_structural / apply_rules are scoped to hosts present in the
-    # batch and refuse to materialize past max_side_rows on the driver.
+    # web-scale guard: the setup()-style side-input collects refuse to
+    # materialize past max_side_rows on the driver. classify_structural's
+    # is scoped to hosts present in the batch; apply_rules collects at most
+    # max_side_rows + 1 rows of the whole rules table and, past the bound,
+    # cogroups the rules with the URLs instead.
     from pyspark.sql import functions as F
 
     from url_pattern_algorithm_spark.operators.classify import classify_structural
@@ -411,7 +456,10 @@ def test_schedule_top_k_salting_bounds(spark):
     # top-k must (a) spread the hot host across ALL `salts` window
     # partitions and (b) bound phase-1 survivors at salts x budget per
     # host, so no single window task ever ranks the whole hot host.
-    from url_pattern_algorithm_spark.operators.frontier import schedule_top_k
+    from url_pattern_algorithm_spark.operators.frontier import (
+        rank_top_k,
+        schedule_top_k,
+    )
 
     salts, budget, n_hot, n_cold = 16, 50, 5000, 200
     rng = spark.range(n_hot + n_cold)
@@ -451,6 +499,26 @@ def test_schedule_top_k_salting_bounds(spark):
     # phase 1 never materializes a full per-host sort of the hot host
     plan = sched._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
+
+    # rank_top_k keeps every frontier row and ranks exactly the rows
+    # schedule_top_k returns; a host without a budget schedules nothing
+    no_budget = rng.limit(30).select(
+        F.lit("new.example.com").alias("host"),
+        F.col("id").cast("double").alias("priority"),
+        F.xxhash64("id", F.lit(7)).alias("url_hash"),
+        F.lit(None).cast("int").alias("budget"),
+    )
+    mixed = frontier.unionByName(no_budget)
+    want_rows = sorted(tuple(r) for r in mixed.collect())
+    for n_salts in (4, 16, 128):
+        ranked = [tuple(r) for r in rank_top_k(
+            mixed, F.col("budget"), salts=n_salts).collect()]
+        assert sorted(r[:-1] for r in ranked) == want_rows, n_salts
+        assert (sorted(r for r in ranked if r[-1] is not None)
+                == sorted(tuple(r) for r in schedule_top_k(
+                    mixed, F.col("budget"), salts=n_salts).collect())
+                ), n_salts
+        assert sum(r[-1] is not None for r in ranked) == 2 * budget
 
 
 def test_sf_corpus_tree_projections_nonempty(spark):

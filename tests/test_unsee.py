@@ -253,6 +253,16 @@ def test_reenqueue_seen_urls_rescheduled(spark, tmp_path):
     # a bare-hash request cannot build pending rows and must refuse
     with pytest.raises(ValueError, match="url_canon"):
         reenqueue_urls(spark, root, vdf.select("url_hash"))
+    # a URL of a host without a host_state row has no budget: the next
+    # iteration neither schedules nor drops it
+    stranger = spark.createDataFrame([("http://stranger.example.org/a",)],
+                                     "url string")
+    assert reenqueue_urls(spark, root, stranger) == 1
+    run_crawl(spark, docs, seeds, robots, root, 200, iterations=4,
+              resume_from=3, run_id="recrawl2")
+    host = F.col("host") == "stranger.example.org"
+    assert cat.read("pending_4").filter(host).count() == 1
+    assert cat.read("scheduled_4").filter(host).count() == 0
 
 
 def test_unsee_on_compacted_history(spark, tmp_path):

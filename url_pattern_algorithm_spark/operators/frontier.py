@@ -364,31 +364,37 @@ def host_crawl_delays(robots: DataFrame, default: float = 1.0) -> DataFrame | No
     )
 
 
-def schedule_top_k(frontier: DataFrame, budget_col, salts: int = 16) -> DataFrame:
-    """Salted two-phase per-host priority top-k (north_rule priority queue).
+def rank_top_k(frontier: DataFrame, budget_col, salts: int = 16) -> DataFrame:
+    """Salted two-phase per-host priority top-k (north_rule priority queue):
+    every frontier row + ``sched_rank``, NULL where it is not scheduled.
 
     ``budget_col`` is a per-row integer column (already joined from the
-    politeness state) giving that host's budget this iteration. Phase 1
-    ranks within (host, salt) and keeps rank <= budget — a hot host's rows
-    spread over `salts` partitions and at most salts x budget survive. Phase
-    2 ranks the survivors exactly within host. Deterministic order:
-    priority DESC, url_hash ASC.
-    """
+    politeness state) giving that host's budget this iteration; a NULL
+    budget schedules nothing. Phase 1 ranks within (host, salt) — a hot
+    host's rows spread over `salts` partitions and at most salts x budget
+    survive rank <= budget. Phase 2 ranks a host's survivors exactly in one
+    partition; the other rows keep their salt. Deterministic order:
+    priority DESC, url_hash ASC. The survivor flag is a phase-2 key, so
+    schedule_top_k's filter moves below phase 2 and, for a literal budget,
+    both phases plan as WindowGroupLimit."""
     order = [F.col("priority").desc(), F.col("url_hash").asc()]
-    salted = frontier.withColumn(
-        "salt", F.pmod(F.col("url_hash"), F.lit(salts)).cast("int")
-    )
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    phase1 = (
-        salted.withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= budget_col)
-        .drop("rn1", "salt")
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
+    salt = F.pmod(F.col("url_hash"), F.lit(salts)).cast("int")
+    rn1 = F.row_number().over(Window.partitionBy("host", salt).orderBy(*order))
+    survives = F.coalesce(rn1 <= budget_col, F.lit(False))
+    keep, rn2 = F.col("_keep"), F.col("_rn2")
+    w2 = Window.partitionBy("host", keep, F.when(~keep, salt)).orderBy(*order)
     return (
-        phase1.withColumn("sched_rank", F.row_number().over(w2))
-        .filter(F.col("sched_rank") <= budget_col)
+        frontier.withColumn("_keep", survives)
+        .withColumn("_rn2", F.row_number().over(w2))
+        .withColumn("sched_rank", F.when(keep & (rn2 <= budget_col), rn2))
+        .drop("_keep", "_rn2")
     )
+
+
+def schedule_top_k(frontier: DataFrame, budget_col, salts: int = 16) -> DataFrame:
+    """The scheduled rows of :func:`rank_top_k`."""
+    return rank_top_k(frontier, budget_col, salts).filter(
+        F.col("sched_rank").isNotNull())
 
 
 def politeness_budgets(host_state: DataFrame, refill: float = 1.0,

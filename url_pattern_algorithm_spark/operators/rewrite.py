@@ -4,9 +4,9 @@ Learning is per-host (trees and clusters never span hosts), so it runs as one
 grouped-map pandas UDF per host over the cluster rows — the same
 distribution boundary the reference's local main() would have if sharded
 (Fun.java:519-569). Application is a scalar pandas UDF with the rules table
-broadcast (RewriteTool.java:29-48's side-input pattern), with a cheap
-JVM-side alternation-regex prefilter column so most URLs never enter Python
-(RewriteTool.java:44,70's prefilter, here pushed into codegen).
+broadcast (RewriteTool.java:29-48's side-input pattern), or cogrouped with
+the URLs past a size guard. Every URL enters Python; one whose host has no
+rules passes through without a match attempt.
 """
 
 from __future__ import annotations
@@ -81,21 +81,16 @@ def apply_rules(
 
     Rules are a small dimension (hosts x surviving edges) collected and
     broadcast; the per-host structural match + rewrite runs in one Arrow
-    batch per task. At web scale the collect is scoped to hosts present in
-    the batch (semi-join) and size-guarded — past ``max_side_rows`` the
-    plan switches to the relational path automatically: a host-cogrouped
+    batch per task. The collect is size-guarded: it reads at most
+    ``max_side_rows + 1`` rule rows, and past ``max_side_rows`` the plan
+    switches to the relational path automatically: a host-cogrouped
     ``applyInPandas`` that ships each host's rule list once per group
     task instead of one driver broadcast (byte-identical output; the only
     constraint is the learn-side one a host's rows already obey — one
     host's URLs per iteration batch fit one task).
-
-    NB: the host-scoping collect evaluates ``urls``' lineage once in
-    addition to the rewrite action — persist an expensive ``urls`` input
-    before calling (q_rewrite_compression does).
     """
-    scoped = rules.join(urls.select("host").distinct(), "host", "left_semi")
     rule_rows = sorted(
-        scoped.limit(max_side_rows + 1).collect(),
+        rules.limit(max_side_rows + 1).collect(),
         key=lambda r: (r["host"], r["rule_id"]),
     )
     if len(rule_rows) > max_side_rows:
@@ -164,14 +159,16 @@ def _apply_rules_cogrouped(urls: DataFrame, rules: DataFrame,
 
 def compression_metric(rewritten: DataFrame, url_col: str = "url",
                        rw_col: str = "url_rewritten") -> DataFrame:
-    """|distinct rewritten| / |distinct original| per host
-    (Fun.java:550-568, RewriteTool.java:49-66)."""
+    """|distinct rewritten| / |distinct original| per host from the two URL
+    sets (Fun.java:550-568, kernel.rules.compression_ratio); NULLs are in
+    neither. One task holds a host's sets: one host's URLs in a batch fit
+    one task, as the cogrouped apply_rules path already assumes."""
+    n_urls = F.size(F.collect_set(url_col)).cast("long")
+    n_rewritten = F.size(F.collect_set(rw_col)).cast("long")
     return rewritten.groupBy("host").agg(
-        F.countDistinct(url_col).alias("n_urls"),
-        F.countDistinct(rw_col).alias("n_rewritten"),
-        (F.countDistinct(rw_col) / F.countDistinct(url_col)).alias(
-            "compression_ratio"
-        ),
+        n_urls.alias("n_urls"),
+        n_rewritten.alias("n_rewritten"),
+        (n_rewritten / n_urls).alias("compression_ratio"),
     )
 
 

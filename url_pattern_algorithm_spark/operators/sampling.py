@@ -32,12 +32,6 @@ def host_counts(urls: DataFrame) -> DataFrame:
     return urls.groupBy("host").agg(F.count("*").alias("host_count"))
 
 
-def _gated_counts(counts: DataFrame, est_hosts: int | None):
-    """Size-gated hint for a per-host counts dimension — the shared
-    persist-then-probe pattern (scaling.gated_dim)."""
-    return gated_dim(counts, est_hosts)
-
-
 def cap_per_host(
     urls: DataFrame,
     cap: int = DEFAULT_CAP,
@@ -72,7 +66,7 @@ def cap_per_host(
         cap_col = F.lit(cap)
     if keep_hash is None:
         keep_hash = F.pmod(F.xxhash64(F.col("url"), F.lit(seed)), F.lit(_PRECISION))
-    joined = urls.join(_gated_counts(counts, est_hosts), "host")
+    joined = urls.join(gated_dim(counts, est_hosts), "host")
     p = F.least(F.lit(1.0), cap_col / F.col("host_count"))
     keep = keep_hash < (p * _PRECISION)
     return joined.filter(keep).drop("host_count")
@@ -84,7 +78,7 @@ def gate_min_host_size(urls: DataFrame, min_size: int,
     The qualifying-host dimension is size-gated like cap_per_host's."""
     counts = host_counts(urls).filter(F.col("host_count") >= min_size)
     return urls.join(
-        _gated_counts(counts.select("host"), est_hosts), "host",
+        gated_dim(counts.select("host"), est_hosts), "host",
         "left_semi",
     )
 

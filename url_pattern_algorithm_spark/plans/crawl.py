@@ -20,7 +20,8 @@ built instead of updated and every host starts with fresh tokens. Seeds
 keep their given priority; iteration-N links get 1/(N+1). Iteration N's
 candidates come from the state as of N-1:
 
-    pending ⋈ politeness budgets -> salted priority top-k  = scheduled batch
+    pending ⋈ budgets (left) -> salted priority rank      = ranked pending
+    ranked rows with a sched_rank                          = scheduled batch
     scheduled -> deterministic fetch (url_hash -> doc)     = fetched docs
     docs -> extract links (fused with the URL projection)  = candidates
     state' = (pending - scheduled + new, seen + new, token buckets debited)
@@ -54,9 +55,9 @@ State-table I/O is sized for a 10^10-key frontier:
   ``_FORMAT`` switch in sources/catalog.py) lists no files at all.
 - ``pending``/``host_state`` stay per-iteration snapshots (they are the
   live working set, not an accumulating log), unpartitioned: every read
-  takes the whole snapshot. ``host_state_N`` is built in one pass: the
-  previous state debited by the scheduled batch, full-outer-joined with
-  the new rows' hosts. Each table's layout is declared in
+  takes the whole snapshot. ``host_state_N`` is one aggregate on host over
+  the previous state's refilled tokens, one spent row per scheduled URL
+  and the new rows' hosts. Each table's layout is declared in
   ``sources.catalog.TABLES``, so no call site here names one; a root
   written with an older layout is rewritten into it on resume
   (``Catalog.relayout``).
@@ -93,8 +94,8 @@ from url_pattern_algorithm_spark.operators.cuckoo import (
 from url_pattern_algorithm_spark.operators.frontier import (
     host_crawl_delays,
     politeness_budgets,
+    rank_top_k,
     robots_filter,
-    schedule_top_k,
 )
 from url_pattern_algorithm_spark.scaling import (
     BROADCAST_MAX_ROWS,
@@ -637,7 +638,7 @@ def _commit(
     iteration: int,
     new_rows: DataFrame,
     pending: DataFrame | None,
-    host_state: DataFrame | None,
+    debits: DataFrame | None,
     filters: DataFrame | None,
     bloom_buckets: int,
     cuckoo_nb: int,
@@ -646,10 +647,12 @@ def _commit(
     est_robots: int | None,
 ) -> int:
     """Write iteration ``iteration``'s state from its new frontier rows and
-    the carried-over ``pending`` / ``host_state`` / cuckoo ``filters``
-    (all None at iteration 0); returns the host_state row count.
-    ``host_state`` is the previous state already debited by the scheduled
-    batch: (host, tokens, crawl_delay).
+    the carried-over ``pending`` rows, token ``debits`` and cuckoo
+    ``filters`` (all None at iteration 0); returns the host_state row
+    count. ``debits``: the previous state's refilled (host, tokens,
+    crawl_delay) and one (host, spent=1) row per scheduled URL, summed per
+    host into host_state_N's ``max(tokens) - sum(spent)``; a host only the
+    new rows name gets ``tokens_init`` and its robots crawl delay.
 
     One iteration is written in this order, one write after another:
 
@@ -661,7 +664,8 @@ def _commit(
     snapshots are rewritten whole, the seen delta by a dynamic overwrite
     of its own epoch, and run_crawl drops the ``_metrics`` rows past the
     resume point before it re-runs the iteration. Iteration 0 has no
-    scheduled table, and a fresh run writes its meta before it.
+    scheduled table; a fresh run writes its meta at -1 before it and at 0
+    after it, so a crash inside iteration 0 leaves no resume point.
 
     The new rows feed four writes, so they are persisted; the first write
     builds them. The seen delta comes after the snapshots: a write to
@@ -674,20 +678,19 @@ def _commit(
         rows = pending.select(*FRONTIER_COLS).unionByName(rows)
     cat.write_checkpoint(rows, f"pending_{iteration}", run_id, iteration)
 
-    # one full outer join on host: a host only the new rows name starts at
-    # tokens_init with its robots crawl delay
-    hosts = _with_crawl_delay(new_rows.select("host").distinct(), delays,
-                              est_robots)
+    hosts = _with_crawl_delay(new_rows.select("host"), delays, est_robots)
     tokens = F.lit(float(pol.tokens_init))
-    if host_state is not None:
-        hosts = host_state.join(
-            hosts.withColumnRenamed("crawl_delay", "new_delay"), "host",
-            "full_outer",
-        ).withColumn("crawl_delay", F.coalesce("crawl_delay", "new_delay"))
-        tokens = F.coalesce("tokens", tokens)
+    delay = F.max("crawl_delay")
+    if debits is not None:
+        hosts = debits.unionByName(
+            hosts.withColumnRenamed("crawl_delay", "new_delay"),
+            allowMissingColumns=True)
+        tokens = F.coalesce(F.max("tokens") - F.sum("spent"), tokens)
+        delay = F.coalesce(delay, F.max("new_delay"))
     n_hosts = cat.write_checkpoint(
-        hosts.select("host", tokens.alias("tokens"),
-                     F.lit(iteration).alias("last_iter"), "crawl_delay"),
+        hosts.groupBy("host").agg(tokens.alias("tokens"),
+                                  F.lit(iteration).alias("last_iter"),
+                                  delay.alias("crawl_delay")),
         f"host_state_{iteration}", run_id, iteration)
 
     # iteration 0 builds the filter, later ones insert their delta in one
@@ -758,28 +761,29 @@ def run_iteration(
     warm iterations pay zero extra jobs; ``None`` falls back to a bounded
     probe)."""
     prev = iteration - 1
-    pending = cat.read(f"pending_{prev}").select(*FRONTIER_COLS)
     seen = read_seen(cat, prev).select("url_hash")
 
-    # 1. politeness budgets + salted priority top-k
+    # 1. politeness budgets + salted priority rank of every pending row
     budgets = politeness_budgets(cat.read(f"host_state_{prev}"), pol.refill,
                                  pol.tokens_cap)
     # size-gated: at 10^8 hosts a forced broadcast of every known host's
     # budget would exceed the 8 GB cap; past the gate AQE plans the
     # equi-join (budgets is a pure projection of host_state, so the
-    # threaded host_state count IS the budgets count)
-    frontier = pending.join(
-        broadcast_if_small(budgets, est_hosts), "host", "inner"
+    # threaded host_state count IS the budgets count). A left join: a row
+    # whose host has no state yet (reenqueue_urls) gets no budget
+    frontier = cat.read(f"pending_{prev}").select(*FRONTIER_COLS).join(
+        broadcast_if_small(budgets, est_hosts), "host", "left"
     )
     # worst-case skew assumption: one host could hold half the universe
     # (salting is cheap to oversize — schedule results are
-    # salt-count-invariant, only partitioning moves)
-    scheduled = schedule_top_k(frontier, F.col("budget"),
-                               salts=derive_salts(n_docs // 2))
+    # salt-count-invariant, only partitioning moves). Both halves of the
+    # ranked frame are read, so it is persisted
+    ranked = rank_top_k(frontier, F.col("budget"),
+                        salts=derive_salts(n_docs // 2)).persist()
     # fetch inside the persisted batch: computed after it, the docs join's
     # inferred isnotnull(doc_index) filter would run the UDF again on every
     # read of the batch
-    scheduled = scheduled.withColumn(
+    scheduled = ranked.filter(F.col("sched_rank").isNotNull()).withColumn(
         "doc_index", fetch_doc_index_udf(n_docs)(F.col("url_hash"))
     ).persist()
     n_scheduled = cat.write_checkpoint(
@@ -789,16 +793,7 @@ def run_iteration(
         iteration,
     )
 
-    # 2. debit token buckets; every scheduled host has a budget row
-    spent = scheduled.groupBy("host").agg(F.count("*").alias("n_sched"))
-    debited = budgets.join(spent, "host", "left").select(
-        "host",
-        (F.col("tokens_avail") - F.coalesce("n_sched", F.lit(0)))
-        .alias("tokens"),
-        "crawl_delay",
-    )
-
-    # 3. extract + project the fetched docs, then filter. docs must carry a
+    # 2. extract + project the fetched docs, then filter. docs must carry a
     # deterministic doc_index (run_crawl derives it from doc_id); never
     # monotonically_increasing_id — that's partition-dependent
     pages = scheduled.join(docs, "doc_index", "inner")
@@ -807,17 +802,21 @@ def run_iteration(
     ).withColumn("priority", F.lit(1.0 / (iteration + 1.0)))
     filters = _read_prefilter(cat, prev, bloom_buckets, cuckoo_nb)
 
-    # 4. next state: pending minus the scheduled batch, debited buckets
-    remaining = pending.join(
-        scheduled.select("url_hash"), "url_hash", "left_anti"
-    )
+    # 3. next state: the unscheduled rows and the token debits
+    remaining = ranked.filter(F.col("sched_rank").isNull())
+    debits = budgets.select(
+        "host", F.col("tokens_avail").alias("tokens"), "crawl_delay",
+        F.lit(0).alias("spent"),
+    ).unionByName(scheduled.select("host", F.lit(1).alias("spent")),
+                  allowMissingColumns=True)
     with _new_frontier_rows(
         cand, robots, seen, filters, iteration, bloom_buckets,
         est_robots=est_robots, robots_mode=robots_mode,
     ) as new_rows:
         n_hosts = _commit(cat, run_id, iteration, new_rows, remaining,
-                          debited, filters, bloom_buckets, cuckoo_nb, pol,
+                          debits, filters, bloom_buckets, cuckoo_nb, pol,
                           delays, est_robots)
+    ranked.unpersist()
     scheduled.unpersist()
     return n_scheduled, n_hosts
 
@@ -958,7 +957,8 @@ def run_crawl(
             for name in cat.table_names():
                 if Catalog.table_kind(name)[0] in STATE_KINDS:
                     cat.drop(name)
-            _write_run_meta(cat, bloom_buckets, robots_mode=robots_mode,
+            # at -1 until iteration 0 commits: a crash in it allows no resume
+            _write_run_meta(cat, bloom_buckets, -1, robots_mode=robots_mode,
                             cuckoo_nb=cuckoo_nb)
             # perfbench wraps init_state by name and ends its set-up at the
             # first run_iteration call, so iteration 0 stays a separate call
@@ -966,6 +966,8 @@ def run_crawl(
                 spark, seeds, robots, cat, run_id, pol,
                 bloom_buckets=bloom_buckets, est_robots=est_robots,
                 delays=delays, robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)
+            _write_run_meta(cat, bloom_buckets, 0, robots_mode=robots_mode,
+                            cuckoo_nb=cuckoo_nb)
         else:
             _check_run_meta(cat, bloom_buckets, resume_from,
                             robots_mode=robots_mode, cuckoo_nb=cuckoo_nb)

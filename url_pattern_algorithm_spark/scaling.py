@@ -130,8 +130,7 @@ def gated_dim(dim, est_rows: int | None = None,
     FIRST so the bounded probe materializes the aggregation once and the
     join reads the cache — without the persist the probe re-runs the full
     fact-side lineage a second time. The single shared home for the
-    persist-then-probe pattern (formerly duplicated as
-    operators/sampling._gated_counts and operators/aggregates._gated_dim).
+    persist-then-probe pattern.
 
     Callers that KNOW the dimension cardinality should pass ``est_rows``
     (no probe job, no persist). Probe persists land in the session's
