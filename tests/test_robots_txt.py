@@ -107,6 +107,33 @@ def test_parse_crawl_delay_validation():
     assert parse_robots_txt(body) == ([], 2.5)
 
 
+def test_host_crawl_delays_drops_invalid_delays(spark):
+    # a structured robots table can carry delays the body parser would
+    # drop; politeness_budgets divides the refill by the delay, so they
+    # count as NULL and the host keeps the default
+    from url_pattern_algorithm_spark.operators.frontier import (
+        host_crawl_delays,
+        politeness_budgets,
+    )
+
+    bad = [0.0, -2.0, float("inf"), float("nan")]
+    rows = [(f"bad{i}", d) for i, d in enumerate(bad)]
+    rows += [("ok", 3.0), ("null", None)]
+    rows += [("mixed", d) for d in bad + [3.0, None]]
+    robots = spark.createDataFrame(
+        [(h, "/x", False, d) for h, d in rows],
+        "host string, prefix string, allow boolean, crawl_delay double")
+    delays = host_crawl_delays(robots, default=1.0)
+    want = {"bad0": 1.0, "bad1": 1.0, "bad2": 1.0, "bad3": 1.0,
+            "ok": 3.0, "null": 1.0, "mixed": 3.0}
+    assert {r.host: r.crawl_delay for r in delays.collect()} == want
+    state = delays.select("host", F.lit(2.0).alias("tokens"), "crawl_delay")
+    budgets = {r.host: (r.tokens_avail, r.budget)
+               for r in politeness_budgets(state).collect()}
+    assert budgets == {h: (2.0 + 1.0 / d, int(2.0 + 1.0 / d))
+                       for h, d in want.items()}
+
+
 def test_robots_default_mode_honors_wildcards(spark):
     # body-parsed prefixes carry '*'/'$'; the default (parity) mode must
     # drop their matches too — a literal startswith silently no-ops the

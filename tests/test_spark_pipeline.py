@@ -213,19 +213,22 @@ def test_rewrite_pipeline(spark):
 
 def test_compression_metric_matches_kernel(spark):
     # the per-host metric is the kernel's two-set ratio: duplicate URLs
-    # count once, a host whose URLs all rewrite to one URL reads 1/n, and a
-    # NULL url is in neither set (countDistinct skips it too)
+    # count once, a host whose URLs all rewrite to one URL reads 1/n, a
+    # NULL url is in neither set (countDistinct skips it too), and a host
+    # whose URLs are all NULL reads the kernel's empty-set 1.0
     from url_pattern_algorithm_spark.kernel.rules import (
         compression_ratio,
         rewrite_url,
     )
 
-    host_rules = {"a.com": [("path0:.*/", "path0:#x/")], "b.com": []}
+    host_rules = {"a.com": [("path0:.*/", "path0:#x/")], "b.com": [],
+                  "c.com": []}
     urls = {
         "a.com": ["http://a.com/p1", "http://a.com/p2", "http://a.com/p1",
                   "http://a.com/p3"],
         "b.com": ["http://b.com/q1", "http://b.com/q1", None,
                   "http://b.com/q2"],
+        "c.com": [None],
     }
     assert len({rewrite_url(host_rules["a.com"], u)
                 for u in urls["a.com"]}) == 1
@@ -245,7 +248,8 @@ def test_compression_metric_matches_kernel(spark):
         want[h] = (len(set(kept)),
                    len({rewrite_url(host_rules[h], u) for u in kept}),
                    compression_ratio(host_rules[h], kept))
-    assert got == want == {"a.com": (3, 1, 1 / 3), "b.com": (2, 2, 1.0)}
+    assert got == want == {"a.com": (3, 1, 1 / 3), "b.com": (2, 2, 1.0),
+                           "c.com": (0, 0, 1.0)}
     distinct = {r["host"]: (r["n_urls"], r["n_rewritten"])
                 for r in rewritten.groupBy("host").agg(
                     F.countDistinct("url").alias("n_urls"),
@@ -266,55 +270,82 @@ def test_sampling_ops(spark, urls_df):
     assert 0.70 < frac < 0.80
 
 
-def test_side_input_collect_guards(spark):
-    # web-scale guard: the setup()-style side-input collects refuse to
-    # materialize past max_side_rows on the driver. classify_structural's
-    # is scoped to hosts present in the batch; apply_rules collects at most
-    # max_side_rows + 1 rows of the whole rules table and, past the bound,
-    # cogroups the rules with the URLs instead.
-    from pyspark.sql import functions as F
+def test_host_cogroups_match_kernels_per_row(spark):
+    # apply_rules and classify_structural meet each host's rows with that
+    # host's rules / leaf patterns in one cogroup: every row must read what
+    # the kernel gives it on the driver. NULL hosts pair with NULL-host
+    # rules, a host without rules passes through, duplicate rows stay, and
+    # a nullable long past 2^53 comes back unchanged (pandas would turn it
+    # into a float64).
+    from collections import Counter
 
-    from url_pattern_algorithm_spark.operators.classify import classify_structural
-    from url_pattern_algorithm_spark.operators.rewrite import apply_rules
+    from url_pattern_algorithm_spark.kernel.rules import rewrite_url
+    from url_pattern_algorithm_spark.kernel.tokenize import tokenize_full
+    from url_pattern_algorithm_spark.kernel.tree import structural_match
 
+    # rule_id order is the precedence: rows listed broad rule first
+    rule_rows = [
+        ("h1.com", 1, "path0:.*/", "path0:#y/"),
+        ("h1.com", 0, "path0:.*/path1:view/",
+         "path0:path0/path1:#doc/path2:id/"),
+        (None, 0, "path0:.*/", "path0:#n/"),
+        ("h9.com", 0, "path0:.*/", "path0:#z/"),  # no URLs
+    ]
+    big = 2**53 + 1
+    url_rows = [
+        ("h1.com", "http://h1.com/view?id=7", big),
+        ("h1.com", "http://h1.com/view?id=7", big),
+        ("h1.com", "http://h1.com/other", None),
+        ("h1.com", "not a url", 3),
+        (None, "http://n.com/q", None),
+        ("h2.com", "http://h2.com/view?id=7", -big),
+    ]
+    rules = spark.createDataFrame(
+        rule_rows, "host string, rule_id int, pattern string, rule string")
+    urls = spark.createDataFrame(url_rows, "host string, url string, n long")
+    out = apply_rules(spark, urls, rules)
+    assert out.columns == ["host", "url", "n", "url_rewritten"]
+    assert out.schema["n"].dataType == urls.schema["n"].dataType
+    by_host: dict = {}
+    for h, _, p, r in sorted(rule_rows, key=lambda r: r[1]):
+        by_host.setdefault(h, []).append((p, r))
+    want = [(h, u, n, rewrite_url(by_host[h], u) if h in by_host else u)
+            for h, u, n in url_rows]
+    assert Counter(map(tuple, out.collect())) == Counter(want)
+    assert [w[3] for w in want] == [
+        "http://h1.com/doc/7", "http://h1.com/doc/7", "http://y",
+        "not a url", "http://n", "http://h2.com/view?id=7"]
+
+    # the three-host frame a driver-side size guard once refused
     nodes = spark.createDataFrame(
-        [("h1.com", 1, "path0:h1.com/", True), ("h2.com", 2, "path0:h2.com/", True),
-         ("h3.com", 3, "path0:h3.com/", True)],
+        [("h1.com", 1, "path0:h1.com/", True),
+         ("h2.com", 2, "path0:h2.com/", True),
+         ("h3.com", 3, "path0:h3.com/", True),
+         ("h1.com", 4, "path0:*/path1:a/", True),
+         ("h2.com", 5, "path0:*/path1:*/path2:b/", False),
+         (None, 6, "path0:*/path1:a/", True)],
         "host string, node_id int, pattern string, is_leaf boolean",
     )
-    pages = spark.createDataFrame(
-        [("h1.com", "http://h1.com/a")], "host string, url string"
-    )
-    # host scoping: only h1's single leaf is collected -> bound of 1 passes
-    out = classify_structural(spark, pages, nodes, max_side_rows=1)
-    assert out.count() == 1
-    import pytest as _pytest
+    page_rows = [(f"h{i}.com", f"http://h{i}.com/{p}", i)
+                 for i in (1, 2, 3, 4) for p in ("a", "a/b", "b")]
+    page_rows += [(None, "http://n.com/a", big),
+                  ("h1.com", "http://h1.com/a", None)]
+    pages = spark.createDataFrame(page_rows, "host string, url string, n long")
+    leaves: dict = {}
+    for r in nodes.filter("is_leaf").collect():
+        leaves.setdefault(r["host"], []).append(r["pattern"])
 
-    all_pages = spark.createDataFrame(
-        [(f"h{i}.com", f"http://h{i}.com/a") for i in (1, 2, 3)],
-        "host string, url string",
-    )
-    with _pytest.raises(ValueError, match="side input exceeds"):
-        classify_structural(spark, all_pages, nodes, max_side_rows=1)
+    def kernel(h, u):
+        pairs = tokenize_full(u)
+        hit = h in leaves and pairs is not None and any(
+            structural_match(p, pairs, star="*") for p in leaves[h])
+        return "THEME_PAGE" if hit else "OTHER_PAGE"
 
-    rules = spark.createDataFrame(
-        [("h1.com", 0, "path0:.*/", "path0:#x/"),
-         ("h2.com", 0, "path0:.*/", "path0:#x/")],
-        "host string, rule_id int, pattern string, rule string",
-    )
-    urls1 = pages
-    assert apply_rules(spark, urls1, rules, max_side_rows=1).count() == 1
-    # past the guard apply_rules no longer raises: it switches to the
-    # host-cogrouped relational path — byte-identical to broadcast (r3)
-    via_broadcast = sorted(
-        map(tuple, apply_rules(spark, all_pages, rules).collect())
-    )
-    via_cogroup = sorted(
-        map(tuple, apply_rules(spark, all_pages, rules,
-                               max_side_rows=1).collect())
-    )
-    assert via_cogroup == via_broadcast
-    assert len(via_cogroup) == 3
+    got = classify_structural(spark, pages, nodes)
+    assert got.columns == ["host", "url", "n", "page_type"]
+    want = Counter((h, u, n, kernel(h, u)) for h, u, n in page_rows)
+    assert Counter(map(tuple, got.collect())) == want
+    assert {w[3] for w in want} == {"THEME_PAGE", "OTHER_PAGE"}
 
 
 def test_robots_longest_match_precedence(spark):

@@ -111,8 +111,9 @@ def run_oracle_crawl(
     robots_mode: str = "any_disallow",
 ) -> OracleState:
     # rows are (host, prefix, allow) or (host, prefix, allow, crawl_delay);
-    # per-host delay = MAX across rows (host_crawl_delays' conservative
-    # reading), default 1.0 — mirrors plans/crawl._with_crawl_delay
+    # per-host delay = MAX across the positive finite rows
+    # (host_crawl_delays' conservative reading), default 1.0 — mirrors
+    # plans/crawl._with_crawl_delay
     disallow = [(r[0], r[1]) for r in robots if not r[2]]
     rules_by_host: dict[str, list[tuple[str, bool]]] = {}
     for r in robots:
@@ -125,7 +126,7 @@ def run_oracle_crawl(
             return _robots_allowed(u, h, disallow)
     delay: dict[str, float] = {}
     for r in robots:
-        if len(r) >= 4 and r[3] is not None:
+        if len(r) >= 4 and r[3] is not None and 0 < r[3] < math.inf:
             delay[r[0]] = max(delay.get(r[0], 0.0), float(r[3]))
     st = OracleState()
     # init (iteration 0): dedup seeds on hash, max priority, robots-filtered

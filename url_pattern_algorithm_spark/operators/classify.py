@@ -3,7 +3,7 @@
 Two classifiers:
 - structural: a page is THEME_PAGE iff any leaf pattern of its host's tree
   structurally matches its URL (ThemePageUrlPatternJob.java:275-294) —
-  broadcast the per-host leaf patterns into a pandas UDF;
+  each host's pages cogrouped with its leaf patterns in one Arrow task;
 - regex: match the canonical URL against the host's leaf alternation
   (TreeNode.java:547-560) — pure ``regexp_like``, stays in codegen;
 - support-ratio variant (ContentPageAnalyzer.java:25-58): support = sum of
@@ -12,10 +12,10 @@ Two classifiers:
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType, StructField, StructType
 
 from url_pattern_algorithm_spark.kernel.tokenize import tokenize_full
 from url_pattern_algorithm_spark.kernel.tree import structural_match
@@ -25,44 +25,24 @@ from url_pattern_algorithm_spark.scaling import broadcast_if_small, gated_dim
 def classify_structural(
     spark: SparkSession, pages: DataFrame, nodes: DataFrame,
     out_col: str = "page_type",
-    max_side_rows: int = 1_000_000,
 ) -> DataFrame:
     """pages(host, url, ...) + nodes -> + page_type column.
 
-    The per-host leaf patternStr lists are a small dimension: collected once,
-    broadcast into the UDF closure (the reference's setup()-side-input
-    pattern, GarbagePageUrlPatternJob.java:216-253). Pattern-tree tables are
-    bounded by hosts x leaves, not by corpus size — but at web scale (10^7+
-    hosts) the full dimension would still flood the driver, so the collect is
-    (a) scoped by a semi-join to hosts actually present in this batch and
-    (b) size-guarded: past ``max_side_rows`` the caller must switch to the
-    fully relational path (classify_regex / support_ratio joins).
-
-    NB: the host-scoping collect evaluates ``pages``' lineage once in
-    addition to the classification action — persist an expensive ``pages``
-    input before calling.
+    One host cogroup: a host's pages meet its leaf patterns in one group
+    (the reference's per-host side input, GarbagePageUrlPatternJob.java:
+    216-253), with the bound apply_rules has: one host's pages fit one
+    task. Rows travel as Arrow tables, so every input column comes back
+    unchanged. ``spark`` is unused; callers pass it positionally.
     """
     leaves = nodes.filter("is_leaf").select("host", "pattern")
-    batch_hosts = pages.select("host").distinct()
-    scoped = leaves.join(batch_hosts, "host", "left_semi")
-    leaf_rows = scoped.limit(max_side_rows + 1).collect()
-    if len(leaf_rows) > max_side_rows:
-        raise ValueError(
-            f"classify_structural side input exceeds {max_side_rows} rows "
-            "after host scoping; use classify_regex (broadcast-join) or "
-            "support_ratio (membership join) instead"
-        )
-    by_host: dict[str, list[str]] = {}
-    for r in leaf_rows:
-        by_host.setdefault(r["host"], []).append(r["pattern"])
-    bc = spark.sparkContext.broadcast(by_host)
+    out_schema = StructType(
+        pages.schema.fields + [StructField(out_col, StringType())]
+    )
 
-    @pandas_udf("string")
-    def classify(hosts: pd.Series, urls: pd.Series) -> pd.Series:
-        patterns = bc.value
+    def classify(host_pages: pa.Table, host_leaves: pa.Table) -> pa.Table:
+        pats = host_leaves["pattern"].to_pylist()
 
-        def one(host, url):
-            pats = patterns.get(host)
+        def one(url):
             if not pats:
                 return "OTHER_PAGE"
             pairs = tokenize_full(url)
@@ -73,9 +53,13 @@ def classify_structural(
                     return "THEME_PAGE"
             return "OTHER_PAGE"
 
-        return pd.Series([one(h, u) for h, u in zip(hosts, urls)])
+        out = [one(u) for u in host_pages["url"].to_pylist()]
+        return host_pages.append_column(out_col, pa.array(out, pa.string()))
 
-    return pages.withColumn(out_col, classify(F.col("host"), F.col("url")))
+    return (
+        pages.groupBy("host").cogroup(leaves.groupBy("host"))
+        .applyInArrow(classify, out_schema)
+    )
 
 
 def classify_regex(pages_with_canon: DataFrame, alternations: DataFrame,

@@ -356,11 +356,16 @@ def host_crawl_delays(robots: DataFrame, default: float = 1.0) -> DataFrame | No
     ``crawl_delay`` column (legacy prefix-only tables — callers then use
     ``default`` for every host). Rows with a NULL delay fall back to
     ``default``; multiple rules per host take the MAX (the conservative,
-    slowest-crawl reading of conflicting directives)."""
+    slowest-crawl reading of conflicting directives). A delay that is not
+    positive and finite counts as NULL, as the body parser drops it
+    (kernel/robots.py): politeness_budgets divides the refill by it."""
     if "crawl_delay" not in robots.columns:
         return None
+    d = F.col("crawl_delay")
+    # Spark orders NaN above +inf, so `d < inf` also drops NaN
+    valid = F.when((d > 0) & (d < F.lit(float("inf"))), d)
     return robots.groupBy("host").agg(
-        F.coalesce(F.max("crawl_delay"), F.lit(default)).alias("crawl_delay")
+        F.coalesce(F.max(valid), F.lit(default)).alias("crawl_delay")
     )
 
 

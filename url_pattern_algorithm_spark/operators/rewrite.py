@@ -3,18 +3,19 @@
 Learning is per-host (trees and clusters never span hosts), so it runs as one
 grouped-map pandas UDF per host over the cluster rows — the same
 distribution boundary the reference's local main() would have if sharded
-(Fun.java:519-569). Application is a scalar pandas UDF with the rules table
-broadcast (RewriteTool.java:29-48's side-input pattern), or cogrouped with
-the URLs past a size guard. Every URL enters Python; one whose host has no
-rules passes through without a match attempt.
+(Fun.java:519-569). Application cogroups each host's URLs with that host's
+rules (RewriteTool.java:29-48's per-host side input) in one Arrow task.
+Every URL enters Python; one whose host has no rules passes through without
+a match attempt.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType, StructField, StructType
 
 from url_pattern_algorithm_spark.kernel.rules import (
     Cluster,
@@ -74,86 +75,31 @@ def learn_rules(cluster_rows: DataFrame, min_cluster_size: int = 10) -> DataFram
 def apply_rules(
     spark: SparkSession, urls: DataFrame, rules: DataFrame,
     out_col: str = "url_rewritten",
-    max_side_rows: int = 1_000_000,
 ) -> DataFrame:
     """urls(host, url, ...) -> + rewritten column (first matching rule per
     host, rule_id order; pass-through when none matches).
 
-    Rules are a small dimension (hosts x surviving edges) collected and
-    broadcast; the per-host structural match + rewrite runs in one Arrow
-    batch per task. The collect is size-guarded: it reads at most
-    ``max_side_rows + 1`` rule rows, and past ``max_side_rows`` the plan
-    switches to the relational path automatically: a host-cogrouped
-    ``applyInPandas`` that ships each host's rule list once per group
-    task instead of one driver broadcast (byte-identical output; the only
-    constraint is the learn-side one a host's rows already obey — one
-    host's URLs per iteration batch fit one task).
+    One host cogroup: a host's URLs meet its rule list in one group
+    (RewriteTool.java:29-48's per-host side input). The bound: one host's
+    URLs in a batch fit one task, as learn_rules before it and
+    compression_metric after it already require; a hot host is not split.
+    Rows travel as Arrow tables, so every input column comes back
+    unchanged. ``spark`` is unused; callers pass it positionally.
     """
-    rule_rows = sorted(
-        rules.limit(max_side_rows + 1).collect(),
-        key=lambda r: (r["host"], r["rule_id"]),
-    )
-    if len(rule_rows) > max_side_rows:
-        return _apply_rules_cogrouped(urls, rules, out_col)
-    by_host: dict[str, list[tuple[str, str]]] = {}
-    for r in rule_rows:
-        by_host.setdefault(r["host"], []).append((r["pattern"], r["rule"]))
-    bc = spark.sparkContext.broadcast(by_host)
-
-    @pandas_udf("string")
-    def rewrite(hosts: pd.Series, url_col: pd.Series) -> pd.Series:
-        table = bc.value
-        return pd.Series(
-            [
-                rewrite_url(table.get(h, []), u) if h in table else u
-                for h, u in zip(hosts, url_col)
-            ]
-        )
-
-    return urls.withColumn(out_col, rewrite(F.col("host"), F.col("url")))
-
-
-def _apply_rules_cogrouped(urls: DataFrame, rules: DataFrame,
-                           out_col: str, n_salt: int = 32) -> DataFrame:
-    """Big-dimension rule application (the RewriteTool side-input pattern
-    re-expressed as a shuffle): cogroup URLs and rules on (host, salt) so
-    each host's rule list crosses Arrow once per group task — no driver
-    materialization at any rules-table size. Byte-identical to the
-    broadcast path (same rewrite_url kernel, same rule_id precedence).
-
-    The URL side is salted ``n_salt`` ways (hash of the url) and the
-    host's rules replicated to every salt, so a hot host's URLs split
-    across ``n_salt`` tasks instead of materializing as ONE pandas frame —
-    per-task group size is host_urls/n_salt, bounded regardless of skew.
-    The cost is an ``n_salt``x fan-out of the rules shuffle; rules rows are
-    (host, 2 short strings), so at the 10^6-row scale that triggers this
-    path the replicated shuffle is tens of MB — noise next to the URL-side
-    shuffle this plan already pays."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     out_schema = StructType(
-        list(urls.schema.fields) + [StructField(out_col, StringType())]
-    )
-    urls_s = urls.withColumn(
-        "_salt", F.pmod(F.hash(F.col("url")), F.lit(n_salt))
-    )
-    rules_s = rules.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
+        urls.schema.fields + [StructField(out_col, StringType())]
     )
 
-    def rw(updf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        srt = rpdf.sort_values("rule_id")
-        rs = list(zip(srt["pattern"], srt["rule"]))
-        updf = updf.drop(columns=["_salt"])
-        updf[out_col] = [
-            rewrite_url(rs, u) if rs else u for u in updf["url"]
-        ]
-        return updf
+    def rewrite(host_urls: pa.Table, host_rules: pa.Table) -> pa.Table:
+        srt = host_rules.sort_by("rule_id")
+        rs = list(zip(srt["pattern"].to_pylist(), srt["rule"].to_pylist()))
+        out = [rewrite_url(rs, u) if rs else u
+               for u in host_urls["url"].to_pylist()]
+        return host_urls.append_column(out_col, pa.array(out, pa.string()))
 
     return (
-        urls_s.groupBy("host", "_salt")
-        .cogroup(rules_s.groupBy("host", "_salt"))
-        .applyInPandas(rw, out_schema)
+        urls.groupBy("host").cogroup(rules.groupBy("host"))
+        .applyInArrow(rewrite, out_schema)
     )
 
 
@@ -161,14 +107,16 @@ def compression_metric(rewritten: DataFrame, url_col: str = "url",
                        rw_col: str = "url_rewritten") -> DataFrame:
     """|distinct rewritten| / |distinct original| per host from the two URL
     sets (Fun.java:550-568, kernel.rules.compression_ratio); NULLs are in
-    neither. One task holds a host's sets: one host's URLs in a batch fit
-    one task, as the cogrouped apply_rules path already assumes."""
+    neither, and a host with no non-NULL URL reads 1.0 as the kernel's empty
+    set does. One task holds a host's sets, as apply_rules already
+    assumes."""
     n_urls = F.size(F.collect_set(url_col)).cast("long")
     n_rewritten = F.size(F.collect_set(rw_col)).cast("long")
     return rewritten.groupBy("host").agg(
         n_urls.alias("n_urls"),
         n_rewritten.alias("n_rewritten"),
-        (n_rewritten / n_urls).alias("compression_ratio"),
+        F.when(n_urls > 0, n_rewritten / n_urls).otherwise(F.lit(1.0))
+        .alias("compression_ratio"),
     )
 
 

@@ -1128,8 +1128,8 @@ def q_rewrite_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-oracled (r3): with the closed-form learned rules, rule 0 matches
     every view URL and rule 3 every epsilon doc URL, all rewriting to the
     host's single epsilon target; only non-epsilon doc URLs pass through."""
-    # the cluster corpus feeds BOTH the learn pass (collected inside
-    # apply_rules) and the rewrite scan — persist so it derives once
+    # the cluster corpus feeds BOTH sides of apply_rules' cogroup (the
+    # learned rules and the URLs) — persist so it derives once
     clusters = _persist(_cluster_urls(spark, sf_dir))
     rules = learn_rules(clusters, min_cluster_size=2)
     rewritten = apply_rules(spark, clusters.select("host", "url"), rules)

@@ -108,9 +108,9 @@ def broadcast_if_small(df, est_rows: int | None = None,
     - ``est_rows`` given: a caller-known cardinality (the crawl loop's
       tracked host count, a checkpoint write count) — no extra Spark job.
     - ``est_rows is None``: a bounded probe ``df.limit(max_rows+1).count()``
-      decides (the apply_rules pattern, operators/rewrite.py). NB the probe
-      evaluates ``df``'s lineage once in addition to the join — persist an
-      expensive dimension before calling (the plans do).
+      decides. NB the probe evaluates ``df``'s lineage once in addition
+      to the join — persist an expensive dimension before calling (the
+      plans do).
 
     All call sites are equi-joins, so the un-hinted fallback (AQE picks
     shuffle-hash / sort-merge, converting back to broadcast at runtime if
